@@ -26,7 +26,9 @@ are pytest-checked against the exact operators instead
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +80,14 @@ from peregrine_spark.streaming.windows import (
 # shared inputs
 # ---------------------------------------------------------------------------
 
+# checkout of the reference implementation: its citeseer dataset and the
+# committed truth files the citeseer_* entries are checked against. Expected
+# beside this repository unless PEREGRINE_REFERENCE names another directory;
+# without it the citeseer oracles are left out.
+REFERENCE = Path(
+    os.environ.get("PEREGRINE_REFERENCE")
+    or Path(__file__).resolve().parent.parent / "reference"
+)
 CC_FILTER = "l_quantity <= 3"  # sparser subgraph -> many components
 MOTIF5_FILTER = "l_quantity <= 8"  # ~2.5k edges, max degree ~10: 5-motifs tractable
 FSM3_SUPPORT = 50  # prunes ~1/3 of labelled wedges; triangles all infrequent
@@ -1239,7 +1249,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from peregrine_spark.patterns.canonical import canonical_relabel
         from peregrine_spark.plans.counts import convert_counts
 
-        edges, _ = load_bin_graph(spark, "/root/reference/data/citeseer")
+        edges, _ = load_bin_graph(spark, str(REFERENCE / "data" / "citeseer"))
         edges = edges.localCheckpoint()
         ei = count_motifs(edges, 4, vertex_induced=False, concurrency=6)
         vi = {p: c for p, c in convert_counts(ei)}  # keyed by canonical eq
@@ -1260,7 +1270,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from peregrine_spark.operators.fsm import fsm
         from peregrine_spark.patterns.canonical import canonical_relabel
 
-        edges, vertices = load_bin_graph(spark, "/root/reference/data/citeseer")
+        edges, vertices = load_bin_graph(spark, str(REFERENCE / "data" / "citeseer"))
         edges = edges.localCheckpoint()
         vertices = vertices.localCheckpoint()
         res = fsm(edges, vertices, support=300, max_vertices=4, max_edges=3)
@@ -1788,7 +1798,9 @@ FROM sess GROUP BY user_id, session_id"""
     from peregrine_spark.patterns.canonical import canonical_form, canonical_relabel
     from peregrine_spark.patterns.small_graph import SmallGraph
 
-    truth_dir = "/root/reference/core/integrationtests/truth"
+    truth_dir = REFERENCE / "core" / "integrationtests" / "truth"
+    if not truth_dir.is_dir():
+        return o
 
     def _lit(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"

@@ -17,14 +17,17 @@ Spark-native HOW:
   (core/PatternGenerator.cc:79-475 emits ONE −1 variant per growth;
   core/Peregrine.hh:1038-1199 aggregates it with the vector aggregator):
   each growth adds explicit variants only for labels the pattern already
-  carries, plus a single wildcard (−1) variant whose one matching pass
-  yields per-discovered-label supports for every OTHER label at once —
-  at scale this collapses |labels| match jobs into one;
-* a level's candidates are evaluated as small concurrent union-jobs:
-  each candidate's match plan is orbit-exploded to (pattern, wl, orbit,
-  vertex) rows, a few plans are unioned per query (wide unions measured
-  superlinear in Catalyst), and the chunks + their plan construction run
-  on driver threads sharing the SparkContext;
+  carries, plus a single wildcard (−1) variant whose supports come out
+  per discovered label for every OTHER label at once — at scale this
+  collapses |labels| candidates (and their pruning checks) into one;
+* a level is ONE aggregation job per unlabelled shape (the canonical
+  true-edge skeleton), not one match plan per labelled candidate: the
+  skeleton is compiled once, symmetry-broken, the label of each position
+  is joined on, and a small broadcast label-tuple map — one row per
+  candidate, skeleton automorphism and wildcard label — routes every
+  occurrence to (pattern, wl, orbit, vertex) rows, so the join and
+  intersection work is done once per shape; a level's shapes run
+  concurrently on driver threads;
 * extension + canonical dedup are driver-side pure Python (patterns are
   tiny).
 
@@ -40,10 +43,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
-from peregrine_spark.patterns.canonical import canonical_form
+from peregrine_spark.patterns.canonical import (
+    automorphisms,
+    canonical_form,
+    canonical_order,
+)
 from peregrine_spark.patterns.po import automorphism_sets
 from peregrine_spark.patterns.small_graph import SmallGraph
 from peregrine_spark.plans.compiler import compile_match
+from peregrine_spark.session import literal_table
+
+_INHERITED_PROPERTIES = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+    "spark.scheduler.pool",
+)
 
 
 def _true_orbits(pattern: SmallGraph) -> list[list[int]]:
@@ -128,86 +143,124 @@ def mni_support_by_label(
     }
 
 
-def mni_supports_level(
-    items: list[tuple[int, DataFrame, "SmallGraph", int | None]],
-    vertices: DataFrame | None,
-    chunk: int = 4,
-    max_workers: int = 32,
-) -> dict[tuple[int, int | None], int]:
-    """Evaluate MNI support for a whole FSM level with bounded driver
-    overhead: candidates are grouped into small unions (``chunk`` plans per
-    query) and the chunks run CONCURRENTLY on driver threads sharing the
-    SparkContext.
+def _label_tuple_map(
+    shape: SmallGraph,
+    members: list[tuple[int, SmallGraph, dict[int, int]]],
+    labels: list[int],
+) -> list[tuple]:
+    """Rows ``(l_1..l_k, pid, wl, o_1..o_k)`` routing a labelled occurrence
+    of the unlabelled ``shape`` (positions 1..k) to the candidates it is an
+    occurrence of. ``members`` are ``(pid, candidate, to_shape)`` with
+    ``to_shape`` an isomorphism candidate vertex -> shape position.
 
-    Why both levers: one query per candidate serializes on per-job driver
-    latency; one query per level makes Catalyst analyze a union of dozens
-    of k-way self-join plans, which measured superlinear (24-wide union was
-    2-3x slower than 8-wide chunks). Small unions keep the optimizer fast;
-    threads overlap the remaining analysis + scheduling. Each chunk is ONE
-    aggregation job: every candidate's match table is orbit-exploded to
-    (pid, wl, o, x) rows — wl is the label the wildcard vertex matched
-    (NULL for fully-labelled patterns) — then
-    groupBy(pid, wl, o).count_distinct(x) → groupBy(pid, wl).min.
+    For every automorphism σ of the shape, position p stands for candidate
+    vertex u = to_shape⁻¹(σ(p)): the key is the candidate's labels read in
+    that order and ``o_p`` is u's orbit. A symmetry-broken shape match m and
+    the σ whose key equals its labels give exactly the candidate embeddings
+    u -> m(p), so the union over σ recovers every orbit domain. A −1
+    wildcard is expanded to each label in ``labels`` outside the
+    candidate's own set, with ``wl`` that label (NULL for fully-labelled
+    candidates). σ and σ' with equal keys differ by a labelled automorphism,
+    so they give equal orbit tuples and the set collapses them."""
+    auts = automorphisms(shape)
+    positions = shape.vertices
+    rows: set[tuple] = set()
+    for pid, g, to_shape in members:
+        at_pos = {p: u for u, p in to_shape.items()}
+        orbit_of = {u: i for i, orbit in enumerate(_true_orbits(g)) for u in orbit}
+        own = {l for l in g.labels.values() if l != -1}
+        wls = [l for l in labels if l not in own] if -1 in g.labels.values() else [None]
+        for sigma in auts:
+            us = [at_pos[sigma[p]] for p in positions]
+            orbits = tuple(orbit_of[u] for u in us)
+            for wl in wls:
+                key = tuple(wl if g.labels[u] == -1 else g.labels[u] for u in us)
+                rows.add(key + (pid, wl) + orbits)
+    return list(rows)
+
+
+def mni_supports_level(
+    edges: DataFrame,
+    vertices: DataFrame,
+    candidates: list[SmallGraph],
+    labels: list[int],
+) -> dict[tuple[int, int | None], int]:
+    """MNI supports of one FSM level, one aggregation job per unlabelled
+    shape — the Spark form of the reference's match-once, aggregate-per-
+    label vector aggregator (core/Peregrine.hh:1038-1199).
+
+    ``candidates`` are fully labelled patterns, each with at most one −1
+    wildcard vertex; ``pid`` is a candidate's index. ``labels`` is the
+    discovered label vocabulary a wildcard ranges over (any label outside
+    the candidate's own set). ``edges`` is the canonical (src < dst) table,
+    ``vertices`` is (v, label).
+
+    Candidates are grouped by the canonical form of their true-edge
+    skeleton. Each shape is compiled once, unlabelled and symmetry-broken,
+    the label of every position is joined on, and a broadcast label-tuple
+    map (:func:`_label_tuple_map`, a JVM literal) routes each occurrence to
+    ``(pid, wl, o_1..o_k)``. The rest is the usual MNI aggregation: explode
+    to ``(pid, wl, o, x)``, ``count_distinct(x)`` per ``(pid, wl, o)``,
+    ``min`` per ``(pid, wl)``. The shapes of a level run concurrently on
+    driver threads that inherit the caller's job group.
 
     Returns {(pid, wl): support}; wl is None for fully-labelled patterns.
     A (pid, wl) group missing an orbit (zero matches for it) is dropped —
     its support is 0."""
     from concurrent.futures import ThreadPoolExecutor
 
+    spark = edges.sparkSession
+    sym = symmetrized(edges)
+    expected = {pid: len(_true_orbits(g)) for pid, g in enumerate(candidates)}
+    shapes: dict[tuple, tuple[SmallGraph, list]] = {}
+    for pid, g in enumerate(candidates):
+        skeleton = SmallGraph(edges=g.true_edges())
+        to_shape = canonical_order(skeleton)
+        shape = skeleton.relabel(to_shape)
+        key = tuple(shape.true_edges())
+        shapes.setdefault(key, (shape, []))[1].append((pid, g, to_shape))
     out: dict[tuple[int, int | None], int] = {}
-    expected: dict[int, int] = {}
-    todo: list[tuple[int, "object", "SmallGraph", int | None]] = []
-    for pid, match_fn, pattern, wildcard in items:
-        orbits = _true_orbits(pattern)
-        expected[pid] = len(orbits)
-        if orbits:
-            todo.append((pid, match_fn, pattern, wildcard))
+    if not shapes:
+        return out
 
-    def stack_one(pid, match_fn, pattern, wildcard) -> DataFrame:
-        # plan construction happens HERE, inside the worker thread — each
-        # DataFrame method is a py4j round trip (~measured 19s serialized
-        # for a 115-candidate level), so building plans concurrently
-        # matters as much as running the jobs concurrently
-        matches = match_fn() if callable(match_fn) else match_fn
-        orbits = _true_orbits(pattern)
-        if wildcard is not None:
-            wl_df = vertices.select(
-                F.col("v").alias(f"v{wildcard}"), F.col("label").alias("_wl")
+    def eval_shape(shape: SmallGraph, members: list) -> list:
+        ps = shape.vertices
+        lcols = [f"l{p}" for p in ps]
+        tmap = literal_table(
+            spark,
+            lcols + ["pid", "wl"] + [f"o{p}" for p in ps],
+            _label_tuple_map(shape, members, labels),
+        )
+        m = compile_match(sym, shape, edges_canonical=edges).df
+        for p in ps:
+            m = m.join(
+                vertices.select(F.col("v").alias(f"v{p}"), F.col("label").alias(f"l{p}")),
+                f"v{p}",
             )
-            m = matches.join(wl_df, f"v{wildcard}")
-            wl_col = F.col("_wl")
-        else:
-            m = matches
-            wl_col = F.lit(None).cast("long")
-        entries = [
-            F.struct(F.lit(i).alias("o"), F.col(f"v{p}").alias("x"))
-            for i, orbit in enumerate(orbits)
-            for p in orbit
-        ]
-        return m.select(
-            F.lit(pid).alias("pid"),
-            wl_col.alias("wl"),
-            F.explode(F.array(*entries)).alias("e"),
-        ).select("pid", "wl", F.col("e.o").alias("o"), F.col("e.x").alias("x"))
-
-    def eval_chunk(batch: list) -> list:
-        stacks = [stack_one(*it) for it in batch]
-        u = stacks[0]
-        for s in stacks[1:]:
-            u = u.unionAll(s)
+        entries = [F.struct(F.col(f"o{p}").alias("o"), F.col(f"v{p}").alias("x")) for p in ps]
         return (
-            u.groupBy("pid", "wl", "o")
+            m.join(F.broadcast(tmap), lcols)
+            .select("pid", "wl", F.explode(F.array(*entries)).alias("e"))
+            .select("pid", "wl", F.col("e.o").alias("o"), F.col("e.x").alias("x"))
+            .groupBy("pid", "wl", "o")
             .agg(F.count_distinct("x").alias("n"))
             .groupBy("pid", "wl")
             .agg(F.min("n").alias("s"), F.count(F.lit(1)).alias("k"))
             .collect()
         )
 
-    batches = [todo[lo : lo + chunk] for lo in range(0, len(todo), chunk)]
-    if not batches:
-        return out
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(batches))) as ex:
-        for rows in ex.map(eval_chunk, batches):
+    # worker threads start with empty Spark local properties: copy the
+    # caller's, so its job group (and cancellation) covers these jobs too
+    sc = spark.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _INHERITED_PROPERTIES}
+
+    def run(item) -> list:
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)
+        return eval_shape(*item)
+
+    with ThreadPoolExecutor(max_workers=min(8, len(shapes))) as ex:
+        for rows in ex.map(run, shapes.values()):
             for r in rows:
                 if r["k"] == expected[r["pid"]]:
                     wl = None if r["wl"] is None else int(r["wl"])
@@ -301,7 +354,6 @@ def fsm(
     support: int,
     max_vertices: int = 3,
     discover: bool = True,
-    level_chunk: int = 4,
     max_edges: int | None = None,
     max_seeds: int = 100_000,
     level_metrics: list | None = None,
@@ -315,18 +367,15 @@ def fsm(
     candidates alongside ``max_vertices`` (pass max_vertices=max_edges+1 to
     make edges the only binding cap).
 
-    level_chunk: how many candidate match-plans are unioned per query;
-    chunks run concurrently on driver threads (see
-    :func:`mni_supports_level`).
-
     vertices: (v, label). Seeds are the distinct label pairs of actual
     edges (the DISCOVER_LABELS step, core/Peregrine.hh:552-568) — computed
     with one join+distinct instead of a discovery matching pass.
 
     ``discover=True``: candidate growth uses the partially-labelled (−1)
-    variant + per-label vector aggregation (one match job covers all labels
+    variant + per-label vector aggregation (one candidate covers all labels
     outside the pattern's own set). ``discover=False`` enumerates every
-    observed label explicitly (one job each) — kept as the cross-check path.
+    observed label explicitly (one candidate each) — kept as the
+    cross-check path.
 
     ``level_metrics``: optional caller list; one dict per level is appended
     ({level, candidates, survivors, seconds}) — the bench harness's level
@@ -338,14 +387,13 @@ def fsm(
     )
 
     spark = edges.sparkSession
-    sym = symmetrized(edges)
     lab = vertices.select("v", "label")
-    # the per-candidate match/support jobs are many and individually small;
-    # size their shuffles to the graph, not the session default
+    # the per-shape support jobs are individually small; size their
+    # shuffles to the graph, not the session default
     n_edges = edges.count()
     n_part = auto_shuffle_partitions(spark, 2 * n_edges)
-    # broadcast guard: a level runs up to 32 chunk jobs CONCURRENTLY, and on
-    # a large graph Catalyst happily broadcasts the (say 500k-row / ~15 MB)
+    # broadcast guard: a level runs its shape jobs CONCURRENTLY, and on a
+    # large graph Catalyst happily broadcasts the (say 500k-row / ~15 MB)
     # edge table into every join leg of every concurrent plan -- measured
     # OOM of a 24g single-JVM session at SF=0.1. Cap the auto-broadcast
     # threshold for the mining loop on big graphs (small graphs keep their
@@ -385,18 +433,16 @@ def fsm(
         spark.conf.set(bcast_key, cap_bytes)
     try:
         return _fsm_loop(
-            spark, candidates, sym, lab, edges, support, max_vertices,
-            max_edges, discover, level_chunk, all_labels, n_part,
-            level_metrics, shuffle_partitions,
+            spark, candidates, lab, edges, support, max_vertices, max_edges,
+            discover, all_labels, n_part, level_metrics, shuffle_partitions,
         )
     finally:
         spark.conf.set(bcast_key, bcast_before)
 
 
 def _fsm_loop(
-    spark, candidates, sym, lab, edges, support, max_vertices, max_edges,
-    discover, level_chunk, all_labels, n_part, level_metrics,
-    shuffle_partitions,
+    spark, candidates, lab, edges, support, max_vertices, max_edges,
+    discover, all_labels, n_part, level_metrics, shuffle_partitions,
 ):
     results: list[tuple[SmallGraph, int]] = []
     result_cfs: set = set()
@@ -405,26 +451,11 @@ def _fsm_loop(
     while candidates:
         level_no += 1
         t_level = time.monotonic()
-        # a level is evaluated as small concurrent union-jobs; match-plan
-        # construction is deferred into the worker threads (lazy match_fn)
-        items = []
-        for pid, g in enumerate(candidates):
-            wc = next((v for v, l in sorted(g.labels.items()) if l == -1), None)
-            items.append(
-                (
-                    pid,
-                    (lambda g=g: compile_match(
-                        sym, g, vertices=lab, edges_canonical=edges
-                    ).df),
-                    g,
-                    wc,
-                )
-            )
         with shuffle_partitions(spark, n_part):
-            sup = mni_supports_level(items, lab, chunk=level_chunk)
+            sup = mni_supports_level(edges, lab, candidates, all_labels)
         found: list[tuple[SmallGraph, int]] = []
         for pid, g in enumerate(candidates):
-            wc = items[pid][3]
+            wc = next((v for v, l in sorted(g.labels.items()) if l == -1), None)
             if wc is not None:
                 per = {
                     wl: s

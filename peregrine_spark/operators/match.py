@@ -97,8 +97,9 @@ def _count_all(
     6-vertex plan on a modest graph is a handful of short stages); Spark's
     scheduler interleaves concurrently-submitted jobs across the executors,
     so a motif sweep of 112 patterns runs at cluster utilization instead of
-    plan-at-a-time (same idiom as the FSM level batching,
-    operators/fsm.py:mni_supports_level)."""
+    plan-at-a-time (the FSM level evaluator,
+    operators/fsm.py:mni_supports_level, runs its per-shape jobs on driver
+    threads the same way)."""
     if concurrency <= 1 or len(patterns) <= 1:
         return [_count_one(sym, edges, p, vertices) for p in patterns]
     from concurrent.futures import ThreadPoolExecutor

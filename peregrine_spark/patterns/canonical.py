@@ -106,10 +106,16 @@ def canonical_form(g: "SmallGraph"):
     return min(_encode(g, p) for p in _class_respecting_perms(g))
 
 
+def canonical_order(g: "SmallGraph") -> dict[int, int]:
+    """The canonical vertex order as a bijection vertex -> position (1..n):
+    isomorphic graphs relabelled by their own orders become equal, so the
+    order doubles as an isomorphism onto the canonical representative."""
+    return min(_class_respecting_perms(g), key=lambda p: _encode(g, p))
+
+
 def canonical_relabel(g: "SmallGraph") -> "SmallGraph":
     """The graph relabelled into its canonical vertex order."""
-    best = min(_class_respecting_perms(g), key=lambda p: _encode(g, p))
-    return g.relabel(best)
+    return g.relabel(canonical_order(g))
 
 
 def automorphisms(g: "SmallGraph") -> list[dict[int, int]]:

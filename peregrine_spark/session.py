@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -89,3 +89,21 @@ def release_checkpoint(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:  # pragma: no cover — best-effort release
         pass
+
+
+def literal_table(spark: SparkSession, names: list[str], rows) -> DataFrame:
+    """A small table of integers (``None`` → NULL), every column BIGINT,
+    built in the JVM from one SQL ``VALUES`` literal: a LocalRelation the
+    optimizer can broadcast, with no Python RDD and no Python worker behind
+    it (``createDataFrame(list)`` runs through both)."""
+    cols = ", ".join(f"CAST({n} AS BIGINT) AS {n}" for n in names)
+    alias = f"t({', '.join(names)})"
+    rows = list(rows)
+    if not rows:
+        nulls = ", ".join("NULL" for _ in names)
+        return spark.sql(f"SELECT {cols} FROM VALUES ({nulls}) AS {alias} WHERE false")
+    vals = ", ".join(
+        "(" + ", ".join("NULL" if x is None else str(int(x)) for x in r) + ")"
+        for r in rows
+    )
+    return spark.sql(f"SELECT {cols} FROM VALUES {vals} AS {alias}")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
+from peregrine_spark.session import literal_table
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
@@ -46,9 +47,10 @@ def bfs_hops(
 
     ``sources``: vertex ids (iterable) or a single-column DataFrame. Ids
     not present in the edge table are ignored (an isolated source has no
-    edges to traverse). Returns the standard engine result — per-superstep
-    metrics carry the frontier size, and ``resume=True`` restarts from the
-    last complete checkpoint like every other vertex program.
+    edges to traverse); repeated ids count once. Returns the standard
+    engine result — per-superstep metrics carry the frontier size, and
+    ``resume=True`` restarts from the last complete checkpoint like every
+    other vertex program.
     """
     spark = edges.sparkSession
     n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
@@ -58,7 +60,7 @@ def bfs_hops(
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col(sources.columns[0]).alias("v")).distinct()
     else:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "v long")
+        src_df = literal_table(spark, ["v"], [(s,) for s in sorted(set(sources))])
 
     cache_box: list[DataFrame] = []
 

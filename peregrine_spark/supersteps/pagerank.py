@@ -3,14 +3,23 @@
 Link-graph tier (north rule; not in the reference, whose iteration analogue
 is the per-pattern barrier loop, core/Peregrine.hh:1320-1424).
 
-Semantics: damping d (default 0.85), uniform init 1/n over the degree>0
-vertices, rank_{i+1}(v) = (1-d)/n + d * Σ_{u∈N(v)} rank_i(u)/deg(u).
+Semantics: damping d (default 0.85), teleport distribution tp over the
+degree>0 vertices, rank_0 = tp and
+rank_{i+1}(v) = (1-d) * tp(v) + d * Σ_{u∈N(v)} rank_i(u)/deg(u).
+Classic PageRank has tp = 1/n everywhere; ``pagerank(sources=S)`` is
+personalized PageRank (random walk with restart) with tp = 1/|S| on the
+sources present in the graph and 0 elsewhere, and raises when none is.
 Undirected (symmetrized) edges ⇒ no dangling vertices. Convergence: L1
 delta ≤ tol. Matches a NumPy/pure-Python oracle to ≤1e-6 (tests).
 
 Strategy A — ``pagerank`` (pure Catalyst): contribution = ranks ⋈ edges_sym
 on src (shuffle hash join, AQE skew-split), groupBy(dst).sum (map-side
-partial agg absorbs hub fan-in). Simple, whole-stage-codegen'd.
+partial agg absorbs hub fan-in). Simple, whole-stage-codegen'd. Its
+superstep state is (v, deg, tp, rank): tp rides in the state, so
+personalization adds no join per superstep. Checkpoints written before
+the tp column existed hold (v, deg, rank) and cannot be resumed — the
+first superstep fails resolving ``tp``; restart such a run from scratch.
+(Strategy B below keeps the (v, deg, rank) state and has no ``sources=``.)
 
 Strategy B — ``pagerank_csr`` (the north-star physical plan): adjacency is
 materialized once as *chunked CSR blocks* — (src, chunk, nbrs array<long>)
@@ -33,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
+from peregrine_spark.session import literal_table
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
@@ -65,9 +75,7 @@ def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
         n = deg.count()
         tp = F.lit(1.0 / n)
         return deg.select("v", "deg", tp.alias("tp"), tp.alias("rank"))
-    src_df = deg.sparkSession.createDataFrame(
-        [(int(s),) for s in sorted(set(sources))], "v long"
-    )
+    src_df = literal_table(deg.sparkSession, ["v"], [(s,) for s in sorted(set(sources))])
     marked = deg.join(
         F.broadcast(src_df.select("v", F.lit(True).alias("_s"))), "v", "left"
     )

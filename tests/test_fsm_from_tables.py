@@ -192,17 +192,8 @@ def test_support_at_least_early_terminates(spark):
 
 
 def test_mni_supports_level_matches_single(spark):
-    """The batched level evaluator agrees with the per-pattern functions."""
-    from peregrine_spark.graph.build import symmetrized
-    from peregrine_spark.operators.fsm import (
-        mni_support,
-        mni_support_by_label,
-        mni_supports_level,
-    )
-    from peregrine_spark.patterns.small_graph import SmallGraph
-    from peregrine_spark.plans.compiler import compile_match
-    from pyspark.sql import functions as F
-    from tests.conftest import edges_df
+    """The per-shape level evaluator agrees with the per-pattern functions."""
+    from peregrine_spark.operators.fsm import mni_support_by_label, mni_supports_level
     from tests.oracle import er_graph
 
     pairs = er_graph(30, 0.25, seed=17)
@@ -220,11 +211,7 @@ def test_mni_supports_level_matches_single(spark):
         SmallGraph(edges=[(1, 2), (1, 3)])
         .set_label(1, 0).set_label(2, 1).set_label(3, -1)
     )
-    items = [
-        (0, (lambda: compile_match(sym, lab_wedge, vertices=verts).df), lab_wedge, None),
-        (1, (lambda: compile_match(sym, wild_wedge, vertices=verts).df), wild_wedge, 3),
-    ]
-    got = mni_supports_level(items, verts, chunk=2)
+    got = mni_supports_level(e, verts, [lab_wedge, wild_wedge], [0, 1, 2])
 
     m0 = compile_match(sym, lab_wedge, vertices=verts).df
     exp0 = mni_support(m0, lab_wedge)
@@ -234,6 +221,142 @@ def test_mni_supports_level_matches_single(spark):
     for wl, s in exp1.items():
         assert got[(1, wl)] == s
     assert {k for k in got if k[0] == 1} == {(1, wl) for wl in exp1}
+
+
+def _labelled(edges, labels):
+    g = SmallGraph(edges=edges)
+    for v, lab in labels.items():
+        g.set_label(v, lab)
+    return g
+
+
+def _explicit_supports(e, verts, candidates, labels):
+    """{(pid, wl): support > 0} from one explicit compile_match plan and
+    mni_support per candidate, and per wildcard label."""
+    sym = symmetrized(e)
+    out = {}
+    for pid, g in enumerate(candidates):
+        wc = next((v for v, l in g.labels.items() if l == -1), None)
+        own = {l for l in g.labels.values() if l != -1}
+        for wl in [None] if wc is None else [l for l in labels if l not in own]:
+            h = g if wc is None else g.copy().set_label(wc, wl)
+            m = compile_match(sym, h, vertices=verts, edges_canonical=e).df
+            s = mni_support(m, h)
+            if s:
+                out[(pid, wl)] = s
+    return out
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_mni_supports_level_matches_explicit_plans(spark, seed):
+    """Seeded random graphs, labellings and candidates: the per-shape map
+    join equals per-pattern mni_support over explicit compile_match plans,
+    including equal labels within one orbit, a wildcard whose expansion is
+    another candidate's concrete pattern, and a shape with no match."""
+    import random
+
+    from peregrine_spark.operators.fsm import mni_supports_level
+    from tests.oracle import er_graph
+
+    rng = random.Random(seed)
+    pairs = er_graph(16, 0.3, seed)
+    e = edges_df(spark, pairs)
+    labels = [0, 1, 2]
+    verts = spark.createDataFrame(
+        [(v, rng.choice(labels)) for v in sorted({x for p in pairs for x in p})],
+        "v long, label long",
+    )
+    wedge, tri = [(1, 2), (1, 3)], [(1, 2), (1, 3), (2, 3)]
+    shapes = [
+        [(1, 2)], wedge, tri,
+        [(1, 2), (2, 3), (3, 4)], [(1, 2), (1, 3), (1, 4)],
+    ]
+    k6 = [(a, b) for a in range(1, 7) for b in range(a + 1, 7)]
+    assert compile_match(symmetrized(e), SmallGraph(edges=k6)).df.count() == 0
+    candidates = [
+        _labelled(wedge, {1: 1, 2: 0, 3: 0}),  # A-B-A: equal-label orbit
+        _labelled(tri, {1: 0, 2: 0, 3: 1}),  # A-A-B triangle
+        _labelled(wedge, {1: 0, 2: 1, 3: -1}),  # expands to the next one
+        _labelled(wedge, {1: 0, 2: 1, 3: 2}),
+        _labelled(k6, {v: 0 for v in range(1, 7)}),  # shape without matches
+    ]
+    for _ in range(6):
+        edges = rng.choice(shapes)
+        vs = sorted({v for ed in edges for v in ed})
+        labs = {v: rng.choice(labels) for v in vs}
+        if rng.random() < 0.5:
+            labs[rng.choice(vs)] = -1
+        candidates.append(_labelled(edges, labs))
+
+    got = mni_supports_level(e, verts, candidates, labels)
+    assert got == _explicit_supports(e, verts, candidates, labels)
+    assert (2, 2) in got and got[(2, 2)] == got.get((3, None))
+    assert not [k for k in got if k[0] == 4]
+
+
+def test_mni_supports_level_mixed_shape_level(spark):
+    """A max_edges=3 level mixes path-4, 3-star and triangle candidates;
+    every shape's supports equal the explicit per-pattern ones."""
+    from peregrine_spark.operators.fsm import mni_supports_level
+    from tests.oracle import er_graph
+
+    pairs = er_graph(18, 0.3, 5)
+    e = edges_df(spark, pairs)
+    labels = [0, 1, 2, 3]
+    verts = spark.createDataFrame(
+        [(v, v % 4) for v in sorted({x for p in pairs for x in p})],
+        "v long, label long",
+    )
+    frequent = [_labelled([(1, 2), (1, 3)], {1: 0, 2: 1, 3: 2})]
+    candidates = [
+        g for g in extend_patterns(frequent, partially_labelled=True)
+        if g.num_true_edges <= 3
+    ]
+    degrees = {tuple(sorted(len(g.adj[v]) for v in g.vertices)) for g in candidates}
+    assert degrees == {(1, 1, 2, 2), (1, 1, 1, 3), (2, 2, 2)}
+    got = mni_supports_level(e, verts, candidates, labels)
+    assert got == _explicit_supports(e, verts, candidates, labels)
+    assert len(got) > 3
+
+
+def test_mni_supports_level_one_job_per_shape(spark):
+    """N candidates of one shape run as one aggregation job: the job count
+    under the caller's job group does not grow with N. Adaptive execution
+    is off while counting, because it submits each shuffle stage as a job
+    of its own and skips stages whose input turns out empty."""
+    from peregrine_spark.operators.fsm import mni_supports_level
+    from tests.oracle import er_graph
+
+    pairs = er_graph(20, 0.3, 2)
+    e = edges_df(spark, pairs)
+    verts = spark.createDataFrame(
+        [(v, v % 3) for v in sorted({x for p in pairs for x in p})],
+        "v long, label long",
+    )
+    wedges = [
+        _labelled([(1, 2), (1, 3)], {1: c, 2: a, 3: b})
+        for c in range(3) for a, b in [(0, 1), (1, 2), (0, -1)]
+    ]
+    sc = spark.sparkContext
+
+    def jobs(candidates, group):
+        sc.setJobGroup(group, group)
+        try:
+            mni_supports_level(e, verts, candidates, [0, 1, 2])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        one = jobs(wedges[:1], "fsm-shape-one")
+        many = jobs(wedges, "fsm-shape-many")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert one >= 1
+    assert many == one
 
 
 def test_fsm_seed_cap_refuses_high_cardinality_labels(spark):

@@ -129,12 +129,14 @@ def test_bfs_hops_matches_oracle(spark):
     pairs = er_graph(40, 0.1, seed=41)  # sparse: nontrivial hops + unreached
     verts = {v for p in pairs for v in p}
     e = edges_df(spark, pairs)
-    for sources in ([1], [1, 40]):
+    # repeated source ids count once: one state row per vertex
+    for sources in ([1], [1, 40], [40, 1, 40, 1, 1]):
         res = bfs_hops(e, sources, max_iters=50)
         assert res.converged
-        got = {r["v"]: r["dist"] for r in res.state.collect()}
+        rows = res.state.collect()
+        got = {r["v"]: r["dist"] for r in rows}
         truth = brute_bfs(pairs, sources)
-        assert set(got) == verts
+        assert set(got) == verts and len(rows) == len(verts)
         for v in verts:
             assert got[v] == truth.get(v), (sources, v)  # None == unreached
 
