@@ -136,7 +136,12 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     keeps the lineage growing and Catalyst re-analysis goes superlinear
     after tens of peel rounds. Typical use: ``kcore(edges, kq - 1)`` is an
     EXACT reducer for kq-clique existence/counting — every kq-clique lives
-    in the (kq-1)-core."""
+    in the (kq-1)-core.
+
+    When ``max_iters`` rounds end short of the fixpoint, the result is the
+    partial peel: a superset of the k-core, still containing every
+    subgraph of minimum degree >= k. This is deliberate: ``existence()``
+    runs it with ``max_iters=8`` as a reducer, where a superset is exact."""
     cur = edges.localCheckpoint(eager=True)
     n = cur.count()
     for _ in range(max_iters):

@@ -51,7 +51,7 @@ from peregrine_spark.patterns.canonical import (
 from peregrine_spark.patterns.po import automorphism_sets
 from peregrine_spark.patterns.small_graph import SmallGraph
 from peregrine_spark.plans.compiler import compile_match
-from peregrine_spark.session import literal_table
+from peregrine_spark.session import conf_override, literal_table
 
 _INHERITED_PROPERTIES = (
     "spark.jobGroup.id",
@@ -381,17 +381,14 @@ def fsm(
     ({level, candidates, survivors, seconds}) — the bench harness's level
     breakdown (the reference reports per-size timings, README.md:100-105).
     """
-    from peregrine_spark.supersteps.engine import (
-        auto_shuffle_partitions,
-        shuffle_partitions,
-    )
+    from peregrine_spark.supersteps.engine import auto_shuffle_partitions
 
     spark = edges.sparkSession
     lab = vertices.select("v", "label")
     # the per-shape support jobs are individually small; size their
     # shuffles to the graph, not the session default
     n_edges = edges.count()
-    n_part = auto_shuffle_partitions(spark, 2 * n_edges)
+    conf = {"spark.sql.shuffle.partitions": auto_shuffle_partitions(spark, 2 * n_edges)}
     # broadcast guard: a level runs its shape jobs CONCURRENTLY, and on a
     # large graph Catalyst happily broadcasts the (say 500k-row / ~15 MB)
     # edge table into every join leg of every concurrent plan -- measured
@@ -400,8 +397,9 @@ def fsm(
     # broadcast joins; the label table stays broadcastable either way).
     bcast_key = "spark.sql.autoBroadcastJoinThreshold"
     bcast_before = spark.conf.get(bcast_key)
-    cap_broadcast = n_edges > 100_000
-    cap_bytes = str(4 * 1024 * 1024)
+    cap_bytes = 4 * 1024 * 1024
+    if n_edges > 100_000 and (bcast_before == "" or int(bcast_before) > cap_bytes):
+        conf[bcast_key] = cap_bytes
     seed_df = (
         edges.join(lab.withColumnsRenamed({"v": "src", "label": "la"}), "src")
         .join(lab.withColumnsRenamed({"v": "dst", "label": "lb"}), "dst")
@@ -429,20 +427,16 @@ def fsm(
         seen.setdefault(canonical_form(g), g)
     candidates = list(seen.values())
 
-    if cap_broadcast and (bcast_before == "" or int(bcast_before) > int(cap_bytes)):
-        spark.conf.set(bcast_key, cap_bytes)
-    try:
+    with conf_override(spark, conf):
         return _fsm_loop(
-            spark, candidates, lab, edges, support, max_vertices, max_edges,
-            discover, all_labels, n_part, level_metrics, shuffle_partitions,
+            candidates, lab, edges, support, max_vertices, max_edges,
+            discover, all_labels, level_metrics,
         )
-    finally:
-        spark.conf.set(bcast_key, bcast_before)
 
 
 def _fsm_loop(
-    spark, candidates, lab, edges, support, max_vertices, max_edges,
-    discover, all_labels, n_part, level_metrics, shuffle_partitions,
+    candidates, lab, edges, support, max_vertices, max_edges,
+    discover, all_labels, level_metrics,
 ):
     results: list[tuple[SmallGraph, int]] = []
     result_cfs: set = set()
@@ -451,8 +445,7 @@ def _fsm_loop(
     while candidates:
         level_no += 1
         t_level = time.monotonic()
-        with shuffle_partitions(spark, n_part):
-            sup = mni_supports_level(edges, lab, candidates, all_labels)
+        sup = mni_supports_level(edges, lab, candidates, all_labels)
         found: list[tuple[SmallGraph, int]] = []
         for pid, g in enumerate(candidates):
             wc = next((v for v, l in sorted(g.labels.items()) if l == -1), None)

@@ -101,7 +101,8 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     truncation — a persist would grow lineage superlinearly over tens of
     peel rounds). Edges in no triangle have support 0 and drop in round
     one. Standard use: community cores and as an exact reducer for clique
-    queries (every k-clique lives in the k-truss).
+    queries (every k-clique lives in the k-truss). Raises ``RuntimeError``
+    when ``max_iters`` peel rounds end short of the fixpoint.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
@@ -152,6 +153,11 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
         if m == n:
             break
         n = m
+    else:
+        if n:
+            raise RuntimeError(
+                f"ktruss(k={k}) reached no fixpoint in {max_iters} peel rounds"
+            )
     return cur
 
 

@@ -40,15 +40,6 @@ from pyspark.sql import functions as F
 from peregrine_spark.patterns.small_graph import SmallGraph
 from peregrine_spark.patterns.po import symmetry_conditions
 
-# Pre-filter ordered join legs to the src<dst (or >) half of the
-# symmetrized table. Off by default: measured at SF=0.1 it LOSES ~15%
-# (see BENCH.md round-3 notes) — the predicate re-evaluates the union on
-# every leg scan while the join cost is dominated by the intermediate
-# match-row shuffles the filter cannot shrink (the `<` predicate applied
-# after the join removes the same rows either way).
-HALF_LEGS = False
-
-
 def _vcol(p: int) -> str:
     return f"v{p}"
 
@@ -129,9 +120,9 @@ def compile_match(
     directly — half the scan and half the join build side, with the ``<``
     predicate enforced by the data orientation instead of a filter. This is
     the join-world form of the reference's bounded (ordered) adjacency scan
-    (core/PatternMatching.hh:524-546) that actually pays: the round-3
-    ``HALF_LEGS`` variant filtered the symmetrized UNION per leg and lost
-    ~15% re-scanning both halves; reading the base table never touches the
+    (core/PatternMatching.hh:524-546) that actually pays: filtering the
+    symmetrized UNION per leg instead was measured ~15% slower (round 3)
+    for re-scanning both halves; reading the base table never touches the
     swapped half at all.
     """
     order = matching_order(pattern)
@@ -157,13 +148,9 @@ def compile_match(
                 return edges_canonical.select(
                     F.col("dst").alias(_vcol(lead)), F.col("src").alias(_vcol(pk))
                 )
-        e = edges_sym
-        if HALF_LEGS:
-            if (lead, pk) in lt:
-                e = edges_sym.where(F.col("src") < F.col("dst"))
-            elif (pk, lead) in lt:
-                e = edges_sym.where(F.col("src") > F.col("dst"))
-        return e.select(F.col("src").alias(_vcol(lead)), F.col("dst").alias(_vcol(pk)))
+        return edges_sym.select(
+            F.col("src").alias(_vcol(lead)), F.col("dst").alias(_vcol(pk))
+        )
     labelling = pattern.labelling().value if pattern.labels else "unlabelled"
 
     known_labels = sorted({l for l in pattern.labels.values() if l != -1})
@@ -180,13 +167,13 @@ def compile_match(
             df = df.where(F.col(f"_l{p}") == F.lit(lab))
         return df.drop(f"_l{p}")
 
-    # pairs already guaranteed by a half-table leg filter — their `<`
-    # predicate would be redundant plan noise
+    # pairs already guaranteed by a canonical-table leg's orientation —
+    # their `<` predicate would be redundant plan noise
     enforced: set[tuple[int, int]] = set()
 
     def leg_enforces(lead: int, pk: int) -> None:
-        if edges_canonical is None and not HALF_LEGS:
-            return  # unfiltered legs enforce nothing — predicates must apply
+        if edges_canonical is None:
+            return  # symmetrized legs enforce nothing — predicates must apply
         if (lead, pk) in lt:
             enforced.add((lead, pk))
         elif (pk, lead) in lt:

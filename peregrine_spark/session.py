@@ -8,6 +8,7 @@ shuffle partitions sized to parallelism).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,6 +64,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, conf: dict):
+    """Set session conf keys for the body of a ``with`` block and restore
+    them on exit, on error too. A key the session had not set is unset
+    again rather than pinned to its default."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def release_checkpoint(df) -> None:

@@ -23,13 +23,11 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.session import literal_table
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    vertex_program,
 )
 
 
@@ -52,47 +50,36 @@ def bfs_hops(
     ``resume=True`` restarts from the last complete checkpoint like every
     other vertex program.
     """
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
-
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col(sources.columns[0]).alias("v")).distinct()
     else:
-        src_df = literal_table(spark, ["v"], [(s,) for s in sorted(set(sources))])
-
-    cache_box: list[DataFrame] = []
-
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        frontier = state.where(F.col("dist") == i).select("v")
-        reached = (
-            sym.join(frontier, sym["src"] == frontier["v"])
-            .select(F.col("dst").alias("v"))
-            .distinct()
+        src_df = literal_table(
+            edges.sparkSession, ["v"], [(s,) for s in sorted(set(sources))]
         )
-        newly = reached.join(
-            state.where(F.col("dist").isNotNull()).select("v"), "v", "left_anti"
-        ).persist()
-        n_new = newly.count()
-        cache_box.append(newly)
-        new_state = (
-            state.join(
-                newly.select("v", F.lit(i + 1).cast("long").alias("_nd")), "v", "left"
+
+    with vertex_program(edges, n_partitions) as sym:
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            frontier = state.where(F.col("dist") == i).select("v")
+            reached = (
+                sym.join(frontier, sym["src"] == frontier["v"])
+                .select(F.col("dst").alias("v"))
+                .distinct()
             )
-            .select("v", F.coalesce("dist", "_nd").alias("dist"))
-        )
-        return new_state, float(n_new)
+            newly = reached.join(
+                state.where(F.col("dist").isNotNull()).select("v"), "v", "left_anti"
+            )
+            return state.join(
+                newly.select("v", F.lit(i + 1).cast("long").alias("_nd")), "v", "left"
+            ).select("v", F.coalesce("dist", "_nd").alias("dist"))
 
-    with shuffle_partitions(spark, n_part):
+        def settled(frame: DataFrame, i: int) -> float:
+            return frame.where(F.col("dist") == i + 1).count()
+
         verts = sym.select(F.col("src").alias("v")).distinct()
         state0 = verts.join(src_df.select("v", F.lit(0).alias("_d")), "v", "left").select(
             "v", F.col("_d").cast("long").alias("dist")
         )
-        res = engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    sym.unpersist()
-    return res
+        return (engine or SuperstepEngine(edges.sparkSession)).run(
+            state0, step, settled, max_iters=max_iters, tol=0.0, resume=resume
+        )

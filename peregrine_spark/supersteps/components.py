@@ -19,15 +19,15 @@ Two strategies:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    vertex_program,
 )
 
 
@@ -54,45 +54,30 @@ def connected_components(
         return _cc_contraction(edges, max_iters, engine, resume, n_partitions)
     if strategy != "minprop":
         raise ValueError(f"unknown strategy {strategy!r}")
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
+    with vertex_program(edges, n_partitions) as sym:
 
-    cache_box: list[DataFrame] = []
-
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        nbr_min = (
-            sym.join(state, sym["src"] == state["v"])
-            .groupBy(F.col("dst").alias("v2"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new = (
-            state.join(nbr_min, state["v"] == F.col("v2"), "left")
-            .select(
+        def step(state: DataFrame, i: int) -> DataFrame:
+            nbr_min = (
+                sym.join(state, sym["src"] == state["v"])
+                .groupBy(F.col("dst").alias("v2"))
+                .agg(F.min("comp").alias("nbr_comp"))
+            )
+            return state.join(nbr_min, state["v"] == F.col("v2"), "left").select(
                 "v",
                 F.col("comp").alias("old"),
                 F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "comp"), None
-        new.persist()
-        changed = new.where(F.col("comp") != F.col("old")).count()
-        cache_box.append(new)
-        return new.select("v", "comp"), float(changed)
 
-    with shuffle_partitions(spark, n_part):
+        def changed(frame: DataFrame, i: int) -> float:
+            return frame.where(F.col("comp") != F.col("old")).count()
+
         state0 = sym.select(F.col("src").alias("v")).distinct().select(
             "v", F.col("v").alias("comp")
         )
-        res = engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    sym.unpersist()
-    return res
+        return (engine or SuperstepEngine(edges.sparkSession)).run(
+            state0, step, changed,
+            max_iters=max_iters, tol=0.0, resume=resume, check_every=check_every,
+        )
 
 
 def _large_star(E: DataFrame) -> DataFrame:
@@ -134,46 +119,30 @@ def _cc_contraction(
     the shrinking edge set; convergence = edge set unchanged across a full
     (large, small) round, detected by (count, order-insensitive xor-hash).
     At the fixpoint the edges form stars (v -> component min)."""
-    spark = edges.sparkSession
-    engine = engine or SuperstepEngine(spark)
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    verts = (
-        symmetrized(edges).select(F.col("src").alias("v")).distinct().localCheckpoint()
-    )
-    E0 = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).dropDuplicates()
-
     prev_sig: list = [None]
-    cache_box: list[DataFrame] = []
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        new = _small_star(_large_star(state)).persist()
-        cache_box.append(new)  # released at the next step (after the engine
-        # has localCheckpointed the returned state off this cache)
-        row = new.agg(
+    def step(state: DataFrame, i: int) -> DataFrame:
+        return _small_star(_large_star(state))
+
+    def sig_changed(frame: DataFrame, i: int) -> float:
+        row = frame.agg(
             F.count(F.lit(1)).alias("c"),
             F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
         ).collect()[0]
         sig = (row["c"], row["h"])
         delta = 0.0 if sig == prev_sig[0] else 1.0
         prev_sig[0] = sig
-        return new.select("src", "dst"), delta
+        return delta
 
-    with shuffle_partitions(spark, n_part):
-        res = engine.run(E0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
+    with vertex_program(edges, n_partitions) as sym:
+        E0 = sym.where(F.col("src") > F.col("dst"))  # the canonical edges, high -> low
+        res = (engine or SuperstepEngine(edges.sparkSession)).run(
+            E0, step, sig_changed, max_iters=max_iters, tol=0.0, resume=resume
+        )
+        verts = sym.select(F.col("src").alias("v")).distinct()
     E = res.state  # star edges (v, root)
     state = (
         verts.join(E, verts["v"] == E["src"], "left")
         .select("v", F.coalesce(E["dst"], verts["v"]).alias("comp"))
     )
-    return SuperstepResult(
-        state=state,
-        iterations=res.iterations,
-        converged=res.converged,
-        metrics=res.metrics,
-    )
+    return replace(res, state=state)

@@ -3,8 +3,13 @@
 The reference's analogue is the per-pattern barrier loop
 (core/Peregrine.hh:1320-1424): workers process a round, hit a barrier, the
 driver advances. Our superstep = one Spark job over the vertex-state
-DataFrame. What the reference does NOT have — and the north rule demands —
-is fault tolerance: every superstep persists
+DataFrame, and this module owns the round's whole lifecycle:
+``vertex_program`` sets up and tears down the adjacency a program reads,
+and ``SuperstepEngine.run`` drives the loop, so a vertex program supplies
+only its ``step`` and ``delta`` kernels.
+
+What the reference does NOT have — and the north rule demands — is fault
+tolerance: every superstep persists
 
   * the full vertex state (parquet, atomic via Spark's _SUCCESS marker),
   * per-partition lineage (partition id, row count, order-insensitive
@@ -23,17 +28,20 @@ in the sandbox it is Iceberg-shaped parquet + a JSONL metrics log.
 from __future__ import annotations
 
 import json
+import logging
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from peregrine_spark.session import release_checkpoint
+from peregrine_spark.graph.build import symmetrized
+from peregrine_spark.session import conf_override, release_checkpoint
+
+log = logging.getLogger(__name__)
 
 
 def auto_shuffle_partitions(
@@ -65,18 +73,22 @@ def auto_shuffle_partitions(
 
 
 @contextmanager
-def shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin spark.sql.shuffle.partitions (no-op if n is None)."""
-    key = "spark.sql.shuffle.partitions"
-    if n is None:
-        yield
-        return
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(int(n)))
+def vertex_program(edges: DataFrame, n_partitions: int | None = None):
+    """Set-up and tear-down of a vertex program over the canonical
+    (src<dst) edge table: yields the symmetrized edges, repartitioned on
+    ``src`` into ``n_partitions`` (default :func:`auto_shuffle_partitions`
+    of the symmetrized edge count) and persisted, with
+    ``spark.sql.shuffle.partitions`` pinned to the same count for the body,
+    so the per-superstep joins on the vertex key stay co-partitioned.
+    Unpersists the edges and restores the session conf on exit."""
+    spark = edges.sparkSession
+    n = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
+    sym = symmetrized(edges).repartition(n, "src").persist()
     try:
-        yield
+        with conf_override(spark, {"spark.sql.shuffle.partitions": n}):
+            yield sym
     finally:
-        spark.conf.set(key, before)
+        sym.unpersist()
 
 
 @dataclass
@@ -106,13 +118,21 @@ def _partition_lineage(state: DataFrame, key_cols: list[str]) -> list[dict]:
 
 
 class SuperstepEngine:
-    """Runs ``state_{i+1} = step_fn(state_i, i)`` to convergence.
+    """Runs ``state_{i+1} = step(state_i, i)`` to convergence.
 
-    step_fn returns (new_state, delta) where delta is a float convergence
-    measure (L1 change, changed-row count, ...); delta <= tol stops. A step
-    may return delta=None, meaning "convergence not measured this step" —
-    the loop continues and only the plan-truncation job runs (one Spark job
-    per superstep; vertex programs expose ``check_every`` for this).
+    ``step`` returns the next frame: the state's columns plus any extra
+    ones that only ``delta`` reads (e.g. the previous value as ``old``).
+    Every ``check_every``-th superstep, and the last one, is a check step:
+    the engine persists the frame and evaluates ``delta(frame, i)``, a
+    float convergence measure (L1 change, changed-row count, ...); a delta
+    <= tol stops the run. On every step the frame is projected back to the
+    state's columns and materialized — parquet when the engine has a
+    checkpoint directory, ``localCheckpoint`` otherwise — and the check
+    frame and the previous round's checkpoint are released right after.
+    A step that is not checked is one Spark job (the materialization).
+
+    A run with ``tol >= 0`` that uses up ``max_iters`` without converging
+    logs a warning; fixed-step runs pass ``tol=-1``.
     """
 
     def __init__(
@@ -120,19 +140,10 @@ class SuperstepEngine:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         run_id: str = "run",
-        checkpoint_every: int = 1,
-        adaptive: bool = False,
     ):
         self.spark = spark
         self.dir = Path(checkpoint_dir) if checkpoint_dir else None
         self.run_id = run_id
-        self.checkpoint_every = max(1, checkpoint_every)
-        # AQE re-plans every superstep query and interacts badly with
-        # localCheckpoint partition materialization (measured 10x superstep
-        # slowdown); iterative supersteps use static partitioning — skew is
-        # handled structurally (chunked CSR blocks, degree orientation).
-        # adaptive=True keeps the session setting untouched.
-        self.adaptive = adaptive
 
     # -- checkpoint layout -------------------------------------------------
     def _step_path(self, i: int) -> Path:
@@ -161,10 +172,12 @@ class SuperstepEngine:
     def run(
         self,
         state0: DataFrame,
-        step_fn: Callable[[DataFrame, int], tuple[DataFrame, float]],
+        step: Callable[[DataFrame, int], DataFrame],
+        delta: Callable[[DataFrame, int], float],
         max_iters: int = 20,
         tol: float = 0.0,
         resume: bool = False,
+        check_every: int = 1,
     ) -> SuperstepResult:
         metrics: list[dict] = []
         start_iter = 0
@@ -191,69 +204,66 @@ class SuperstepEngine:
 
         converged = False
         i = start_iter - 1
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_before = self.spark.conf.get(aqe_key)
-        if not self.adaptive:
-            self.spark.conf.set(aqe_key, "false")
-        try:
-            state, i, converged = self._loop(
-                state, step_fn, start_iter, max_iters, tol, metrics
+        cols = state.columns
+        own_ckpt = None  # the engine's own live localCheckpoint, if any
+        check_every = max(1, check_every)
+        # AQE re-plans every superstep query and interacts badly with
+        # localCheckpoint partition materialization (measured 10x superstep
+        # slowdown); iterative supersteps use static partitioning — skew is
+        # handled structurally (chunked CSR blocks, degree orientation).
+        with conf_override(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+            for i in range(start_iter, max_iters):
+                t0 = time.monotonic()
+                frame = step(state, i)
+                checked = (i + 1) % check_every == 0 or i == max_iters - 1
+                d = None
+                if checked:
+                    frame.persist()
+                    d = float(delta(frame, i))
+                state = frame.select(*cols)
+                if self.dir is not None:
+                    path = self._step_path(i)
+                    state.write.mode("overwrite").parquet(str(path))
+                    state = self.spark.read.parquet(str(path))
+                    lineage = _partition_lineage(state, cols)
+                else:
+                    # plan-truncation without durability
+                    state = state.localCheckpoint()
+                    lineage = None
+                # the new state is materialized (parquet or eager checkpoint):
+                # the check frame and the PREVIOUS round's engine-made
+                # checkpoint are dead weight now; without this every superstep
+                # retains one state table in executor storage for the life of
+                # the session
+                if checked:
+                    frame.unpersist()
+                if own_ckpt is not None:
+                    release_checkpoint(own_ckpt)
+                own_ckpt = state if lineage is None else None
+
+                converged = bool(checked and d <= tol)
+                m = {
+                    "run_id": self.run_id,
+                    "iteration": i,
+                    "delta": d,
+                    "seconds": time.monotonic() - t0,
+                    "rows": sum(p["rows"] for p in lineage) if lineage else None,
+                    "partitions": lineage,
+                    "converged": converged,
+                }
+                metrics.append(m)
+                if self.dir:
+                    self._metrics_path().parent.mkdir(parents=True, exist_ok=True)
+                    with open(self._metrics_path(), "a") as f:
+                        f.write(json.dumps(m) + "\n")
+                if converged:
+                    break
+        if not converged and tol >= 0:
+            log.warning(
+                "superstep run %r did not converge in %d supersteps "
+                "(last delta %s, tol %s)",
+                self.run_id, max_iters, metrics[-1]["delta"] if metrics else None, tol,
             )
-        finally:
-            self.spark.conf.set(aqe_key, aqe_before)
         return SuperstepResult(
             state=state, iterations=i + 1, converged=converged, metrics=metrics
         )
-
-    def _loop(self, state, step_fn, start_iter, max_iters, tol, metrics):
-        converged = False
-        i = start_iter - 1
-        own_ckpt = None  # the engine's own live localCheckpoint, if any
-        for i in range(start_iter, max_iters):
-            t0 = time.monotonic()
-            new_state, delta = step_fn(state, i)
-
-            checked = delta is not None
-            persist = self.dir is not None and (
-                i % self.checkpoint_every == 0
-                or (checked and delta <= tol)
-                or i == max_iters - 1
-            )
-            if persist:
-                path = self._step_path(i)
-                new_state.write.mode("overwrite").parquet(str(path))
-                new_state = self.spark.read.parquet(str(path))
-                lineage = _partition_lineage(new_state, new_state.columns)
-            else:
-                # plan-truncation without durability (intra-checkpoint steps)
-                new_state = new_state.localCheckpoint()
-                lineage = None
-            # the new state is materialized (parquet or eager checkpoint) —
-            # the PREVIOUS round's engine-made checkpoint blocks are dead
-            # weight now; without this every superstep retains one state
-            # table in executor storage for the life of the session
-            if own_ckpt is not None:
-                release_checkpoint(own_ckpt)
-            own_ckpt = new_state if lineage is None else None
-
-            m = {
-                "run_id": self.run_id,
-                "iteration": i,
-                "delta": float(delta) if checked else None,
-                "seconds": time.monotonic() - t0,
-                "rows": sum(p["rows"] for p in lineage) if lineage else None,
-                "partitions": lineage,
-                "converged": bool(checked and delta <= tol),
-            }
-            metrics.append(m)
-            if self.dir:
-                self._metrics_path().parent.mkdir(parents=True, exist_ok=True)
-                with open(self._metrics_path(), "a") as f:
-                    f.write(json.dumps(m) + "\n")
-
-            state = new_state
-            if checked and delta <= tol:
-                converged = True
-                break
-
-        return state, i, converged

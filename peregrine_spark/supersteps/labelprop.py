@@ -17,12 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    vertex_program,
 )
 
 
@@ -37,40 +35,29 @@ def label_propagation(
 ) -> SuperstepResult:
     """State: (v, label). ``seeds`` optional (v, label) initial assignment;
     default label_0(v) = v."""
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
+    with vertex_program(edges, n_partitions) as sym:
 
-    cache_box: list[DataFrame] = []
+        def step(state: DataFrame, i: int) -> DataFrame:
+            freq = (
+                sym.join(state, sym["src"] == state["v"])
+                .groupBy(F.col("dst").alias("v2"), "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+            )
+            w = Window.partitionBy("v2").orderBy(F.col("cnt").desc(), F.col("label").asc())
+            best = (
+                freq.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1)
+                .select("v2", F.col("label").alias("new_label"))
+            )
+            return (
+                state.withColumnRenamed("label", "old")
+                .join(best, state["v"] == F.col("v2"), "left")
+                .select("v", F.coalesce("new_label", F.col("old")).alias("label"), "old")
+            )
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        freq = (
-            sym.join(state, sym["src"] == state["v"])
-            .groupBy(F.col("dst").alias("v2"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        w = Window.partitionBy("v2").orderBy(F.col("cnt").desc(), F.col("label").asc())
-        best = (
-            freq.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("v2", F.col("label").alias("new_label"))
-        )
-        new = (
-            state.withColumnRenamed("label", "old")
-            .join(best, state["v"] == F.col("v2"), "left")
-            .select("v", F.coalesce("new_label", F.col("old")).alias("label"), "old")
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "label"), None
-        new.persist()
-        changed = new.where(F.col("label") != F.col("old")).count()
-        cache_box.append(new)
-        return new.select("v", "label"), float(changed)
+        def changed(frame: DataFrame, i: int) -> float:
+            return frame.where(F.col("label") != F.col("old")).count()
 
-    with shuffle_partitions(spark, n_part):
         vs = sym.select(F.col("src").alias("v")).distinct()
         if seeds is None:
             state0 = vs.select("v", F.col("v").alias("label"))
@@ -78,8 +65,7 @@ def label_propagation(
             state0 = vs.join(seeds, "v", "left").select(
                 "v", F.coalesce("label", F.col("v")).alias("label")
             )
-        res = engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    sym.unpersist()
-    return res
+        return (engine or SuperstepEngine(edges.sparkSession)).run(
+            state0, step, changed,
+            max_iters=max_iters, tol=0.0, resume=resume, check_every=check_every,
+        )

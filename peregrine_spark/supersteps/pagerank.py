@@ -12,14 +12,18 @@ sources present in the graph and 0 elsewhere, and raises when none is.
 Undirected (symmetrized) edges ⇒ no dangling vertices. Convergence: L1
 delta ≤ tol. Matches a NumPy/pure-Python oracle to ≤1e-6 (tests).
 
+Both strategies run one shared superstep over the state (v, deg, tp, rank)
+and differ only in the ``inflow`` kernel, Σ_{u∈N(v)} rank(u)/deg(u) per v.
+tp rides in the state, so personalization adds no join per superstep.
+Checkpoints written before the tp column existed hold (v, deg, rank) and
+cannot be resumed — the first superstep fails resolving ``tp``; this
+includes every ``pagerank_csr`` checkpoint written before the strategies
+shared the state. Restart such a run from scratch.
+
 Strategy A — ``pagerank`` (pure Catalyst): contribution = ranks ⋈ edges_sym
-on src (shuffle hash join, AQE skew-split), groupBy(dst).sum (map-side
-partial agg absorbs hub fan-in). Simple, whole-stage-codegen'd. Its
-superstep state is (v, deg, tp, rank): tp rides in the state, so
-personalization adds no join per superstep. Checkpoints written before
-the tp column existed hold (v, deg, rank) and cannot be resumed — the
-first superstep fails resolving ``tp``; restart such a run from scratch.
-(Strategy B below keeps the (v, deg, rank) state and has no ``sources=``.)
+on src (shuffle hash join), groupBy(dst).sum (map-side partial agg absorbs
+hub fan-in). Simple, whole-stage-codegen'd; the only strategy with
+``sources=``.
 
 Strategy B — ``pagerank_csr`` (the north-star physical plan): adjacency is
 materialized once as *chunked CSR blocks* — (src, chunk, nbrs array<long>)
@@ -34,20 +38,18 @@ before the final groupBy(dst).sum shuffle. No per-row Python anywhere.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.session import literal_table
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    vertex_program,
 )
 
 
@@ -57,20 +59,12 @@ def _degrees(edges_sym: DataFrame) -> DataFrame:
     )
 
 
-def _init_state(deg: DataFrame) -> tuple[DataFrame, int]:
-    n = deg.count()
-    return (
-        deg.select("v", "deg", (F.lit(1.0) / F.lit(float(n))).alias("rank")),
-        n,
-    )
-
-
 def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
     """State (v, deg, tp, rank) with an explicit per-vertex teleport
-    distribution. ``sources=None`` is classic PageRank (uniform 1/n —
-    identical values to :func:`_init_state`); otherwise teleport mass is
-    1/|S| over the source vertices present in the graph (personalized
-    PageRank / random walk with restart). rank_0 = tp in both cases."""
+    distribution. ``sources=None`` is classic PageRank (uniform 1/n);
+    otherwise teleport mass is 1/|S| over the source vertices present in
+    the graph (personalized PageRank / random walk with restart).
+    rank_0 = tp in both cases."""
     if sources is None:
         n = deg.count()
         tp = F.lit(1.0 / n)
@@ -84,6 +78,47 @@ def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
         raise ValueError("personalized pagerank: no source vertex is in the graph")
     tp = F.when(F.col("_s"), F.lit(1.0 / k)).otherwise(F.lit(0.0))
     return marked.select("v", "deg", tp.alias("tp"), tp.alias("rank"))
+
+
+def _supersteps(
+    sym: DataFrame,
+    inflow: Callable[[DataFrame], DataFrame],
+    damping: float,
+    max_iters: int,
+    tol: float,
+    engine: SuperstepEngine | None,
+    resume: bool,
+    check_every: int,
+    sources=None,
+) -> SuperstepResult:
+    """The superstep both strategies share; ``inflow(state)`` yields
+    (v, inflow) for every vertex with a neighbour."""
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        return (
+            state.select("v", "deg", "tp", F.col("rank").alias("old"))
+            .join(inflow(state), "v", "left")
+            .select(
+                "v",
+                "deg",
+                "tp",
+                (
+                    F.lit(1 - damping) * F.col("tp")
+                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
+                ).alias("rank"),
+                "old",
+            )
+        )
+
+    def l1_change(frame: DataFrame, i: int) -> float:
+        return frame.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0] or 0.0
+
+    res = (engine or SuperstepEngine(sym.sparkSession)).run(
+        _init_state_tp(_degrees(sym), sources), step, l1_change,
+        max_iters=max_iters, tol=tol, resume=resume, check_every=check_every,
+    )
+    res.state = res.state.select("v", "rank", "deg")
+    return res
 
 
 def pagerank(
@@ -113,54 +148,19 @@ def pagerank(
     n_partitions: partition count for the adjacency AND every in-loop
     shuffle (defaults to :func:`auto_shuffle_partitions` of the symmetrized
     edge count — data-sized, not the session default)."""
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
+    with vertex_program(edges, n_partitions) as sym:
 
-    cache_box: list[DataFrame] = []
-
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        # previous step's cache is safe to drop once the engine has
-        # truncated/checkpointed that state (i.e. by the time we run again)
-        while cache_box:
-            cache_box.pop().unpersist()
-        contrib = (
-            sym.join(state, sym["src"] == state["v"])
-            .select(F.col("dst").alias("v"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new = (
-            state.select("v", "deg", "tp", F.col("rank").alias("old"))
-            .join(contrib, "v", "left")
-            .select(
-                "v",
-                "deg",
-                "tp",
-                (
-                    F.lit(1 - damping) * F.col("tp")
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-                "old",
+        def inflow(state: DataFrame) -> DataFrame:
+            return (
+                sym.join(state, sym["src"] == state["v"])
+                .select(F.col("dst").alias("v"), (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("inflow"))
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "deg", "tp", "rank"), None
-        new.persist()
-        delta = new.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0]
-        cache_box.append(new)
-        out = new.select("v", "deg", "tp", "rank")
-        return out, float(delta or 0.0)
 
-    with shuffle_partitions(spark, n_part):
-        state0 = _init_state_tp(_degrees(sym), sources)
-        res = engine.run(state0, step, max_iters=max_iters, tol=tol, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    res.state = res.state.select("v", "rank", "deg")
-    sym.unpersist()
-    return res
+        return _supersteps(
+            sym, inflow, damping, max_iters, tol, engine, resume, check_every, sources
+        )
 
 
 def build_adjacency_blocks(
@@ -199,20 +199,6 @@ def pagerank_csr(
     n_partitions: int | None = None,
 ) -> SuperstepResult:
     """Strategy B: chunked-CSR Arrow kernel supersteps."""
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges)
-    with shuffle_partitions(spark, n_part):
-        blocks = (
-            build_adjacency_blocks(sym, chunk_size)
-            .repartition(n_part, "src")
-            .persist()
-        )
-        deg = blocks.groupBy(F.col("src").alias("v")).agg(
-            F.sum(F.size("nbrs")).alias("deg")
-        )
-        state0, n = _init_state(deg)
-    engine = engine or SuperstepEngine(spark)
 
     def gather_scatter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -228,43 +214,24 @@ def pagerank_csr(
             partial = np.bincount(inv, weights=shares, minlength=len(uniq))
             yield pd.DataFrame({"v": uniq.astype(np.int64), "inflow": partial})
 
-    cache_box: list[DataFrame] = []
+    with vertex_program(edges, n_partitions) as sym:
+        # repartition() without a count takes the pinned shuffle partitions:
+        # the blocks stay co-partitioned with the state on the vertex key
+        blocks = build_adjacency_blocks(sym, chunk_size).repartition("src").persist()
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        joined = blocks.join(state, blocks["src"] == state["v"]).select(
-            "nbrs", "rank", state["deg"].alias("deg")
-        )
-        contrib = (
-            joined.mapInPandas(gather_scatter, schema="v long, inflow double")
-            .groupBy("v")
-            .agg(F.sum("inflow").alias("inflow"))
-        )
-        new = (
-            state.select("v", "deg", F.col("rank").alias("old"))
-            .join(contrib, "v", "left")
-            .select(
-                "v",
-                "deg",
-                (
-                    F.lit((1 - damping) / n)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-                "old",
+        def inflow(state: DataFrame) -> DataFrame:
+            joined = blocks.join(state, blocks["src"] == state["v"]).select(
+                "nbrs", "rank", state["deg"].alias("deg")
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "deg", "rank"), None
-        new.persist()
-        delta = new.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0]
-        cache_box.append(new)
-        return new.select("v", "deg", "rank"), float(delta or 0.0)
+            return (
+                joined.mapInPandas(gather_scatter, schema="v long, inflow double")
+                .groupBy("v")
+                .agg(F.sum("inflow").alias("inflow"))
+            )
 
-    with shuffle_partitions(spark, n_part):
-        res = engine.run(state0, step, max_iters=max_iters, tol=tol, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    res.state = res.state.select("v", "rank", "deg")
-    blocks.unpersist()
-    return res
+        try:
+            return _supersteps(
+                sym, inflow, damping, max_iters, tol, engine, resume, check_every
+            )
+        finally:
+            blocks.unpersist()

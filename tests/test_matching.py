@@ -65,6 +65,14 @@ def test_ktruss_closed_forms(spark):
     assert got == {(1, 2), (1, 3), (2, 3)}
     with pytest.raises(ValueError):
         ktruss(edges_df(spark, ring), 2)
+    # K4 plus a fan whose support collapses in two peel rounds: round 1
+    # drops (2,5), (1,6), (5,6); round 2 drops (1,5), which lost both of its
+    # triangles; round 3 confirms the fixpoint. Fewer rounds raise.
+    fan = edges_df(spark, K(4) + [(1, 5), (2, 5), (1, 6), (5, 6)])
+    for rounds in (1, 2):
+        with pytest.raises(RuntimeError):
+            ktruss(fan, 4, max_iters=rounds)
+    assert {(r["src"], r["dst"]) for r in ktruss(fan, 4, max_iters=3).collect()} == set(K(4))
 
 
 def test_local_clustering_vs_brute(spark):
@@ -267,31 +275,6 @@ def test_order_closure_chains():
     # already-closed input is unchanged
     full = {(a, b) for a in range(1, 4) for b in range(a + 1, 4)}
     assert _order_closure(sorted(full)) == full
-
-
-def test_half_legs_mode_counts_agree(spark):
-    """HALF_LEGS pre-filters ordered join legs to the src<dst half table
-    (measured slower at SF=0.1, so off by default — BENCH.md round 3);
-    both modes must produce identical unique-match counts."""
-    import peregrine_spark.plans.compiler as C
-
-    pairs = er_graph(25, 0.3, seed=13)
-    e = edges_df(spark, pairs)
-    pats = [
-        PatternGenerator.clique(3),
-        PatternGenerator.clique(4),
-        PatternGenerator.cycle(4),
-        PatternGenerator.star(4),
-    ]
-    want = [brute_count(pairs, p) for p in pats]
-    assert C.HALF_LEGS is False
-    try:
-        for mode in (False, True):
-            C.HALF_LEGS = mode
-            for p, w in zip(pats, want):
-                assert match(e, p).count() == w, (mode, p.to_string())
-    finally:
-        C.HALF_LEGS = False
 
 
 def test_canonical_leg_mode_counts_agree(spark):

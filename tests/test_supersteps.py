@@ -311,16 +311,59 @@ def test_auto_shuffle_partitions_regimes(spark):
     assert big == cores * 3
 
 
-def test_shuffle_partitions_context_restores(spark):
-    from peregrine_spark.supersteps.engine import shuffle_partitions
+def test_operators_leave_session_conf_unchanged(spark):
+    """Every vertex program and fsm pins session conf keys (AQE off,
+    shuffle partitions, the FSM broadcast cap) only while it runs: after it
+    returns, or raises inside its set-up, the session conf is as before."""
+    from peregrine_spark.operators.fsm import fsm
+    from peregrine_spark.session import conf_override
+
+    def conf():
+        return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
 
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    with shuffle_partitions(spark, 7):
+    before = conf()
+    with conf_override(spark, {key: 7, "spark.peregrine.unset": "x"}):
         assert spark.conf.get(key) == "7"
-    assert spark.conf.get(key) == before
-    with shuffle_partitions(spark, None):
-        assert spark.conf.get(key) == before
+    assert conf() == before
+    with pytest.raises(RuntimeError):
+        with conf_override(spark, {key: 7}):
+            raise RuntimeError
+    assert conf() == before
+
+    pairs = er_graph(30, 0.15, seed=61)
+    e = edges_df(spark, pairs)
+    labels = spark.createDataFrame(
+        [(v, v % 2) for v in {x for p in pairs for x in p}], "v long, label long"
+    )
+    runs = {
+        "pagerank": lambda: pagerank(e, max_iters=2, tol=-1.0),
+        "pagerank_csr": lambda: pagerank_csr(e, max_iters=2, tol=-1.0),
+        "cc_minprop": lambda: connected_components(e),
+        "cc_contraction": lambda: connected_components(e, strategy="contraction"),
+        "label_propagation": lambda: label_propagation(e, max_iters=2),
+        "bfs_hops": lambda: bfs_hops(e, [1]),
+        "fsm": lambda: fsm(e, labels, support=2, max_vertices=3),
+    }
+    for name, run in runs.items():
+        run()
+        assert conf() == before, name
+    with pytest.raises(ValueError):
+        pagerank(e, max_iters=2, sources=[10_000])
+    assert conf() == before
+
+
+def test_non_convergence_is_logged(spark, caplog):
+    path = edges_df(spark, [(i, i + 1) for i in range(1, 10)])
+    with caplog.at_level("WARNING", logger="peregrine_spark.supersteps.engine"):
+        res = connected_components(path, max_iters=2)
+    assert not res.converged and res.iterations == 2
+    assert any("did not converge" in r.getMessage() for r in caplog.records)
+    # fixed-step runs (tol < 0) stay quiet
+    caplog.clear()
+    with caplog.at_level("WARNING", logger="peregrine_spark.supersteps.engine"):
+        pagerank(path, max_iters=2, tol=-1.0)
+    assert not caplog.records
 
 
 def test_operators_accept_pinned_partitions(spark):
@@ -381,11 +424,13 @@ def test_resume_from_torn_checkpoint(spark, tmp_path):
 
 
 def test_superstep_engine_releases_checkpoints(spark):
-    """Each superstep localCheckpoints its state for plan truncation; the
-    engine must release the superseded round's blocks — otherwise a long
-    run retains one state table PER SUPERSTEP in executor storage.
+    """Each superstep materializes its state (localCheckpoint) and, with
+    check_every=1, persists a check frame; the engine must release the
+    frame and the superseded round's checkpoint — otherwise a long run
+    retains one state table PER SUPERSTEP in executor storage.
     DataFrame.unpersist() is a silent no-op on checkpoint blocks (they live
-    on the LogicalRDD), hence session.release_checkpoint."""
+    on the LogicalRDD), hence session.release_checkpoint. A run of 3 and a
+    run of 8 supersteps must leave the same number of live RDDs."""
 
     def persistent_ids():
         return {
@@ -393,12 +438,26 @@ def test_superstep_engine_releases_checkpoints(spark):
             for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
         }
 
-    pairs = er_graph(40, 0.15, seed=33)
-    e = edges_df(spark, pairs)
-    before = persistent_ids()
-    res = pagerank(e, max_iters=12, tol=0.0)
-    res.state.count()
-    after = persistent_ids()
-    # at most the FINAL state's checkpoint may remain live (the caller owns
-    # the result); the 11 superseded rounds must all be gone
-    assert len(after - before) <= 1, after - before
+    # a path: no program below converges before its 8th superstep
+    e = edges_df(spark, [(i, i + 1) for i in range(1, 300)])
+    programs = {
+        "pagerank": lambda n: pagerank(e, max_iters=n, tol=-1.0, check_every=1),
+        "pagerank_csr": lambda n: pagerank_csr(e, max_iters=n, tol=-1.0, check_every=1),
+        "cc_minprop": lambda n: connected_components(e, max_iters=n, check_every=1),
+        "cc_contraction": lambda n: connected_components(
+            e, max_iters=n, strategy="contraction"
+        ),
+        "label_propagation": lambda n: label_propagation(e, max_iters=n, check_every=1),
+        "bfs_hops": lambda n: bfs_hops(e, [1], max_iters=n),
+    }
+    for name, run in programs.items():
+        grown = []
+        for n in (3, 8):
+            before = persistent_ids()
+            res = run(n)
+            res.state.count()
+            assert res.iterations == n, name
+            grown.append(len(persistent_ids() - before))
+        # at most the FINAL state's checkpoint may remain live (the caller
+        # owns the result); nothing accumulates per superstep
+        assert grown[0] == grown[1] <= 1, (name, grown)
