@@ -163,7 +163,7 @@ def _e_sql(filt: str | None = None) -> str:
 SYM_SQL = "SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e"
 
 # degree-descending rank relabel + low-degree->high-degree orientation — the
-# oracle mirror of relabel_by_degree + triangles._oriented
+# oracle mirror of relabel_by_degree + fast_counts.oriented
 ORIENT_SQL = """
 deg AS (SELECT src AS v, count(*) AS degree FROM sym GROUP BY 1),
 rnk AS (SELECT v, row_number() OVER (ORDER BY degree DESC, v) AS r FROM deg),

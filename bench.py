@@ -219,7 +219,7 @@ def run_bucketed(cores: int | None, sf: float) -> dict:
     is the wedge self-join consumes the bucket layout with no shuffle."""
     from peregrine_spark.graph.build import build_graph
     from peregrine_spark.graph.storage import load_edges_bucketed, save_edges_bucketed
-    from peregrine_spark.operators.triangles import _oriented, triangle_count
+    from peregrine_spark.plans.fast_counts import clique_rows, oriented
     from peregrine_spark.session import get_spark
     from peregrine_spark.tables import source_repo_table, with_sha256
 
@@ -229,11 +229,11 @@ def run_bucketed(cores: int | None, sf: float) -> dict:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     src = with_sha256(source_repo_table(spark, sf=sf))
-    oriented = _oriented(build_graph(src).edges)
-    n_edges = oriented.count()
+    o = oriented(build_graph(src).edges)
+    n_edges = o.count()
     tmp = str(Path(spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
               / "bench_plain_edges")
-    oriented.write.mode("overwrite").parquet(tmp)
+    o.write.mode("overwrite").parquet(tmp)
     n_buckets = save_edges_bucketed(
         spark.read.parquet(tmp), "bench_edges_bucketed"
     )
@@ -242,12 +242,12 @@ def run_bucketed(cores: int | None, sf: float) -> dict:
         # a FRESH DataFrame per rep: re-collecting one instance lets Spark
         # skip already-computed shuffle map stages (same RDD lineage), which
         # would time only the final reduce
-        triangle_count(loader(), pre_oriented=True).collect()  # warm
+        clique_rows(loader(), 3, pre_oriented=True).groupBy().count().collect()  # warm
         best, tri, exchanges = float("inf"), None, None
         for _ in range(5):
-            q = triangle_count(loader(), pre_oriented=True)
+            q = clique_rows(loader(), 3, pre_oriented=True).groupBy().count()
             t0 = time.monotonic()
-            tri = q.collect()[0]["triangles"]
+            tri = q.collect()[0]["count"]
             best = min(best, time.monotonic() - t0)
             plan = q._jdf.queryExecution().executedPlan().toString()
             exchanges = plan.count("Exchange")

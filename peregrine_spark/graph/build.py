@@ -120,57 +120,64 @@ def symmetrized(edges: DataFrame) -> DataFrame:
     return edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
-    """Edges of the k-core (maximal subgraph with min degree >= k) of a
-    canonical (src<dst) edge table — iterative peel: drop vertices with
-    degree < k, keep edges with both endpoints surviving, repeat to
-    fixpoint.
+def peel(edges: DataFrame, survivors, max_iters: int) -> tuple[DataFrame, bool]:
+    """Iterate ``survivors`` (a function from the current edge table to the
+    rows that survive one round) to its fixpoint; returns (edges,
+    converged). The one peel loop behind :func:`kcore` and
+    :func:`peregrine_spark.operators.triangles.ktruss`.
 
-    The Spark-first analogue of the reference DFS matcher's degree pruning
-    (it never explores a vertex whose degree can't host the pattern): a
-    handful of groupBy+semi-join rounds on a monotonically SHRINKING edge
-    set. At scale each round is one shuffle over the surviving edges only;
-    convergence is detected by edge count (monotone decreasing, so equality
-    means fixpoint). The driver loop eagerly ``localCheckpoint``s each
-    round — the logical plan must be TRUNCATED, not just cached: a persist
-    keeps the lineage growing and Catalyst re-analysis goes superlinear
-    after tens of peel rounds. Typical use: ``kcore(edges, kq - 1)`` is an
-    EXACT reducer for kq-clique existence/counting — every kq-clique lives
-    in the (kq-1)-core.
-
-    When ``max_iters`` rounds end short of the fixpoint, the result is the
-    partial peel: a superset of the k-core, still containing every
-    subgraph of minimum degree >= k. This is deliberate: ``existence()``
-    runs it with ``max_iters=8`` as a reducer, where a superset is exact."""
+    Peels only shrink the edge set, so fixpoint is detected by count
+    equality. Every round eagerly ``localCheckpoint``s the survivors: the
+    logical plan must be TRUNCATED, not just cached (a persist keeps the
+    lineage growing and Catalyst re-analysis goes superlinear after tens of
+    rounds). Only the latest checkpoint stays alive: each round releases
+    the previous one (``release_checkpoint``, not ``unpersist``: checkpoint
+    blocks live on the LogicalRDD, which ``DataFrame.unpersist`` misses).
+    ``converged`` is False when ``max_iters`` rounds end short of the
+    fixpoint with edges left."""
     cur = edges.localCheckpoint(eager=True)
     n = cur.count()
     for _ in range(max_iters):
         if n == 0:
             break
-        deg = (
-            symmetrized(cur)
-            .groupBy(F.col("src").alias("v"))
-            .agg(F.count(F.lit(1)).alias("d"))
-            .where(F.col("d") >= k)
-            .select("v")
-        )
-        nxt = (
-            cur.join(deg.select(F.col("v").alias("src")), "src", "left_semi")
-            .join(deg.select(F.col("v").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
+        nxt = survivors(cur).localCheckpoint(eager=True)
         m = nxt.count()
-        # only the LATEST checkpoint stays alive: without this, every peel
-        # round's blocks accumulate in executor storage for the whole call
-        # (release_checkpoint, not unpersist: checkpoint blocks live on the
-        # LogicalRDD, which DataFrame.unpersist silently misses)
         release_checkpoint(cur)
         cur = nxt
         if m == n:
-            break
+            return cur, True
         n = m
-    return cur
+    return cur, n == 0
+
+
+def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
+    """Edges of the k-core (maximal subgraph with min degree >= k) of a
+    canonical (src<dst) edge table — iterative :func:`peel`: drop vertices
+    with degree < k, keep edges with both endpoints surviving, repeat to
+    fixpoint.
+
+    The Spark-first analogue of the reference DFS matcher's degree pruning
+    (it never explores a vertex whose degree can't host the pattern): a
+    handful of groupBy+semi-join rounds on a monotonically SHRINKING edge
+    set, each one shuffle over the surviving edges only. Typical use:
+    ``kcore(edges, kq - 1)`` is an EXACT reducer for kq-clique
+    existence/counting — every kq-clique lives in the (kq-1)-core.
+
+    When ``max_iters`` rounds end short of the fixpoint, the result is the
+    partial peel: a superset of the k-core, still containing every
+    subgraph of minimum degree >= k. This is deliberate: ``existence()``
+    runs it with ``max_iters=8`` as a reducer, where a superset is exact."""
+    from peregrine_spark.graph.from_tables import degrees
+
+    def survivors(cur: DataFrame) -> DataFrame:
+        keep = degrees(cur).where(F.col("degree") >= k)
+        return (
+            cur.join(keep.select(F.col("v").alias("src")), "src", "left_semi")
+            .join(keep.select(F.col("v").alias("dst")), "dst", "left_semi")
+            .select("src", "dst")
+        )
+
+    return peel(edges, survivors, max_iters)[0]
 
 
 def contiguous_rank(

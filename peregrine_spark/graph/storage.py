@@ -14,6 +14,12 @@ lakehouse this role is played by the table format's bucket/cluster spec
 (e.g. an Iceberg ``bucket(src, N)`` partition transform) — Spark's
 ``bucketBy`` is the sandbox stand-in with identical join semantics.
 
+The triangle path stores the ORIENTED table (``fast_counts.oriented``:
+the greatest/least swap is opaque to Catalyst, so only a stored oriented
+layout keeps the bucketing) and lists triangles with
+``fast_counts.clique_rows(edges, 3, pre_oriented=True)``: the wedge
+self-join then reads co-located buckets (``bench.py --bucketed``).
+
 Bucket-count choice mirrors :func:`auto_shuffle_partitions`: one bucket
 per ~2M edges, floor 8 — big enough that a bucket fits in executor
 memory, small enough that tiny graphs don't scatter into empty files.

@@ -23,11 +23,11 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
+from peregrine_spark.graph.build import kcore, symmetrized
 from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
 from peregrine_spark.plans.compiler import MatchPlan, compile_match
 from peregrine_spark.plans.counts import convert_counts
-from peregrine_spark.plans.fast_counts import fast_count
+from peregrine_spark.plans.fast_counts import _shape, clique_rows, fast_count
 from peregrine_spark.session import release_checkpoint
 
 
@@ -252,32 +252,25 @@ def existence(
     91-join plan; the core peel instead empties the graph in a few
     shuffles over a shrinking edge set, and only a surviving core (tiny by
     construction) pays for the oriented clique join chain."""
-    import itertools as _it
-
-    if vertices is None and not pattern.labels and not pattern.anti_edge_list():
-        k = pattern.num_vertices
-        pairs = set(_it.combinations(sorted(pattern.vertices), 2))
-        if k >= 3 and {tuple(e) for e in pattern.true_edges()} == pairs:
-            from peregrine_spark.graph.build import kcore
-            from peregrine_spark.plans.fast_counts import clique_rows
-
-            # a PARTIAL peel is still an exact reducer (every round only
-            # removes vertices that cannot be in a k-clique), so cap the
-            # rounds. Skip the peel entirely for k == 3: the 2-core rarely
-            # prunes (most graphs ARE nearly their 2-core) and each peel
-            # round costs a checkpointed shuffle.
-            core = kcore(edges, k - 1, max_iters=8) if k > 3 else edges
-            try:
-                if core is not edges and not core.limit(1).take(1):
-                    return False
-                # probe, don't count: limit(1) over the oriented join chain
-                # stops at the first surviving clique instead of enumerating
-                # them all (on graphs where the clique DOES exist, a full
-                # count over the core is asymptotically the whole query)
-                return len(clique_rows(core, k).limit(1).take(1)) > 0
-            finally:
-                if core is not edges:
-                    release_checkpoint(core)
+    k = pattern.num_vertices
+    if vertices is None and k >= 3 and _shape(pattern) == "clique":
+        # a PARTIAL peel is still an exact reducer (every round only
+        # removes vertices that cannot be in a k-clique), so cap the
+        # rounds. Skip the peel entirely for k == 3: the 2-core rarely
+        # prunes (most graphs ARE nearly their 2-core) and each peel
+        # round costs a checkpointed shuffle.
+        core = kcore(edges, k - 1, max_iters=8) if k > 3 else edges
+        try:
+            if core is not edges and not core.limit(1).take(1):
+                return False
+            # probe, don't count: limit(1) over the oriented join chain
+            # stops at the first surviving clique instead of enumerating
+            # them all (on graphs where the clique DOES exist, a full
+            # count over the core is asymptotically the whole query)
+            return len(clique_rows(core, k).limit(1).take(1)) > 0
+        finally:
+            if core is not edges:
+                release_checkpoint(core)
     df = match(edges, pattern, vertices)
     return len(df.limit(1).take(1)) > 0
 

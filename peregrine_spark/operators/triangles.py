@@ -1,23 +1,17 @@
-"""Triangle counting — the engine's flagship single query.
+"""Triangle operators — count, per-vertex participation, k-truss and
+local clustering — all read one listing.
 
 Reference semantics: ``count(clique(3))`` — each triangle counted exactly
 once via the symmetry-breaking total order v1 < v2 < v3 (the clique's
 automorphism group is the full symmetric group, so the partial order is a
 chain — core/Graph.hh conditions for cliques).
 
-Spark-first HOW (not the reference's DFS): the classic degree-oriented
-two-join plan. Orient every edge from its lower-degree endpoint to its
-higher-degree endpoint; the oriented out-degree is then O(sqrt(|E|)), which
-bounds the size of the wedge join and kills hub skew *structurally* (the
-same skew the reference handles with MPI work stealing, RangeQueue.hh).
-Because ingest renumbers vertices by DESCENDING degree, "higher degree" ==
-"smaller id", so orientation is simply (src > dst) on renumbered ids and the
-count is a pure two-join + count over the canonical edge table:
-
-    tri = |{(u,v,w) : u→v, u→w, v→w in E_oriented, v > w}|
-
-Every predicate is an equi-join key or a range filter — fully Catalyst-
-optimizable, whole-stage codegen, AQE-skew-splittable.
+Spark-first HOW (not the reference's DFS): every operator here is a thin
+aggregate over :func:`peregrine_spark.plans.fast_counts.clique_rows` with
+k = 3, the degree-oriented two-join plan (wedge join plus one left_semi
+closing edge, sqrt-bounded fan-out on degree-descending ids). Its rows
+satisfy v1 > v2 > v3, so each triangle's canonical edges are (v2, v1),
+(v3, v1) and (v3, v2) with no least/greatest swap.
 """
 
 from __future__ import annotations
@@ -25,65 +19,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _oriented(edges: DataFrame) -> DataFrame:
-    """Orient canonical (src<dst) edges from the lower-degree endpoint to the
-    higher-degree endpoint. Ids ascend as degree descends, so the higher id
-    is the lower-degree endpoint: orient from greatest(id) to least(id)."""
-    return edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    )
+from peregrine_spark.graph.build import peel
+from peregrine_spark.graph.from_tables import degrees
+from peregrine_spark.plans.fast_counts import clique_rows
 
 
-def triangle_count(edges: DataFrame, pre_oriented: bool = False) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Total triangle count. ``edges`` is the canonical (src<dst) table with
     degree-descending ids (any consistent ids work; degree-descending ids
-    make the oriented fan-out sqrt-bounded). Returns 1 row: (triangles).
-
-    ``pre_oriented=True`` asserts the input is ALREADY degree-oriented
-    (higher id → lower id) and skips the greatest/least swap. This matters
-    for bucketed storage: the swap is opaque to Catalyst, so a table
-    bucketed by ``src`` only feeds the wedge self-join shuffle-free when
-    the stored layout is the oriented one (see graph/storage.py and
-    ``bench.py --bucketed``)."""
-    orient = (lambda df: df) if pre_oriented else _oriented
-    e = orient(edges).alias("e1")
-    e2 = orient(edges).alias("e2")
-    e3 = orient(edges).alias("e3")
-    wedges = e.join(
-        e2,
-        (F.col("e1.src") == F.col("e2.src")) & (F.col("e1.dst") > F.col("e2.dst")),
-    )
-    tris = wedges.join(
-        e3,
-        (F.col("e1.dst") == F.col("e3.src")) & (F.col("e2.dst") == F.col("e3.dst")),
-        "left_semi",
-    )
-    return tris.agg(F.count(F.lit(1)).alias("triangles"))
+    make the oriented fan-out sqrt-bounded). Returns 1 row: (triangles)."""
+    return clique_rows(edges, 3).agg(F.count(F.lit(1)).alias("triangles"))
 
 
 def triangle_count_per_vertex(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation: (v, triangles). Each triangle
     contributes 1 to each of its three vertices."""
-    e = _oriented(edges).alias("e1")
-    e2 = _oriented(edges).alias("e2")
-    e3 = _oriented(edges).alias("e3")
-    tri = (
-        e.join(
-            e2,
-            (F.col("e1.src") == F.col("e2.src")) & (F.col("e1.dst") > F.col("e2.dst")),
-        )
-        .join(
-            e3,
-            (F.col("e1.dst") == F.col("e3.src")) & (F.col("e2.dst") == F.col("e3.dst")),
-            "left_semi",
-        )
-        .select(
-            F.col("e1.src").alias("a"), F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c")
-        )
+    return (
+        clique_rows(edges, 3)
+        .selectExpr("stack(3, v1, v2, v3) as (v)")
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    stacked = tri.selectExpr("stack(3, a, b, c) as (v)")
-    return stacked.groupBy("v").agg(F.count(F.lit(1)).alias("triangles"))
 
 
 def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
@@ -91,74 +47,34 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     closes at least k−2 triangles — of a canonical (src<dst) edge table.
 
     The triangle analogue of :func:`peregrine_spark.graph.build.kcore`'s
-    degree peel, and the same Spark shape: per round, list triangles with
-    the degree-oriented two-join (sqrt-bounded fan-out, hub-skew-safe on
-    degree-descending ids), stack each triangle's three canonical edges,
-    count support per edge with one partial-agg groupBy, and left_semi the
-    surviving edges. The edge set shrinks monotonically, so fixpoint is
-    detected by count equality; every round eagerly ``localCheckpoint``s
-    the survivors and releases the previous round's blocks (plan
-    truncation — a persist would grow lineage superlinearly over tens of
-    peel rounds). Edges in no triangle have support 0 and drop in round
-    one. Standard use: community cores and as an exact reducer for clique
-    queries (every k-clique lives in the k-truss). Raises ``RuntimeError``
-    when ``max_iters`` peel rounds end short of the fixpoint.
+    degree peel, run by the same :func:`~peregrine_spark.graph.build.peel`
+    loop: per round, list triangles, stack each triangle's three canonical
+    edges, count support per edge with one partial-agg groupBy, and
+    left_semi the surviving edges. Edges in no triangle have support 0 and
+    drop in round one. Standard use: community cores and as an exact
+    reducer for clique queries (every k-clique lives in the k-truss).
+    Raises ``RuntimeError`` when ``max_iters`` peel rounds end short of the
+    fixpoint.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    from peregrine_spark.session import release_checkpoint
 
-    cur = edges.localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_iters):
-        if n == 0:
-            break
-        e1 = _oriented(cur).alias("e1")
-        e2 = _oriented(cur).alias("e2")
-        e3 = _oriented(cur).alias("e3")
-        tri = (
-            e1.join(
-                e2,
-                (F.col("e1.src") == F.col("e2.src"))
-                & (F.col("e1.dst") > F.col("e2.dst")),
-            )
-            .join(
-                e3,
-                (F.col("e1.dst") == F.col("e3.src"))
-                & (F.col("e2.dst") == F.col("e3.dst")),
-                "left_semi",
-            )
-            .select(
-                F.col("e1.src").alias("x"),
-                F.col("e1.dst").alias("y"),
-                F.col("e2.dst").alias("z"),
-            )
-        )
+    def survivors(cur: DataFrame) -> DataFrame:
         support = (
-            tri.selectExpr(
-                "stack(3, least(x,y), greatest(x,y),"
-                " least(y,z), greatest(y,z),"
-                " least(x,z), greatest(x,z)) as (src, dst)"
-            )
+            clique_rows(cur, 3)
+            .selectExpr("stack(3, v2, v1, v3, v1, v3, v2) as (src, dst)")
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("s"))
             .where(F.col("s") >= k - 2)
         )
-        nxt = cur.join(
-            support.select("src", "dst"), ["src", "dst"], "left_semi"
-        ).localCheckpoint(eager=True)
-        m = nxt.count()
-        release_checkpoint(cur)
-        cur = nxt
-        if m == n:
-            break
-        n = m
-    else:
-        if n:
-            raise RuntimeError(
-                f"ktruss(k={k}) reached no fixpoint in {max_iters} peel rounds"
-            )
-    return cur
+        return cur.join(support.select("src", "dst"), ["src", "dst"], "left_semi")
+
+    out, converged = peel(edges, survivors, max_iters)
+    if not converged:
+        raise RuntimeError(
+            f"ktruss(k={k}) reached no fixpoint in {max_iters} peel rounds"
+        )
+    return out
 
 
 def local_clustering(
@@ -177,10 +93,9 @@ def local_clustering(
     groupBys (triangles per vertex, degree per vertex) and one hash join
     on the vertex key, all JVM-side column expressions. With ``id_map``
     (columns v, old) the result is reported on original vertex ids via one
-    more key join.
+    more key join; a vertex missing from ``id_map`` fails the query instead
+    of dropping its row.
     """
-    from peregrine_spark.graph.from_tables import degrees
-
     tri = triangle_count_per_vertex(edges)
     deg = degrees(edges)
     out = deg.join(tri, "v", "left").select(
@@ -189,9 +104,9 @@ def local_clustering(
         F.col("degree").cast("long").alias("degree"),
     )
     if id_map is not None:
-        out = (
-            out.join(id_map.select("v", "old"), "v")
-            .select(F.col("old").alias("v"), "triangles", "degree")
+        missing = F.concat(F.lit("local_clustering: id_map has no vertex "), F.col("v"))
+        out = out.join(id_map.select("v", "old"), "v", "left").select(
+            F.coalesce("old", F.raise_error(missing)).alias("v"), "triangles", "degree"
         )
     return out.select(
         "v",

@@ -29,8 +29,16 @@ from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.graph.from_tables import degrees
-from peregrine_spark.operators.triangles import _oriented, triangle_count
 from peregrine_spark.patterns.small_graph import SmallGraph
+
+
+def oriented(edges: DataFrame) -> DataFrame:
+    """Orient canonical (src<dst) edges from the lower-degree endpoint to the
+    higher-degree endpoint. Ids ascend as degree descends, so the higher id
+    is the lower-degree endpoint: orient from greatest(id) to least(id)."""
+    return edges.select(
+        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+    )
 
 
 def _comb(col: Column, k: int) -> Column:
@@ -77,17 +85,28 @@ def _shape(p: SmallGraph) -> str | None:
     return None
 
 
-def clique_rows(edges: DataFrame, k: int) -> DataFrame:
+def clique_rows(edges: DataFrame, k: int, pre_oriented: bool = False) -> DataFrame:
     """Unique k-clique rows (v1 > v2 > ... > vk, id order == ascending
-    degree order) via the degree-oriented join chain. ``edges`` must be
-    canonical (src<dst) with degree-descending ids (higher degree == lower
-    id) — the ingest invariant. Aggregate for counting (:func:`clique_count`)
-    or ``limit(1)`` for an early-terminating existence probe — a LocalLimit
+    degree order) via the degree-oriented join chain — the engine's one
+    clique listing (triangles, per-vertex triangles and the k-truss support
+    step all read it). ``edges`` must be canonical (src<dst) with
+    degree-descending ids (higher degree == lower id) — the ingest
+    invariant. Aggregate for counting (:func:`clique_count`) or
+    ``limit(1)`` for an early-terminating existence probe — a LocalLimit
     above the chain stops each task at its first surviving row, the Catalyst
-    analogue of the reference's StopExploration (core/Barrier.hh:61-70)."""
-    if k == 2:
-        return edges.select(F.col("src").alias("v1"), F.col("dst").alias("v2"))
-    o = _oriented(edges)
+    analogue of the reference's StopExploration (core/Barrier.hh:61-70).
+
+    Orienting every edge toward its higher-degree endpoint bounds the
+    oriented out-degree by O(sqrt(|E|)), so the wedge join never explodes
+    on hubs (the skew the reference handles with MPI work stealing,
+    RangeQueue.hh). Every predicate is an equi-join key or a range filter.
+
+    ``pre_oriented=True`` asserts ``edges`` is ALREADY :func:`oriented`
+    (src > dst) and skips the swap. This matters for bucketed storage: the
+    swap is opaque to Catalyst, so a table bucketed by ``src`` only feeds
+    the wedge self-join shuffle-free when the stored layout is the oriented
+    one (see graph/storage.py and ``bench.py --bucketed``)."""
+    o = edges if pre_oriented else oriented(edges)
     # m holds v1 > v2 > ... > v_i (id order == ascending degree order)
     m = o.select(F.col("src").alias("v1"), F.col("dst").alias("v2"))
     for i in range(3, k + 1):
@@ -120,7 +139,7 @@ def star_count(edges: DataFrame, k: int) -> DataFrame:
 
 def path4_count(edges: DataFrame) -> DataFrame:
     """Edge-induced path-on-4-vertices count. Per-middle-edge closed form
-    minus the triangle walks. Two aggregates + the triangle fast path."""
+    minus the triangle walks. Two aggregates + the 3-clique count."""
     deg = degrees(edges)
     du = deg.select(F.col("v").alias("src"), F.col("degree").alias("du"))
     dv = deg.select(F.col("v").alias("dst"), F.col("degree").alias("dv"))
@@ -133,9 +152,8 @@ def path4_count(edges: DataFrame) -> DataFrame:
             .alias("w")
         )
     )
-    tri = triangle_count(edges)
-    return walks.crossJoin(tri).select(
-        (F.col("w") - 3 * F.col("triangles")).cast("long").alias("cnt")
+    return walks.crossJoin(clique_count(edges, 3)).select(
+        (F.col("w") - 3 * F.col("cnt")).cast("long").alias("cnt")
     )
 
 
@@ -162,7 +180,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     17k-degree hub of the skew bench routes through the cheap side.
     Measured at SF=0.1: identical count, and the skewed-hub graph drops
     from Σ deg² ≈ 3·10⁸ wedge rows to ~10⁶."""
-    o = _oriented(edges)  # (src=x, dst=a): neighbours a of x with id(a) < id(x)
+    o = oriented(edges)  # (src=x, dst=a): neighbours a of x with id(a) < id(x)
     sym = symmetrized(edges)
     a_leg = o.select(F.col("src").alias("x"), F.col("dst").alias("a"))
     c_leg = sym.select(F.col("src").alias("x"), F.col("dst").alias("c"))

@@ -7,10 +7,13 @@ shuffle partitions sized to parallelism).
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -98,16 +101,17 @@ def release_checkpoint(df) -> None:
     state-table of blocks PER ROUND for the life of the session — at 100 TB
     that is the difference between bounded and unbounded executor storage.
 
-    Best-effort: quietly does nothing if the plan shape is not a direct
-    checkpoint (nothing to release) or the py4j internals move.
+    Does nothing if the plan shape is not a direct checkpoint (nothing to
+    release). A failing plan lookup or release (e.g. the py4j internals
+    move) does not raise, but is logged as a warning naming the exception.
     """
     df.unpersist()
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover — best-effort release
-        pass
+    except Exception as exc:
+        log.warning("release_checkpoint: could not release checkpoint blocks: %r", exc)
 
 
 def literal_table(spark: SparkSession, names: list[str], rows) -> DataFrame:

@@ -41,8 +41,12 @@ from peregrine_spark.patterns.canonical import canonical_form
 from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
 from peregrine_spark.plans.counts import convert_counts
 
-CITESEER = "/root/reference/data/citeseer"
-TRUTH = "/root/reference/core/integrationtests/truth"
+from tests.conftest import NO_REFERENCE, REFERENCE
+
+pytestmark = pytest.mark.skipif(not REFERENCE.exists(), reason=NO_REFERENCE)
+
+CITESEER = str(REFERENCE / "data" / "citeseer")
+TRUTH = str(REFERENCE / "core" / "integrationtests" / "truth")
 
 
 def _strip(p: SmallGraph) -> SmallGraph:

@@ -201,3 +201,52 @@ def test_ingest_releases_ranking_cache(spark):
     g.unpersist()
     after = persistent_ids()
     assert after <= before
+
+
+def test_peel_releases_each_round(spark):
+    """kcore and ktruss run one peel loop that keeps only the latest round's
+    checkpoint alive: after a many-round peel at most the returned result
+    is still persisted."""
+    from peregrine_spark.graph.build import kcore
+    from peregrine_spark.operators.triangles import ktruss
+
+    def persistent_ids():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    runs = {
+        # a 20-vertex path loses its two end edges per round: ten rounds
+        "kcore": (lambda e: kcore(e, 2), [(i, i + 1) for i in range(1, 20)], set()),
+        # K4 plus a fan whose support collapses over two rounds
+        "ktruss": (
+            lambda e: ktruss(e, 4),
+            k4 + [(1, 5), (2, 5), (1, 6), (5, 6)],
+            set(k4),
+        ),
+    }
+    for name, (run, pairs, want) in runs.items():
+        e = edges_df(spark, pairs)
+        before = persistent_ids()
+        got = {(r["src"], r["dst"]) for r in run(e).collect()}
+        assert got == want, name
+        assert len(persistent_ids() - before) <= 1, name
+
+
+def test_release_checkpoint_logs_failures(caplog):
+    """A failed release does not raise, but is logged naming the exception."""
+    from peregrine_spark.session import release_checkpoint
+
+    class PlanLookupFails:
+        def unpersist(self):
+            pass
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("plan lookup failed")
+
+    with caplog.at_level("WARNING", logger="peregrine_spark.session"):
+        release_checkpoint(PlanLookupFails())
+    assert any(
+        "RuntimeError" in r.getMessage() and "plan lookup failed" in r.getMessage()
+        for r in caplog.records
+    )

@@ -14,8 +14,9 @@ from peregrine_spark.operators.match import count, count_motifs, existence, matc
 from peregrine_spark.operators.triangles import triangle_count, triangle_count_per_vertex
 from peregrine_spark.patterns import PatternGenerator, SmallGraph
 from peregrine_spark.patterns.canonical import canonical_form
+from peregrine_spark.plans.fast_counts import clique_rows, oriented
 
-from tests.conftest import edges_df
+from tests.conftest import P1_DIAMOND, edges_df
 from tests.oracle import brute_count, brute_induced_counts, er_graph
 
 
@@ -36,6 +37,9 @@ def test_triangle_count_er_oracle(spark):
     expected = brute_count(pairs, PatternGenerator.clique(3))
     got = triangle_count(edges_df(spark, pairs)).collect()[0][0]
     assert got == expected
+    # the bucketed-storage input: an already oriented table, no swap
+    o = oriented(edges_df(spark, pairs))
+    assert clique_rows(o, 3, pre_oriented=True).count() == expected
     per_v = dict(triangle_count_per_vertex(edges_df(spark, pairs)).collect())
     assert sum(per_v.values()) == 3 * expected
 
@@ -117,6 +121,10 @@ def test_local_clustering_closed_forms(spark):
     ).collect()
     assert {r["v"] for r in mapped} == {100, 200, 300, 400}
     assert all(r["clustering"] == 1.0 for r in mapped)
+    # an id_map missing a vertex fails instead of dropping that vertex's row
+    partial = spark.createDataFrame([(v, v * 100) for v in range(1, 4)], "v long, old long")
+    with pytest.raises(Exception, match="id_map has no vertex 4"):
+        local_clustering(edges_df(spark, K(4)), id_map=partial).collect()
 
 
 def test_clique_counts_closed_form(spark):
@@ -149,10 +157,9 @@ def test_every_4_pattern_edge_induced_oracle(spark):
 
 
 def test_p1_reference_pattern_oracle(spark):
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
     pairs = er_graph(18, 0.3, seed=5)
-    [(_, c)] = count(edges_df(spark, pairs), p1)
-    assert c == brute_count(pairs, p1)
+    [(_, c)] = count(edges_df(spark, pairs), P1_DIAMOND)
+    assert c == brute_count(pairs, P1_DIAMOND)
 
 
 def test_anti_edge_pattern_oracle(spark):

@@ -5,6 +5,8 @@ Mirrors core/unittests/{Graph,PatternGenerator}_test.hh coverage.
 
 import itertools
 
+import pytest
+
 from peregrine_spark.patterns import (
     PatternGenerator,
     SmallGraph,
@@ -15,6 +17,8 @@ from peregrine_spark.patterns import (
 )
 from peregrine_spark.plans.compiler import matching_order
 from peregrine_spark.plans.counts import convert_counts, num_mappings
+
+from tests.conftest import NO_REFERENCE, P1_DIAMOND, REFERENCE
 
 
 def test_generators():
@@ -55,7 +59,7 @@ def test_symmetry_conditions_known():
         PatternGenerator.cycle(4),
         PatternGenerator.cycle(5),
         PatternGenerator.chain(5),
-        SmallGraph.from_file("/root/reference/query/p1.graph"),
+        P1_DIAMOND,
     ]:
         conds = symmetry_conditions(g)
         auts = automorphisms(g)
@@ -73,8 +77,7 @@ def test_symmetry_conditions_known():
 def test_automorphism_sets():
     assert automorphism_sets(PatternGenerator.star(4)) == [[1], [2, 3, 4]]
     assert automorphism_sets(PatternGenerator.clique(3)) == [[1, 2, 3]]
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
-    assert automorphism_sets(p1) == [[1, 3], [2, 4]]
+    assert automorphism_sets(P1_DIAMOND) == [[1, 3], [2, 4]]
 
 
 def test_pattern_enumeration_counts():
@@ -109,10 +112,12 @@ def test_num_mappings_and_convert():
         assert c == expected, (p.to_string(), c)
 
 
+@pytest.mark.skipif(not REFERENCE.exists(), reason=NO_REFERENCE)
 def test_parse_reference_pattern_files():
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
+    p1 = SmallGraph.from_file(str(REFERENCE / "query" / "p1.graph"))
     assert p1.num_vertices == 4 and p1.num_true_edges == 5
-    p2 = SmallGraph.from_file("/root/reference/query/p2-mi.graph")
+    assert canonical_form(p1) == canonical_form(P1_DIAMOND)
+    p2 = SmallGraph.from_file(str(REFERENCE / "query" / "p2-mi.graph"))
     assert p2.labelling().value == "labelled"
     assert p2.num_vertices == 5 and p2.num_true_edges == 5
 
