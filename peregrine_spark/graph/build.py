@@ -12,20 +12,35 @@ predicates are ``id(u) < id(v)`` comparisons, so putting hubs at small ids
 makes range pruning shear off hub work early — and it tells us exactly which
 ids to salt for shuffle skew (the smallest ones).
 
-Spark-first HOW: everything is DataFrame ops — regexp extraction for import
-edges, a window-lag chain for co-commit edges (capped fan-out: a commit with
-k files contributes k-1 chain edges, NOT a k-clique — at 10^12 files a mega-
-commit must not explode quadratically), groupBy for degrees. Contiguous rank
-assignment is :func:`contiguous_rank`: range repartition + per-partition
-offsets + a window PARTITIONED by range id — the two-pass distributed idiom,
-all JVM-side, never a single-partition global Window sort.
+The ingest plan (:func:`build_graph`) does each piece of work once, all
+DataFrame ops in the JVM:
+
+1. raw pairs: regex-extracted imports ∪ the co-commit chain
+   (:func:`chain_pairs` over each commit's rows sorted by key — k files
+   yield k-1 pairs, NOT a k-clique, so a mega-commit cannot explode
+   quadratically), neither deduplicated: a file listed twice in one commit
+   only chains to itself;
+2. one dedup: :func:`edges_from_pairs` drops loops, orients, deduplicates;
+3. one key aggregate: edge endpoints (weight 1) ∪ source rows (weight 0,
+   lang) grouped by key give degree and language; degree-0 keys drop out;
+4. one ranking, eager: :func:`assign_degree_ids` (:func:`contiguous_rank`
+   — range partition + per-range offsets, never a single-partition sort);
+5. one id join: :func:`join_ids`;
+6. labels: the sorted languages reach the driver as an observed metric of
+   step 4's first job and number the vertices from a literal array — no
+   job of their own, no global Window.
+
+The public :func:`import_edges` and :func:`co_commit_edges` still return
+distinct loop-free pairs — each source's own answer to which pairs it
+contributes — while ``build_graph`` reads their raw private forms and
+leaves the only dedup to step 2.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from peregrine_spark.session import release_checkpoint
@@ -54,46 +69,61 @@ class GraphTables:
 
     def unpersist(self) -> None:
         """Release intermediate caches held by the ingest (the string-key
-        edge table is persisted so the eager degree-ranking pass and the
-        lazy id-join pass share one materialization). Call once the edge /
-        vertex tables have been materialized or written out."""
+        edge table, persisted so the eager degree ranking and the lazy id
+        join share one materialization, and the ranking's checkpoint).
+        Call once the edge / vertex tables have been materialized or
+        written out."""
         for df in self._cached:
             if df is not None:
                 release_checkpoint(df)
 
 
-def import_edges(src_df: DataFrame) -> DataFrame:
-    """(key, other_key) pairs parsed from ``import <repo:path>`` lines."""
-    key = F.concat_ws(":", "repo", "path")
-    return (
-        src_df.select(
-            key.alias("a"),
-            F.explode(
-                F.regexp_extract_all(F.col("content"), F.lit(r"import ([^\n]+)"), 1)
-            ).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
+def _key() -> Column:
+    return F.concat_ws(":", "repo", "path")
+
+
+def _import_pairs(src_df: DataFrame) -> DataFrame:
+    return src_df.select(
+        _key().alias("a"),
+        F.explode(
+            F.regexp_extract_all(F.col("content"), F.lit(r"import ([^\n]+)"), 1)
+        ).alias("b"),
     )
+
+
+def chain_pairs(
+    df: DataFrame, group_col: str, item_col: str, order_cols: list[str] | None = None
+) -> DataFrame:
+    """(a, b) pairs between consecutive items of each group, ordered by
+    (item, *order_cols), not deduplicated. Capped fan-out by construction:
+    a group of k rows yields k-1 pairs; the per-group sort is a partitioned
+    window — no global sort."""
+    order_by = [F.col(item_col)] + [F.col(c) for c in (order_cols or [])]
+    w = Window.partitionBy(group_col).orderBy(*order_by)
+    return df.select(
+        F.col(item_col).alias("a"), F.lag(F.col(item_col)).over(w).alias("b")
+    ).where(F.col("b").isNotNull())
+
+
+def _co_commit_pairs(src_df: DataFrame) -> DataFrame:
+    return chain_pairs(src_df.select("commit", _key().alias("key")), "commit", "key")
+
+
+def _distinct_pairs(pairs: DataFrame) -> DataFrame:
+    return pairs.where(F.col("a") != F.col("b")).dropDuplicates(["a", "b"])
+
+
+def import_edges(src_df: DataFrame) -> DataFrame:
+    """Distinct loop-free (key, other_key) pairs parsed from
+    ``import <repo:path>`` lines."""
+    return _distinct_pairs(_import_pairs(src_df))
 
 
 def co_commit_edges(src_df: DataFrame) -> DataFrame:
-    """Chain edges between consecutive paths (sorted by key) within a commit.
-
-    Capped fan-out by construction: one commit touching k files yields k-1
-    edges. The per-commit sort is a partitioned window — no global sort.
-    """
-    key = F.concat_ws(":", "repo", "path")
-    per_commit = src_df.select(F.col("commit"), key.alias("a")).dropDuplicates(
-        ["commit", "a"]
-    )
-    w = Window.partitionBy("commit").orderBy("a")
-    return (
-        per_commit.withColumn("b", F.lag("a").over(w))
-        .where(F.col("b").isNotNull())
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
+    """Distinct chain pairs between consecutive paths (sorted by key) within
+    a commit (:func:`chain_pairs`): one commit touching k files yields k-1
+    pairs."""
+    return _distinct_pairs(_co_commit_pairs(src_df))
 
 
 def edges_from_pairs(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -215,45 +245,54 @@ def contiguous_rank(
         r["_pid"]: r["cnt"]
         for r in part.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
+    # offset of each range partition, as a literal array indexed by _pid:
+    # no Python RDD behind it, and no join whose row estimate (a product of
+    # both sides) would stop the ranking from being broadcast downstream
     offsets, acc = [], 0
     for pid in range(max(counts) + 1 if counts else 0):
-        offsets.append((pid, acc))
+        offsets.append(F.lit(acc))
         acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+    off = F.element_at(F.array(*offsets).cast("array<bigint>"), F.col("_pid") + 1)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     out = (
-        part.join(F.broadcast(off_df), "_pid")
-        .withColumn(rank_col, (F.col("_off") + F.row_number().over(w)).cast("long"))
-        .drop("_pid", "_off")
+        part.withColumn(rank_col, (off + F.row_number().over(w)).cast("long"))
+        .drop("_pid")
         .localCheckpoint(eager=True)
     )
     release_checkpoint(part)
     return out
 
 
-def assign_degree_ids(key_edges: DataFrame) -> DataFrame:
-    """(key_src, key_dst) canonical string-key edges → vertex dictionary
-    (v, key, degree) with v = 1-based contiguous, degree-descending, ties by
-    key ascending. Degree-0 keys never appear (they have no edge rows) —
-    mirroring the reference's deletion of degree-0 vertices.
+def assign_degree_ids(degrees: DataFrame) -> DataFrame:
+    """(key, degree, …) rows with distinct keys of any type → the same rows
+    with ``v`` in front: 1-based contiguous ids by degree descending, ties
+    by key ascending. The one degree ranking, behind both
+    :func:`build_graph` and ``from_tables.relabel_by_degree``.
 
-    Implementation: degree via groupBy-count over the symmetrized view, then
-    global ordering via :func:`contiguous_rank` (range partition + per-range
-    offsets — two linear passes, no single-task sort, no Python RDD).
+    Eager: the ranking (:func:`contiguous_rank`) runs inside this call, so
+    every lazy step feeding ``degrees`` executes here. The result carries
+    ``ranking_cache``, the checkpoint to release
+    (``release_checkpoint``) once its consumers are materialized.
     """
-    both = key_edges.select(F.col("src").alias("key")).union(
-        key_edges.select(F.col("dst").alias("key"))
-    )
-    degrees = both.groupBy("key").agg(F.count("*").alias("degree"))
     ranked = contiguous_rank(
         degrees, [F.col("degree").desc(), F.col("key").asc()], "v"
     )
-    out = ranked.select(F.col("v"), "key", "degree")
-    # handle to the checkpointed ranking blocks, so callers can release
-    # executor storage once vertices/edges are materialized (build_graph
-    # routes it into GraphTables._cached; see GraphTables.unpersist)
+    out = ranked.select("v", *degrees.columns)
     out.ranking_cache = ranked
     return out
+
+
+def join_ids(edges: DataFrame, ids: DataFrame) -> DataFrame:
+    """Key edges (src, dst) → canonical (src < dst) id edges, both
+    endpoints mapped through ``ids`` (v, key): the one key → id join."""
+    m = ids.select("key", "v")
+    return (
+        edges.join(m.toDF("src", "_sv"), "src")
+        .join(m.toDF("dst", "_dv"), "dst")
+        .select(
+            F.least("_sv", "_dv").alias("src"), F.greatest("_sv", "_dv").alias("dst")
+        )
+    )
 
 
 def convert_edge_list(
@@ -273,8 +312,6 @@ def convert_edge_list(
     (one job, any file size), ranking via the two-pass distributed
     ``contiguous_rank`` — where the reference mmaps and multi-threads one
     file, the scan here is already partitioned."""
-    from pyspark.sql import functions as F  # noqa: F811 (local for clarity)
-
     lines = spark.read.text(path).select(F.trim(F.col("value")).alias("value"))
     # trim BEFORE the comment check so indented comment lines are comments,
     # not accidental parse failures; blank lines are never edges
@@ -311,51 +348,45 @@ def convert_edge_list(
     return relabel_by_degree(edges_from_pairs(pairs))
 
 
-def build_graph(src_df: DataFrame, include_co_commit: bool = True) -> GraphTables:
-    """Full ingest: source-repo rows → GraphTables."""
-    imp = import_edges(src_df)
-    pairs = imp.union(co_commit_edges(src_df)) if include_co_commit else imp
-    # persisted: assign_degree_ids materializes it eagerly (degree ranking),
-    # and the final id-join below reads it again — without the persist the
-    # whole regex-extract + dedup pipeline runs twice (measured ~2x ingest)
+def build_graph(src_df: DataFrame) -> GraphTables:
+    """Full ingest: source-repo rows → GraphTables (the plan is laid out in
+    the module docstring)."""
+    pairs = _import_pairs(src_df).union(_co_commit_pairs(src_df))
+    # persisted: the eager ranking reads it for degrees, the id join again
     key_edges = edges_from_pairs(pairs).persist()
 
-    vmap = assign_degree_ids(key_edges)
-
-    # lang per key (deterministic in our generator; FIRST by key otherwise)
-    key = F.concat_ws(":", "repo", "path")
-    key_lang = (
-        src_df.select(key.alias("key"), "lang")
+    ends = key_edges.select(
+        F.explode(F.array("src", "dst")).alias("key"),
+        F.lit(1).alias("w"),
+        F.lit(None).cast("string").alias("lang"),
+    )
+    # the sorted languages ride along the ranking's first job as an
+    # observed metric: the label dictionary needs no job of its own
+    seen = Observation()
+    rows = src_df.select(_key().alias("key"), F.lit(0).alias("w"), "lang").observe(
+        seen, F.array_sort(F.collect_set("lang")).alias("langs")
+    )
+    keys = (
+        ends.union(rows)
         .groupBy("key")
-        .agg(F.min("lang").alias("lang"))
+        .agg(F.sum("w").alias("degree"), F.min("lang").alias("lang"))
+        .where(F.col("degree") > 0)
     )
-    langs = (
-        key_lang.select("lang")
-        .distinct()
-        .orderBy("lang")
-        .withColumn("label", F.row_number().over(Window.orderBy("lang")).cast("long"))
-    )
-    vertices = (
-        vmap.join(key_lang, "key", "left")
-        .join(F.broadcast(langs), "lang", "left")
-        .select("v", "key", F.coalesce("label", F.lit(0)).alias("label"), "degree")
-    )
+    ranked = assign_degree_ids(keys)
 
-    v_of = vmap.select("v", "key")
-    edges = (
-        key_edges.join(v_of.withColumnRenamed("key", "src").withColumnRenamed("v", "sv"), "src")
-        .join(v_of.withColumnRenamed("key", "dst").withColumnRenamed("v", "dv"), "dst")
-        .select(
-            F.least("sv", "dv").alias("src"), F.greatest("sv", "dv").alias("dst")
-        )
-    )
+    langs = seen.get["langs"]
+    lang_of = F.array(*map(F.lit, langs)).cast("array<string>")
     return GraphTables(
-        vertices=vertices,
-        edges=edges,
-        labels=langs.select("label", "lang"),
-        # key_edges: the persisted string-key edge table; vmap.ranking_cache:
-        # the degree-ranking's checkpoint blocks (contiguous_rank) — both
-        # released together by GraphTables.unpersist() once the edge/vertex
-        # tables are materialized
-        _cached=(key_edges, vmap.ranking_cache),
+        vertices=ranked.select(
+            "v",
+            "key",
+            F.coalesce(F.array_position(lang_of, F.col("lang")), F.lit(0)).alias("label"),
+            "degree",
+        ),
+        edges=join_ids(key_edges, ranked),
+        labels=src_df.sparkSession.range(1, len(langs) + 1).select(
+            F.col("id").alias("label"),
+            F.element_at(lang_of, F.col("id").cast("int")).alias("lang"),
+        ),
+        _cached=(key_edges, ranked.ranking_cache),
     )

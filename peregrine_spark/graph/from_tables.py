@@ -5,8 +5,8 @@ commit, parts per order, docs per source. Two derivations:
 
 * ``chain_edges`` — consecutive items within a group (sorted by a
   deterministic total order) become edges: a group touching k items yields
-  k-1 edges. This is the scale-safe derivation (same idiom as
-  ``graph.build.co_commit_edges``): a mega-group contributes O(k) edges,
+  k-1 edges. This is the scale-safe derivation (``graph.build.chain_pairs``,
+  the ingest's co-commit chain too): a mega-group contributes O(k) edges,
   never O(k^2), so no single group can blow up the shuffle at 10^12 rows.
 * ``pair_edges`` — all pairs within a group (k*(k-1)/2 edges). Only safe
   when group sizes are bounded; provided for completeness with an explicit
@@ -17,18 +17,24 @@ commit, parts per order, docs per source. Two derivations:
 ``relabel_by_degree`` reassigns 1-based contiguous ids by descending degree
 (ties by old id ascending) — the reference's load-bearing renumbering
 (core/DataConverter.cc:283-304) that makes symmetry-break range pruning and
-degree-based edge orientation cheap. Default physical strategy: the
-distributed two-pass ranking (``graph.build.contiguous_rank`` — range
-partition + per-range offsets) that works for arbitrarily large vertex
-sets; a global-window variant is kept as an opt-in cross-check path.
+degree-based edge orientation cheap. It shares the ingest's ranking and id
+join (``graph.build.assign_degree_ids`` — the distributed two-pass
+``contiguous_rank``, for arbitrarily large vertex sets — and
+``graph.build.join_ids``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import contiguous_rank, edges_from_pairs, symmetrized
+from peregrine_spark.graph.build import (
+    assign_degree_ids,
+    chain_pairs,
+    edges_from_pairs,
+    join_ids,
+    symmetrized,
+)
 
 
 def chain_edges(
@@ -43,16 +49,7 @@ def chain_edges(
     as the rows are distinct on those columns, making the derivation
     deterministic (required for the DuckDB oracle to reproduce it).
     """
-    order_by = [F.col(item_col)] + [F.col(c) for c in (order_cols or [])]
-    w = Window.partitionBy(group_col).orderBy(*order_by)
-    pairs = (
-        df.select(
-            F.col(item_col).alias("a"),
-            F.lag(F.col(item_col)).over(w).alias("b"),
-        )
-        .where(F.col("b").isNotNull())
-    )
-    return edges_from_pairs(pairs)
+    return edges_from_pairs(chain_pairs(df, group_col, item_col, order_cols))
 
 
 def pair_edges(
@@ -85,48 +82,15 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def relabel_by_degree(
-    edges: DataFrame, use_window: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def relabel_by_degree(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Relabel vertices 1..|V| by (degree desc, old id asc).
 
-    Returns (relabelled canonical edges, mapping (v, old, degree)).
-
-    The default is the scale-safe distributed two-pass ranking
-    (:func:`peregrine_spark.graph.build.contiguous_rank` — range partition +
-    per-range offsets, no single-partition sort, no Python RDD).
-    ``use_window=True`` opts into a single global Window sort — only sane
-    for small vertex sets (everything funnels through ONE task); kept as a
-    cross-check path for tests.
+    Returns (relabelled canonical edges, mapping (v, old, degree)). The
+    mapping carries ``ranking_cache``, the ranking's checkpoint: long-lived
+    sessions release it with ``release_checkpoint(mapping.ranking_cache)``
+    once the relabelled edges / mapping have been materialized.
     """
-    deg = degrees(edges)
-    if use_window:
-        w = Window.orderBy(F.col("degree").desc(), F.col("v").asc())
-        mapping = deg.select(
-            F.row_number().over(w).cast("long").alias("v"),
-            F.col("v").alias("old"),
-            "degree",
-        )
-        mapping.ranking_cache = None
-    else:
-        ranked = contiguous_rank(
-            deg, [F.col("degree").desc(), F.col("v").asc()], "_rank"
-        )
-        mapping = ranked.select(
-            F.col("_rank").alias("v"), F.col("v").alias("old"), "degree"
-        )
-        # contiguous_rank eagerly checkpoints the ranking; expose the handle
-        # so long-lived sessions can release the blocks once the relabelled
-        # edges / mapping have been materialized:
-        #   release_checkpoint(mapping.ranking_cache)
-        mapping.ranking_cache = ranked
-    m_src = mapping.select(F.col("old").alias("src"), F.col("v").alias("_sv"))
-    m_dst = mapping.select(F.col("old").alias("dst"), F.col("v").alias("_dv"))
-    relabelled = (
-        edges.join(m_src, "src")
-        .join(m_dst, "dst")
-        .select(
-            F.least("_sv", "_dv").alias("src"), F.greatest("_sv", "_dv").alias("dst")
-        )
-    )
-    return relabelled, mapping
+    ranked = assign_degree_ids(degrees(edges).withColumnRenamed("v", "key"))
+    mapping = ranked.select("v", F.col("key").alias("old"), "degree")
+    mapping.ranking_cache = ranked.ranking_cache
+    return join_ids(edges, ranked), mapping

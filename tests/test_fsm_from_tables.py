@@ -36,19 +36,30 @@ def test_pair_edges_cap(spark):
     assert got == {(1, 2)}  # the 10-item group is dropped by the skew guard
 
 
+def _ranking_oracle(pairs):
+    """Pure-Python relabel: {old: (v, degree)} by (degree desc, old asc)."""
+    deg = {}
+    for a, b in {(min(a, b), max(a, b)) for a, b in pairs if a != b}:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    order = sorted(deg, key=lambda k: (-deg[k], k))
+    return {k: (i, deg[k]) for i, k in enumerate(order, start=1)}
+
+
 def test_relabel_by_degree_paths_agree(spark):
-    e = edges_df(spark, [(10, 20), (10, 30), (10, 40), (20, 30), (50, 60)])
-    rel_w, map_w = relabel_by_degree(e, use_window=True)
-    rel_z, map_z = relabel_by_degree(e, use_window=False)
-    mw = {(r["v"], r["old"], r["degree"]) for r in map_w.collect()}
-    mz = {(r["v"], r["old"], r["degree"]) for r in map_z.collect()}
-    assert mw == mz
-    # vertex 10 (degree 3) must get id 1; degree sequence non-increasing in v
-    by_v = dict(sorted((r[0], r[2]) for r in mw))
-    assert by_v[1] == 3
-    assert list(by_v.values()) == sorted(by_v.values(), reverse=True)
-    # relabelled edge count preserved
-    assert rel_w.count() == e.count() == rel_z.count()
+    """relabel_by_degree equals the pure-Python ranking oracle: mapping
+    and relabelled edges."""
+    pairs = [(10, 20), (10, 30), (10, 40), (20, 30), (50, 60)]
+    rel, mapping = relabel_by_degree(edges_df(spark, pairs))
+    want = _ranking_oracle(pairs)
+    got = {r["old"]: (r["v"], r["degree"]) for r in mapping.collect()}
+    assert got == want
+    # vertex 10 (degree 3) gets id 1; ties (20, 30 at degree 2) by old id
+    assert want[10] == (1, 3) and want[20][0] == 2 and want[30][0] == 3
+    ids = {k: v for k, (v, _) in want.items()}
+    assert sorted(tuple(r) for r in rel.collect()) == sorted(
+        (min(ids[a], ids[b]), max(ids[a], ids[b])) for a, b in pairs
+    )
 
 
 def test_degrees(spark):
@@ -105,17 +116,16 @@ def test_fsm_on_labelled_clique(spark):
 
 
 def test_relabel_default_is_scale_safe(spark):
-    """The default relabel path must not funnel the vertex set through a
+    """The relabel must not funnel the vertex set through a
     single-partition global sort (VERDICT r1 scale-killer): no
-    `Exchange SinglePartition` anywhere in the executed plan."""
-    e = edges_df(spark, [(1, 2), (2, 3), (3, 4), (1, 4), (1, 3), (5, 6)])
-    _, mapping = relabel_by_degree(e)
+    `Exchange SinglePartition` anywhere in the executed plan — and it
+    still equals the pure-Python ranking oracle."""
+    pairs = [(1, 2), (2, 3), (3, 4), (1, 4), (1, 3), (5, 6)]
+    _, mapping = relabel_by_degree(edges_df(spark, pairs))
     plan = mapping._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
-    # sanity: the opt-in window path IS the single-partition sort
-    _, mapping_w = relabel_by_degree(e, use_window=True)
-    plan_w = mapping_w._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" in plan_w
+    got = {r["old"]: (r["v"], r["degree"]) for r in mapping.collect()}
+    assert got == _ranking_oracle(pairs)
 
 
 def test_fsm_discover_matches_explicit(spark):

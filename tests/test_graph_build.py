@@ -1,5 +1,8 @@
 """Ingest invariants — parity with core/DataConverter.cc semantics."""
 
+import re
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph import build_graph, canonical_edges, symmetrized
@@ -61,6 +64,75 @@ def test_build_deterministic(spark):
     src2, g2 = _graph(spark)
     assert g1.vertices.exceptAll(g2.vertices).count() == 0
     assert g1.edges.exceptAll(g2.edges).count() == 0
+
+
+def _ingest_oracle(rows):
+    """Pure-Python build_graph over (repo, path, commit, lang, content) rows:
+    regex imports, a sorted chain per commit, loops and duplicates dropped,
+    ids by (degree desc, key asc), labels by sorted language (0: none).
+    Returns (edges, vertices, labels) as sets of tuples."""
+    pairs, commits, lang = set(), {}, {}
+    for repo, path, commit, lg, content in rows:
+        key = f"{repo}:{path}"
+        pairs |= {(key, b) for b in re.findall(r"import ([^\n]+)", content)}
+        commits.setdefault(commit, set()).add(key)
+        if lg is not None:
+            lang[key] = min(lang.get(key, lg), lg)
+    for keys in commits.values():
+        keys = sorted(keys)
+        pairs |= set(zip(keys, keys[1:]))
+    edges = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
+    degree = Counter(k for e in edges for k in e)
+    ids = {k: i for i, k in enumerate(sorted(degree, key=lambda k: (-degree[k], k)), 1)}
+    langs = sorted({lg for *_, lg, _ in rows if lg is not None})
+    label = {lg: i for i, lg in enumerate(langs, 1)}
+    return (
+        {(min(ids[a], ids[b]), max(ids[a], ids[b])) for a, b in edges},
+        {(v, k, label.get(lang.get(k), 0), degree[k]) for k, v in ids.items()},
+        set(enumerate(langs, 1)),
+    )
+
+
+def _assert_matches_oracle(src):
+    g = build_graph(src)
+    rows = [tuple(r) for r in src.select("repo", "path", "commit", "lang", "content").collect()]
+    edges, vertices, labels = _ingest_oracle(rows)
+    assert {tuple(r) for r in g.edges.collect()} == edges
+    assert g.edges.count() == len(edges)
+    assert {tuple(r) for r in g.vertices.collect()} == vertices
+    assert {tuple(r) for r in g.labels.collect()} == labels
+    g.unpersist()
+
+
+def test_build_graph_matches_python_oracle(spark):
+    """Edges, vertex rows and the label dictionary equal the pure-Python
+    ingest exactly on the generated table."""
+    _assert_matches_oracle(source_repo_table(spark, n_files=N_FILES))
+
+
+def test_build_graph_oracle_on_duplicates_and_loops(spark):
+    """The cases the single dedup must cover: a file listed twice in one
+    commit, a self-import, a mutual import pair, an import of a key with no
+    source row (label 0) and a file with no edges (dropped, but its
+    language is still in the dictionary)."""
+    rows = [
+        ("r", "a.py", "c1", "py", "import r:b.py\nimport r:a.py\n"),
+        ("r", "b.py", "c1", "py", "import r:a.py\n"),
+        ("r", "b.py", "c1", "py", "import r:a.py\n"),
+        ("r", "c.go", "c1", "go", ""),
+        ("r", "d.rs", "c2", "rs", "import r:c.go\nimport x:ghost.py\n"),
+        ("r", "c.go", "c2", "go", ""),
+        ("r", "e.js", "c3", "js", ""),
+    ]
+    src = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    _assert_matches_oracle(src)
+    edges, vertices, labels = _ingest_oracle(rows)
+    # r:a.py-r:b.py once, r:b.py-r:c.go, r:c.go-r:d.rs, r:d.rs-x:ghost.py
+    assert len(edges) == 4 and len(vertices) == 5
+    assert (5, "x:ghost.py", 0, 1) in vertices
+    assert labels == {(1, "go"), (2, "js"), (3, "py"), (4, "rs")}
 
 
 def test_sha256_invariant_preserved(spark):

@@ -102,3 +102,31 @@ def test_output_remap_broadcasts_id_dict(spark, tmp_path):
     # and the remap itself is value-correct
     rows = {tuple(sorted(r)) for r in m.collect()}
     assert ("orig_1", "orig_2", "orig_3") in rows
+
+
+def test_ingest_plan_shape(spark):
+    """build_graph shuffles once for the commit window and once for its
+    single dedup; at this size both id joins broadcast the ranking, and the
+    vertex table reads the checkpointed ranking directly. Pre-AQE: at most
+    4 Exchanges in the edge plan and 1 in the vertex plan, never a
+    single-partition sort, never a Python evaluator."""
+    from peregrine_spark.graph import build_graph
+    from peregrine_spark.session import conf_override
+    from peregrine_spark.tables import source_repo_table
+
+    with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
+        # a size no other test ingests: the persisted key edges must be
+        # planned here, not found in the cache under another test's AQE plan
+        g = build_graph(source_repo_table(spark, n_files=240))
+        for name, df, most in (("edges", g.edges, 4), ("vertices", g.vertices, 1)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "AdaptiveSparkPlan" not in plan, plan
+            exchanges = [
+                l for l in plan.splitlines()
+                if "Exchange" in l and "ReusedExchange" not in l
+            ]
+            assert len(exchanges) <= most, (name, exchanges)
+            assert "SinglePartition" not in plan, (name, plan)
+            for evaluator in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+                assert evaluator not in plan, (name, plan)
+    g.unpersist()
