@@ -40,11 +40,10 @@ from peregrine_spark.multimodal.assets import (
     frame_sample_plan,
 )
 from peregrine_spark.operators.fsm import fsm, mni_support, support_at_least
-from peregrine_spark.operators.match import count_incremental, count_motifs, existence
+from peregrine_spark.operators.match import count_incremental, count_motifs, existence, match
 from peregrine_spark.plans.fast_counts import cycle4_count, star_count
 from peregrine_spark.operators.triangles import local_clustering, triangle_count
 from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
-from peregrine_spark.plans.compiler import compile_match
 from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.similarity.ann import (
     cosine_pairs,
@@ -639,21 +638,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_wedge(spark, sf_dir):
         rel = _relabelled(spark, sf_dir)
-        m = compile_match(symmetrized(rel), PatternGenerator.star(3), edges_canonical=rel).df
+        m = match(rel, PatternGenerator.star(3))
         return m.agg(F.count(F.lit(1)).cast("long").alias("wedges"))
 
     q["wedge_count"] = q_wedge
 
     def q_4clique(spark, sf_dir):
         rel = _relabelled(spark, sf_dir)
-        m = compile_match(symmetrized(rel), PatternGenerator.clique(4), edges_canonical=rel).df
+        m = match(rel, PatternGenerator.clique(4))
         return m.agg(F.count(F.lit(1)).cast("long").alias("four_cliques"))
 
     q["four_clique_count"] = q_4clique
 
     def q_4cycle(spark, sf_dir):
         rel = _relabelled(spark, sf_dir)
-        m = compile_match(symmetrized(rel), PatternGenerator.cycle(4), edges_canonical=rel).df
+        m = match(rel, PatternGenerator.cycle(4))
         return m.agg(F.count(F.lit(1)).cast("long").alias("four_cycles"))
 
     q["four_cycle_count"] = q_4cycle
@@ -718,7 +717,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # against the edge table (M4); equals wedges - 3*triangles
         rel = _relabelled(spark, sf_dir)
         p = SmallGraph(edges=[(1, 2), (1, 3)], anti_edges=[(2, 3)])
-        m = compile_match(symmetrized(rel), p, edges_canonical=rel).df
+        m = match(rel, p)
         return m.agg(F.count(F.lit(1)).cast("long").alias("induced_wedges"))
 
     q["induced_wedge_count"] = q_induced_wedge
@@ -728,7 +727,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # edges that are in no triangle (no common neighbour)
         rel = _relabelled(spark, sf_dir)
         p = SmallGraph(edges=[(1, 2)], anti_edges=[(1, 3), (2, 3)])
-        m = compile_match(symmetrized(rel), p, edges_canonical=rel).df
+        m = match(rel, p)
         return m.agg(F.count(F.lit(1)).cast("long").alias("non_triangle_edges"))
 
     q["isolated_edge_count"] = q_isolated_edges
@@ -743,7 +742,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_mni_wedge(spark, sf_dir):
         rel = _relabelled(spark, sf_dir)
-        m = compile_match(symmetrized(rel), PatternGenerator.star(3), edges_canonical=rel).df
+        m = match(rel, PatternGenerator.star(3))
         s = mni_support(m, PatternGenerator.star(3))
         return _one_row(spark, s, "support", "long")
 
@@ -779,7 +778,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # injective-hom / |Aut| = 14
         rel, _ = relabel_by_degree(_edges(spark, sf_dir, MOTIF5_FILTER))
         rel = rel.localCheckpoint()
-        m = compile_match(symmetrized(rel), PatternGenerator.cycle(7), edges_canonical=rel).df
+        m = match(rel, PatternGenerator.cycle(7))
         return m.agg(F.count(F.lit(1)).cast("long").alias("seven_cycles"))
 
     q["seven_cycle_count"] = q_seven_cycle
@@ -863,7 +862,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # edge; README.md:91-94 counts it on citeseer) through the generic
         # pattern->join compiler
         rel = _relabelled(spark, sf_dir)
-        m = compile_match(symmetrized(rel), P1_DIAMOND, edges_canonical=rel).df
+        m = match(rel, P1_DIAMOND)
         return m.agg(F.count(F.lit(1)).cast("long").alias("diamonds"))
 
     q["p1_diamond_count"] = q_p1_diamond

@@ -69,6 +69,41 @@ def _steady(metrics: list[dict]) -> float:
     return sum(secs) / len(secs)
 
 
+class Timings:
+    """Rep timings of one bench run, per query name: the min wall
+    (``queries``), every rep's wall (``rep_times``) and whether the min
+    plateaued before the rep cap (``rep_converged``)."""
+
+    def __init__(self) -> None:
+        self.queries, self.rep_times, self.rep_converged = {}, {}, {}
+
+    def measure(self, name: str, fn, reps: int, max_reps: int = 10):
+        """Run ``fn`` (a FRESH plan per call, see the module docstring)
+        ``reps`` times, then append reps while the running min still
+        improves >= 5% on the last one, up to ``max_reps`` (``max_reps <=
+        reps`` keeps the count fixed). Returns the fastest rep's result and
+        every rep's result."""
+
+        def improving() -> bool:
+            return len(walls) < 2 or walls[-1] < 0.95 * min(walls[:-1])
+
+        walls, results = [], []
+        while len(walls) < max(1, reps) or (len(walls) < max_reps and improving()):
+            t0 = time.monotonic()
+            results.append(fn())
+            walls.append(time.monotonic() - t0)
+        self.rep_times[name] = [round(w, 3) for w in walls]
+        self.rep_converged[name] = not improving()
+        self.queries[name] = min(walls)
+        return results[walls.index(min(walls))], results
+
+    def reps_fields(self) -> dict:
+        # converged: every query's min plateaued before the adaptive-rep
+        # cap; False means the artifact may still under-report throughput
+        return {"rep_times": self.rep_times, "rep_converged": self.rep_converged,
+                "converged": all(self.rep_converged.values())}
+
+
 def run_suite(
     cores: int | None,
     sf: float,
@@ -82,8 +117,6 @@ def run_suite(
     parallelism differs). When None, operators auto-size to the data
     (auto_shuffle_partitions)."""
     pin = shuffle
-    from pyspark.sql import functions as F
-
     from peregrine_spark.graph.build import build_graph
     from peregrine_spark.operators.triangles import triangle_count
     from peregrine_spark.session import get_spark
@@ -101,7 +134,8 @@ def run_suite(
     )
     n_cores = spark.sparkContext.defaultParallelism
 
-    queries: dict[str, float] = {}
+    timings = Timings()
+    queries = timings.queries
     detail: dict[str, float] = {}
 
     t0 = time.monotonic()
@@ -125,65 +159,41 @@ def run_suite(
     queries["ingest"] = time.monotonic() - t0
     n_sym = 2 * n_edges
 
-    rep_times: dict[str, list[float]] = {}
-    rep_converged: dict[str, bool] = {}
-
-    def measure(name: str, fn, n_reps: int = reps, max_reps: int = 10):
-        """Run ``fn`` (which must build a FRESH plan each call — see module
-        docstring) ``n_reps`` times, then ADAPTIVELY append reps while the
-        running min is still improving >= 5% on the last rep (cap
-        ``max_reps``) — an interference-dominated run has a monotonically
-        falling min, and a fixed rep count under-reports throughput (the
-        BENCH_r04 adjudication: PageRank's 3 driver reps were all
-        interfered and the artifact was ~5x slow). Records per-rep walls,
-        a per-query ``converged`` flag (min plateaued before the cap), and
-        keeps the min and the fastest rep's result."""
-
-        def improving() -> bool:
-            return len(walls) < 2 or walls[-1] < 0.95 * min(walls[:-1])
-
-        walls, results = [], []
-        while len(walls) < max(1, n_reps) or (len(walls) < max_reps and improving()):
-            t0 = time.monotonic()
-            results.append(fn())
-            walls.append(time.monotonic() - t0)
-        rep_times[name] = [round(w, 3) for w in walls]
-        rep_converged[name] = not improving()
-        queries[name] = min(walls)
-        return results[walls.index(min(walls))], results
-
     pr_iters = 5
-    _, runs = measure(
+    _, runs = timings.measure(
         "pagerank",
         lambda: pagerank(edges, max_iters=pr_iters, tol=-1.0,
                          check_every=pr_iters, n_partitions=pin),
+        reps,
     )
     steady = min(_steady(r.metrics) for r in runs)
     detail["pagerank_sec_per_superstep"] = steady
     detail["pagerank_edges_per_sec_per_superstep"] = n_sym / steady
 
-    _, runs = measure(
+    _, runs = timings.measure(
         "pagerank_csr",
         lambda: pagerank_csr(edges, max_iters=pr_iters, tol=-1.0,
                              check_every=pr_iters, n_partitions=pin),
+        reps,
     )
     steady = min(_steady(r.metrics) for r in runs)
     detail["pagerank_csr_sec_per_superstep"] = steady
     detail["pagerank_csr_edges_per_sec_per_superstep"] = n_sym / steady
 
     triangle_count(edges).collect()  # warm (materializes AQE stats path)
-    best_tri, _ = measure(
+    best_tri, _ = timings.measure(
         "triangle_count",
         lambda: triangle_count(edges).collect()[0]["triangles"],
-        n_reps=max(reps, 5),  # cheap query: more reps, same budget
+        max(reps, 5),  # cheap query: more reps, same budget
     )
     detail["triangle_edges_per_sec"] = n_edges / queries["triangle_count"]
     detail["triangles"] = best_tri
 
-    best_cc, runs = measure(
+    best_cc, runs = timings.measure(
         "connected_components",
         lambda: connected_components(edges, max_iters=64, check_every=2,
                                      n_partitions=pin),
+        reps,
     )
     detail["cc_sec_per_superstep"] = min(_steady(r.metrics) for r in runs)
     detail["cc_iterations"] = best_cc.iterations
@@ -200,11 +210,7 @@ def run_suite(
         "cores": n_cores,
         "n_edges": n_edges,
         "reps": reps,
-        "rep_times": rep_times,
-        # every measured query's min plateaued before the adaptive-rep cap;
-        # False means the artifact may still under-report throughput
-        "converged": all(rep_converged.values()),
-        "rep_converged": rep_converged,
+        **timings.reps_fields(),
         **{k: (round(v, 2) if isinstance(v, float) else v) for k, v in detail.items()},
     }
     spark.stop()
@@ -238,32 +244,31 @@ def run_bucketed(cores: int | None, sf: float) -> dict:
         spark.read.parquet(tmp), "bench_edges_bucketed"
     )
 
-    def measure(loader) -> tuple[float, int, int]:
+    timings = Timings()
+
+    def measure(name: str, loader) -> tuple[int, int]:
         # a FRESH DataFrame per rep: re-collecting one instance lets Spark
         # skip already-computed shuffle map stages (same RDD lineage), which
         # would time only the final reduce
-        clique_rows(loader(), 3, pre_oriented=True).groupBy().count().collect()  # warm
-        best, tri, exchanges = float("inf"), None, None
-        for _ in range(5):
-            q = clique_rows(loader(), 3, pre_oriented=True).groupBy().count()
-            t0 = time.monotonic()
-            tri = q.collect()[0]["count"]
-            best = min(best, time.monotonic() - t0)
-            plan = q._jdf.queryExecution().executedPlan().toString()
-            exchanges = plan.count("Exchange")
-        return best, exchanges, tri
+        def query():
+            return clique_rows(loader(), 3, pre_oriented=True).groupBy().count()
 
-    plain_dt, plain_ex, tri1 = measure(lambda: spark.read.parquet(tmp))
-    buck_dt, buck_ex, tri2 = measure(
-        lambda: load_edges_bucketed(spark, "bench_edges_bucketed")
+        query().collect()  # warm
+        tri, _ = timings.measure(name, lambda: query().collect()[0]["count"], 5, max_reps=5)
+        exchanges = query()._jdf.queryExecution().executedPlan().toString().count("Exchange")
+        return exchanges, tri
+
+    plain_ex, tri1 = measure("triangle_plain", lambda: spark.read.parquet(tmp))
+    buck_ex, tri2 = measure(
+        "triangle_bucketed", lambda: load_edges_bucketed(spark, "bench_edges_bucketed")
     )
     assert tri1 == tri2
+    plain_dt, buck_dt = timings.queries["triangle_plain"], timings.queries["triangle_bucketed"]
     out = {
         "metric": "bucketed vs plain-parquet triangle count (oriented edge table)",
         "value": round(plain_dt / buck_dt, 3),
         "unit": "speedup_ratio",
-        "queries": {"triangle_plain": round(plain_dt, 3),
-                    "triangle_bucketed": round(buck_dt, 3)},
+        "queries": {k: round(v, 3) for k, v in timings.queries.items()},
         "sf": sf,
         "cores": spark.sparkContext.defaultParallelism,
         "n_edges": n_edges,
@@ -283,14 +288,13 @@ def run_patterns(
     reps: int = 3,
 ) -> dict:
     """Pattern-count bench (4-clique / 4-cycle through the generic join
-    compiler, canonical legs on) — the pattern-matching counterpart of
-    run_suite, with the same adaptive min-over-reps and pinned-partition
-    method so ``--scaling --patterns`` measures N->4N efficiency on the
-    SAME data layout (the reference's Slurm scaling experiment,
-    slurm/countDist.sh)."""
-    from peregrine_spark.graph.build import build_graph, symmetrized
+    compiler) — the pattern-matching counterpart of run_suite, with the
+    same adaptive min-over-reps and pinned-partition method so
+    ``--scaling --patterns`` measures N->4N efficiency on the SAME data
+    layout (the reference's Slurm scaling experiment, slurm/countDist.sh)."""
+    from peregrine_spark.graph.build import build_graph
+    from peregrine_spark.operators.match import match
     from peregrine_spark.patterns.small_graph import PatternGenerator
-    from peregrine_spark.plans.compiler import compile_match
     from peregrine_spark.session import get_spark
     from peregrine_spark.tables import source_repo_table, with_sha256
 
@@ -306,8 +310,7 @@ def run_patterns(
 
     src = with_sha256(source_repo_table(spark, sf=sf)).persist()
     g = build_graph(src)
-    # shared materialized table, lakehouse-style (same method as
-    # tools/canonical_leg_bench.py); each rep builds a FRESH plan
+    # shared materialized table, lakehouse-style; each rep builds a FRESH plan
     edges = g.edges.localCheckpoint(eager=True)
     n_edges = edges.count()
     g.unpersist()
@@ -317,26 +320,12 @@ def run_patterns(
         "clique4": PatternGenerator.clique(4),
         "cycle4": PatternGenerator.cycle(4),
     }
-    queries: dict[str, float] = {}
-    rep_times: dict[str, list[float]] = {}
-    rep_converged: dict[str, bool] = {}
+    timings = Timings()
+    queries = timings.queries
     counts: dict[str, int] = {}
     for name, p in pats.items():
-        walls, seen = [], set()
-
-        def improving() -> bool:
-            return len(walls) < 2 or walls[-1] < 0.95 * min(walls[:-1])
-
-        while len(walls) < max(1, reps) or (len(walls) < 10 and improving()):
-            t0 = time.monotonic()
-            c = compile_match(symmetrized(edges), p, edges_canonical=edges).df.count()
-            walls.append(time.monotonic() - t0)
-            seen.add(c)
-        assert len(seen) == 1, (name, seen)
-        counts[name] = seen.pop()
-        queries[name] = min(walls)
-        rep_times[name] = [round(w, 3) for w in walls]
-        rep_converged[name] = not improving()
+        counts[name], seen = timings.measure(name, lambda: match(edges, p).count(), reps)
+        assert len(set(seen)) == 1, (name, seen)
 
     out = {
         "metric": "pattern-count wall seconds (generic compiler, canonical "
@@ -348,9 +337,7 @@ def run_patterns(
         "cores": n_cores,
         "n_edges": n_edges,
         "reps": reps,
-        "rep_times": rep_times,
-        "converged": all(rep_converged.values()),
-        "rep_converged": rep_converged,
+        **timings.reps_fields(),
         "counts": counts,
         **{f"{k}_edges_per_sec": round(n_edges / v, 1) for k, v in queries.items()},
     }
@@ -380,30 +367,30 @@ def run_fsm(cores: int | None, sf: float, reps: int = 3, support: int = 2000) ->
     g.unpersist()
     src.unpersist()
 
-    walls, runs = [], []
-    for _ in range(max(1, reps)):
+    def mine():
         lm: list[dict] = []
-        t0 = time.monotonic()
         res = fsm(edges, verts, support=support, max_vertices=4,
                   max_edges=3, level_metrics=lm)
-        walls.append(time.monotonic() - t0)
-        runs.append((sorted((p.to_string(), s) for p, s in res), lm))
+        return sorted((p.to_string(), s) for p, s in res), lm
+
+    timings = Timings()
+    best, runs = timings.measure("fsm", mine, reps, max_reps=reps)
     # counts must be stable across reps (determinism evidence)
     assert all(r[0] == runs[0][0] for r in runs), "FSM results unstable"
-    best = walls.index(min(walls))
+    wall = round(timings.queries["fsm"], 3)
     out = {
         "metric": "FSM wall seconds (max 3 edges, MNI support threshold, "
         "lang labels), min over reps",
-        "value": round(min(walls), 3),
+        "value": wall,
         "unit": "sec",
-        "queries": {"fsm": round(min(walls), 3)},
+        "queries": {"fsm": wall},
         "sf": sf,
         "cores": n_cores,
         "n_edges": n_edges,
         "support": support,
         "n_frequent": len(runs[0][0]),
-        "levels": runs[best][1],
-        "rep_times": [round(w, 3) for w in walls],
+        "levels": best[1],
+        "rep_times": timings.rep_times["fsm"],
     }
     spark.stop()
     return out
@@ -411,7 +398,7 @@ def run_fsm(cores: int | None, sf: float, reps: int = 3, support: int = 2000) ->
 
 def run_subprocess(
     cores: int, sf: float, shuffle: int | None = None, reps: int = 3,
-    patterns: bool = False,
+    patterns: bool = False, skewed: bool = False,
 ) -> dict:
     cmd = [sys.executable, __file__, "--cores", str(cores), "--sf", str(sf),
            "--reps", str(reps)]
@@ -419,6 +406,8 @@ def run_subprocess(
         cmd += ["--shuffle", str(shuffle)]
     if patterns:
         cmd += ["--patterns"]
+    if skewed:
+        cmd += ["--skewed"]
     proc = subprocess.run(cmd, capture_output=True, text=True, check=True)
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
@@ -484,8 +473,10 @@ def main() -> None:
             }
             print(json.dumps(out))
             return
-        small = run_subprocess(args.n, args.scale_sf, shuffle, args.reps)
-        big = run_subprocess(4 * args.n, args.scale_sf, shuffle, args.reps)
+        small = run_subprocess(args.n, args.scale_sf, shuffle, args.reps,
+                               skewed=args.skewed)
+        big = run_subprocess(4 * args.n, args.scale_sf, shuffle, args.reps,
+                             skewed=args.skewed)
         effs = {}
         for k in ("pagerank_sec_per_superstep", "pagerank_csr_sec_per_superstep",
                   "cc_sec_per_superstep"):
@@ -496,7 +487,8 @@ def main() -> None:
             small["queries"]["triangle_count"] / (4 * big["queries"]["triangle_count"]), 3
         )
         out = {
-            "metric": "scaling efficiency N->4N cores (per-superstep, steady state)",
+            "metric": ("skewed (power-law hub) " if args.skewed else "")
+            + "scaling efficiency N->4N cores (per-superstep, steady state)",
             "value": effs["pagerank_efficiency"],
             "unit": "ratio",
             "queries": big["queries"],

@@ -42,7 +42,6 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.patterns.canonical import (
     automorphisms,
     canonical_form,
@@ -210,7 +209,6 @@ def mni_supports_level(
     from concurrent.futures import ThreadPoolExecutor
 
     spark = edges.sparkSession
-    sym = symmetrized(edges)
     expected = {pid: len(_true_orbits(g)) for pid, g in enumerate(candidates)}
     shapes: dict[tuple, tuple[SmallGraph, list]] = {}
     for pid, g in enumerate(candidates):
@@ -231,7 +229,7 @@ def mni_supports_level(
             lcols + ["pid", "wl"] + [f"o{p}" for p in ps],
             _label_tuple_map(shape, members, labels),
         )
-        m = compile_match(sym, shape, edges_canonical=edges).df
+        m = compile_match(edges, shape).df
         for p in ps:
             m = m.join(
                 vertices.select(F.col("v").alias(f"v{p}"), F.col("label").alias(f"l{p}")),
@@ -294,8 +292,7 @@ def support_at_least(
         return True
     if not orbits:
         return False
-    sym = symmetrized(edges)
-    m = compile_match(sym, pattern, vertices=vertices, edges_canonical=edges).df
+    m = compile_match(edges, pattern, vertices=vertices).df
     need = math.ceil(threshold / max(len(o) for o in orbits))
     # limit().count() truncates the match stream at `need` rows without
     # moving any row to the driver (take() would collect them)

@@ -23,7 +23,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import kcore, symmetrized
+from peregrine_spark.graph.build import kcore
 from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
 from peregrine_spark.plans.compiler import MatchPlan, compile_match
 from peregrine_spark.plans.counts import convert_counts
@@ -37,9 +37,7 @@ def match(
     vertices: DataFrame | None = None,
 ) -> DataFrame:
     """Unique matches of ``pattern`` in the canonical (src<dst) edge table."""
-    return compile_match(
-        symmetrized(edges), pattern, vertices, edges_canonical=edges
-    ).df
+    return compile_match(edges, pattern, vertices).df
 
 
 def _strip_anti(p: SmallGraph) -> SmallGraph:
@@ -70,7 +68,6 @@ def _is_vertex_induced_motif_set(patterns: list[SmallGraph]) -> bool:
 
 
 def _count_one(
-    sym: DataFrame,
     edges: DataFrame,
     p: SmallGraph,
     vertices: DataFrame | None,
@@ -82,11 +79,10 @@ def _count_one(
         fc = fast_count(edges, p)
         if fc is not None:
             return int(fc.collect()[0]["cnt"])
-    return compile_match(sym, p, vertices, edges_canonical=edges).df.count()
+    return compile_match(edges, p, vertices).df.count()
 
 
 def _count_all(
-    sym: DataFrame,
     edges: DataFrame,
     patterns: list[SmallGraph],
     vertices: DataFrame | None,
@@ -101,11 +97,11 @@ def _count_all(
     operators/fsm.py:mni_supports_level, runs its per-shape jobs on driver
     threads the same way)."""
     if concurrency <= 1 or len(patterns) <= 1:
-        return [_count_one(sym, edges, p, vertices) for p in patterns]
+        return [_count_one(edges, p, vertices) for p in patterns]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=concurrency) as ex:
-        return list(ex.map(lambda p: _count_one(sym, edges, p, vertices), patterns))
+        return list(ex.map(lambda p: _count_one(edges, p, vertices), patterns))
 
 
 def count(
@@ -118,15 +114,14 @@ def count(
     evaluates that many pattern-count jobs at once from driver threads."""
     if isinstance(patterns, SmallGraph):
         patterns = [patterns]
-    sym = symmetrized(edges)
     if _is_vertex_induced_motif_set(patterns):
         stripped = [_strip_anti(p) for p in patterns]
-        cs = _count_all(sym, edges, stripped, vertices, concurrency)
+        cs = _count_all(edges, stripped, vertices, concurrency)
         converted = convert_counts(list(zip(stripped, cs)))
         # map converted counts back to the caller's (anti-edged) patterns
         conv = {p: c for p, c in converted}  # SmallGraph __eq__/__hash__ = canonical
         return [(orig, conv[strip]) for orig, strip in zip(patterns, stripped)]
-    cs = _count_all(sym, edges, patterns, vertices, concurrency)
+    cs = _count_all(edges, patterns, vertices, concurrency)
     return list(zip(patterns, cs))
 
 
@@ -195,8 +190,7 @@ def count_incremental(
     running value can stop the query, not as the default counter."""
     if chunks < 1:
         raise ValueError(f"chunks must be >= 1, got {chunks}")
-    sym = symmetrized(edges)
-    plan = compile_match(sym, pattern, vertices, edges_canonical=edges)
+    plan = compile_match(edges, pattern, vertices)
     chunk_col = _vcol_of(plan)
     row = edges.agg(
         F.least(F.min("src"), F.min("dst")).alias("lo"),

@@ -33,10 +33,12 @@ the positional ``mapping`` of the reference's CompleteMatch
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.patterns.small_graph import SmallGraph
 from peregrine_spark.patterns.po import symmetry_conditions
 
@@ -66,16 +68,12 @@ def _order_closure(conds: list[tuple[int, int]]) -> set[tuple[int, int]]:
 
 @dataclass
 class MatchPlan:
-    """Compiled plan metadata (driver-side 'AnalyzedPattern' analogue)."""
+    """A compiled pattern: the matching order (``order[0]`` is the
+    max-degree pattern vertex, :func:`count_incremental`'s chunk axis) and
+    the DataFrame of unique matches."""
 
-    pattern: SmallGraph
     order: list[int]
-    conditions: list[tuple[int, int]]
     df: DataFrame = field(repr=False)
-
-    @property
-    def match_columns(self) -> list[str]:
-        return [_vcol(p) for p in sorted(self.order)]
 
 
 def matching_order(pattern: SmallGraph) -> list[int]:
@@ -102,56 +100,42 @@ def matching_order(pattern: SmallGraph) -> list[int]:
 
 
 def compile_match(
-    edges_sym: DataFrame,
+    edges: DataFrame,
     pattern: SmallGraph,
     vertices: DataFrame | None = None,
-    apply_symmetry: bool = True,
-    edges_canonical: DataFrame | None = None,
 ) -> MatchPlan:
     """Compile ``pattern`` into a DataFrame of unique matches.
 
-    edges_sym: symmetrized edge table (src, dst) — both directions.
+    edges: the canonical edge table (src < dst, each undirected edge once).
     vertices: (v, label) table, required for labelled patterns.
-    apply_symmetry=False enumerates all automorphic images (for debugging /
-    oracle cross-checks).
-    edges_canonical: the CANONICAL (src < dst, each undirected edge once)
-    base table edges_sym was built from, when the caller has it. Join legs
-    whose endpoints the symmetry partial order relates then read this table
-    directly — half the scan and half the join build side, with the ``<``
-    predicate enforced by the data orientation instead of a filter. This is
-    the join-world form of the reference's bounded (ordered) adjacency scan
-    (core/PatternMatching.hh:524-546) that actually pays: filtering the
-    symmetrized UNION per leg instead was measured ~15% slower (round 3)
-    for re-scanning both halves; reading the base table never touches the
-    swapped half at all.
+
+    Join legs whose endpoints the symmetry partial order relates read
+    ``edges`` directly, oriented so that the ``<`` holds: half the scan and
+    half the join build side, the predicate enforced by the data
+    orientation instead of a filter. This is the join-world form of the
+    reference's bounded (ordered) adjacency scan
+    (core/PatternMatching.hh:524-546); filtering the symmetrized UNION per
+    leg instead was measured ~15% slower (round 3) for re-scanning both
+    halves. Only legs the order leaves unrelated read the symmetrized
+    table, which is built here.
     """
     order = matching_order(pattern)
-    conds = symmetry_conditions(pattern) if apply_symmetry else []
     # M6: the closure supplies bound predicates at the EARLIEST level where
     # both endpoints are matched (a chain l<m<g constrains (l, g) even
-    # before m joins) and lets ordered join legs read the half edge table
-    lt = _order_closure(conds)
+    # before m joins) and lets ordered join legs read the canonical table
+    lt = _order_closure(symmetry_conditions(pattern))
     cond_set = {(min(a, b), max(a, b)) for a, b in lt}
     adj_pairs = set(pattern.true_edges())
+    sym = cache(lambda: symmetrized(edges))
 
-    def leg(lead: int, pk: int) -> DataFrame:
-        """Edge leg binding (lead -> pk). When the partial order relates the
-        two endpoints the leg reads the canonical half directly (see
-        ``edges_canonical`` in the docstring) — the ordered adjacency scan,
-        half the rows, the ``<`` enforced by orientation."""
-        if edges_canonical is not None:
-            if (lead, pk) in lt:  # v_lead < v_pk in every surviving match
-                return edges_canonical.select(
-                    F.col("src").alias(_vcol(lead)), F.col("dst").alias(_vcol(pk))
-                )
-            if (pk, lead) in lt:
-                return edges_canonical.select(
-                    F.col("dst").alias(_vcol(lead)), F.col("src").alias(_vcol(pk))
-                )
-        return edges_sym.select(
-            F.col("src").alias(_vcol(lead)), F.col("dst").alias(_vcol(pk))
-        )
-    labelling = pattern.labelling().value if pattern.labels else "unlabelled"
+    def leg(a: int, b: int) -> DataFrame:
+        """Edge leg binding (a -> b): the canonical table, oriented, when
+        the partial order relates a and b, else the symmetrized table."""
+        if (a, b) in lt:  # v_a < v_b in every surviving match
+            return edges.select(F.col("src").alias(_vcol(a)), F.col("dst").alias(_vcol(b)))
+        if (b, a) in lt:
+            return edges.select(F.col("dst").alias(_vcol(a)), F.col("src").alias(_vcol(b)))
+        return sym().select(F.col("src").alias(_vcol(a)), F.col("dst").alias(_vcol(b)))
 
     known_labels = sorted({l for l in pattern.labels.values() if l != -1})
 
@@ -167,22 +151,14 @@ def compile_match(
             df = df.where(F.col(f"_l{p}") == F.lit(lab))
         return df.drop(f"_l{p}")
 
-    # pairs already guaranteed by a canonical-table leg's orientation —
+    # pairs already guaranteed by an inner or semi leg's orientation —
     # their `<` predicate would be redundant plan noise
     enforced: set[tuple[int, int]] = set()
-
-    def leg_enforces(lead: int, pk: int) -> None:
-        if edges_canonical is None:
-            return  # symmetrized legs enforce nothing — predicates must apply
-        if (lead, pk) in lt:
-            enforced.add((lead, pk))
-        elif (pk, lead) in lt:
-            enforced.add((pk, lead))
 
     # seed: first pattern edge (order[0], order[1])
     p0, p1 = order[0], order[1]
     m = leg(p0, p1)
-    leg_enforces(p0, p1)
+    enforced |= {(p0, p1), (p1, p0)} & lt
     matched = [p0, p1]
     # apply any conditions valid on the seed (closure pairs included)
     for (l, g) in sorted(lt):
@@ -195,11 +171,11 @@ def compile_match(
         nbrs = sorted(pattern.adj[pk] & set(matched))
         lead, rest = nbrs[0], nbrs[1:]
         m = m.join(leg(lead, pk), _vcol(lead))
-        leg_enforces(lead, pk)
+        enforced |= {(lead, pk), (pk, lead)} & lt
         # extra adjacency constraints: semi-joins against the edge table
         for nb in rest:
             m = m.join(leg(nb, pk), [_vcol(nb), _vcol(pk)], "left_semi")
-            leg_enforces(nb, pk)
+            enforced |= {(nb, pk), (pk, nb)} & lt
         # symmetry/bound conditions that became applicable (closure pairs:
         # a chain l<m<g binds (l, g) even when m is not matched yet)
         for (l, g) in sorted(lt):
@@ -217,23 +193,11 @@ def compile_match(
         matched.append(pk)
 
     # anti-edges between true vertices → anti-join against the edge table
-    # (the ordered-pair case reads the canonical half: if v_a < v_b in every
+    # (an ordered pair reads the canonical table: if v_a < v_b in every
     # match, the edge — when it exists — is the canonical row (v_a, v_b))
     for (a, b) in pattern.anti_edge_list():
         if a in matched and b in matched:
-            if edges_canonical is not None and (a, b) in lt:
-                e = edges_canonical.select(
-                    F.col("src").alias(_vcol(a)), F.col("dst").alias(_vcol(b))
-                )
-            elif edges_canonical is not None and (b, a) in lt:
-                e = edges_canonical.select(
-                    F.col("dst").alias(_vcol(a)), F.col("src").alias(_vcol(b))
-                )
-            else:
-                e = edges_sym.select(
-                    F.col("src").alias(_vcol(a)), F.col("dst").alias(_vcol(b))
-                )
-            m = m.join(e, [_vcol(a), _vcol(b)], "left_anti")
+            m = m.join(leg(a, b), [_vcol(a), _vcol(b)], "left_anti")
 
     # anti-vertices: no data vertex outside the match adjacent to ALL
     # anti-parents (core/PatternMatching.hh:380-488 semantics)
@@ -244,10 +208,10 @@ def compile_match(
         x = "_x"
         viol = m
         lead, rest = parents[0], parents[1:]
-        e = edges_sym.select(F.col("src").alias(_vcol(lead)), F.col("dst").alias(x))
+        e = sym().select(F.col("src").alias(_vcol(lead)), F.col("dst").alias(x))
         viol = viol.join(e, _vcol(lead))
         for nb in rest:
-            e2 = edges_sym.select(F.col("src").alias(_vcol(nb)), F.col("dst").alias(x))
+            e2 = sym().select(F.col("src").alias(_vcol(nb)), F.col("dst").alias(x))
             viol = viol.join(e2, [_vcol(nb), x], "left_semi")
         for q in matched:
             viol = viol.where(F.col(x) != F.col(_vcol(q)))
@@ -266,4 +230,4 @@ def compile_match(
         m = m.join(viol.select(*mcols).distinct(), mcols, "left_anti")
 
     cols = [_vcol(p) for p in sorted(matched)]
-    return MatchPlan(pattern=pattern, order=order, conditions=conds, df=m.select(*cols))
+    return MatchPlan(order=order, df=m.select(*cols))

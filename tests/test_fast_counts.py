@@ -10,7 +10,6 @@ import math
 
 import pytest
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.operators.match import count, count_motifs
 from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
 from peregrine_spark.plans.compiler import compile_match
@@ -59,10 +58,9 @@ def test_no_fast_path_for_long_cycles_and_labels(spark):
 def test_count_uses_fast_paths_consistently(spark):
     pairs = er_graph(11, 0.4, 5)
     e = edges_df(spark, pairs)
-    sym = symmetrized(e)
     for pattern in [PatternGenerator.clique(3), PatternGenerator.star(4)]:
         via_count = count(e, pattern)[0][1]
-        via_compiler = compile_match(sym, pattern).df.count()
+        via_compiler = compile_match(e, pattern).df.count()
         assert via_count == via_compiler
 
 
@@ -86,16 +84,13 @@ def test_star_count_exact_at_hub_degree_beyond_2_53(spark):
 
 
 def test_cycle4_fast_path_matches_compiler(spark):
-    from peregrine_spark.graph.build import symmetrized
     from peregrine_spark.patterns.small_graph import PatternGenerator
     from peregrine_spark.plans.compiler import compile_match
     from peregrine_spark.plans.fast_counts import cycle4_count, fast_count
 
     pairs = er_graph(45, 0.15, seed=23)
     e = edges_df(spark, pairs)
-    via_compiler = (
-        compile_match(symmetrized(e), PatternGenerator.cycle(4)).df.count()
-    )
+    via_compiler = compile_match(e, PatternGenerator.cycle(4)).df.count()
     via_fast = cycle4_count(e).collect()[0]["cnt"]
     assert via_fast == via_compiler
     # dispatch picks the closed form for the cycle-4 shape

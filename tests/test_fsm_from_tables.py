@@ -75,7 +75,7 @@ def test_mni_support_wedge(spark):
     # star: center 1 with leaves 2,3,4 -> wedge matches: C(3,2)=3
     e = edges_df(spark, [(1, 2), (1, 3), (1, 4)])
     wedge = PatternGenerator.star(3)
-    m = compile_match(symmetrized(e), wedge).df
+    m = compile_match(e, wedge).df
     assert m.count() == 3
     # center domain {1}; leaf domain {2,3,4} -> support = 1
     assert mni_support(m, wedge) == 1
@@ -84,7 +84,7 @@ def test_mni_support_wedge(spark):
 def test_mni_support_triangle(spark):
     e = edges_df(spark, [(1, 2), (1, 3), (2, 3), (3, 4), (2, 4)])
     tri = PatternGenerator.clique(3)
-    m = compile_match(symmetrized(e), tri).df
+    m = compile_match(e, tri).df
     assert m.count() == 2
     # all positions share one orbit; distinct vertices in triangles: {1,2,3,4}
     assert mni_support(m, tri) == 4
@@ -161,18 +161,18 @@ def test_mni_support_by_label_matches_explicit(spark):
         "v long, label long",
     )
     wedge_pl = SmallGraph(edges=[(1, 2), (1, 3)]).set_label(1, 0).set_label(2, 1).set_label(3, -1)
-    m = compile_match(symmetrized(e), wedge_pl, vertices=verts).df
+    m = compile_match(e, wedge_pl, vertices=verts).df
     per = mni_support_by_label(m, wedge_pl, 3, verts)
     assert set(per) == {2}  # only label 2 is outside the known set {0, 1}
     explicit = SmallGraph(edges=[(1, 2), (1, 3)]).set_label(1, 0).set_label(2, 1).set_label(3, 2)
-    me = compile_match(symmetrized(e), explicit, vertices=verts).df
+    me = compile_match(e, explicit, vertices=verts).df
     assert per[2] == mni_support(me, explicit)
 
 
 def test_anti_edge_compiles_to_left_anti_join(spark):
     e = edges_df(spark, [(1, 2), (1, 3), (2, 3), (1, 4)])
     p = SmallGraph(edges=[(1, 2), (1, 3)], anti_edges=[(2, 3)])
-    m = compile_match(symmetrized(e), p).df
+    m = compile_match(e, p).df
     plan = m._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" in plan
 
@@ -184,7 +184,7 @@ def test_support_at_least_matches_full_count(spark):
     pairs = er_graph(14, 0.3, 9)
     e = edges_df(spark, pairs)
     wedge = PatternGenerator.star(3)
-    m = compile_match(symmetrized(e), wedge).df
+    m = compile_match(e, wedge).df
     full = mni_support(m, wedge)
     assert full > 2
     for t in [1, full - 1, full, full + 1, full * 10]:
@@ -208,7 +208,6 @@ def test_mni_supports_level_matches_single(spark):
 
     pairs = er_graph(30, 0.25, seed=17)
     e = edges_df(spark, pairs)
-    sym = symmetrized(e)
     verts = (
         symmetrized(e).select(F.col("src").alias("v")).distinct()
         .select("v", (F.col("v") % 3).alias("label"))
@@ -223,9 +222,9 @@ def test_mni_supports_level_matches_single(spark):
     )
     got = mni_supports_level(e, verts, [lab_wedge, wild_wedge], [0, 1, 2])
 
-    m0 = compile_match(sym, lab_wedge, vertices=verts).df
+    m0 = compile_match(e, lab_wedge, vertices=verts).df
     exp0 = mni_support(m0, lab_wedge)
-    m1 = compile_match(sym, wild_wedge, vertices=verts).df
+    m1 = compile_match(e, wild_wedge, vertices=verts).df
     exp1 = mni_support_by_label(m1, wild_wedge, 3, verts)
     assert got.get((0, None), 0) == exp0
     for wl, s in exp1.items():
@@ -243,14 +242,13 @@ def _labelled(edges, labels):
 def _explicit_supports(e, verts, candidates, labels):
     """{(pid, wl): support > 0} from one explicit compile_match plan and
     mni_support per candidate, and per wildcard label."""
-    sym = symmetrized(e)
     out = {}
     for pid, g in enumerate(candidates):
         wc = next((v for v, l in g.labels.items() if l == -1), None)
         own = {l for l in g.labels.values() if l != -1}
         for wl in [None] if wc is None else [l for l in labels if l not in own]:
             h = g if wc is None else g.copy().set_label(wc, wl)
-            m = compile_match(sym, h, vertices=verts, edges_canonical=e).df
+            m = compile_match(e, h, vertices=verts).df
             s = mni_support(m, h)
             if s:
                 out[(pid, wl)] = s
@@ -282,7 +280,7 @@ def test_mni_supports_level_matches_explicit_plans(spark, seed):
         [(1, 2), (2, 3), (3, 4)], [(1, 2), (1, 3), (1, 4)],
     ]
     k6 = [(a, b) for a in range(1, 7) for b in range(a + 1, 7)]
-    assert compile_match(symmetrized(e), SmallGraph(edges=k6)).df.count() == 0
+    assert compile_match(e, SmallGraph(edges=k6)).df.count() == 0
     candidates = [
         _labelled(wedge, {1: 1, 2: 0, 3: 0}),  # A-B-A: equal-label orbit
         _labelled(tri, {1: 0, 2: 0, 3: 1}),  # A-A-B triangle

@@ -130,3 +130,22 @@ def test_ingest_plan_shape(spark):
             for evaluator in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
                 assert evaluator not in plan, (name, plan)
     g.unpersist()
+
+
+def test_ordered_legs_read_canonical_table(spark):
+    """compile_match takes the canonical (src<dst) table and symmetrizes it
+    only for legs the symmetry order leaves unrelated. The closure of a
+    clique's order relates every vertex pair, so the 4-clique plan reads
+    the canonical table on every leg and has no Union. A 3-star's
+    centre-leaf pairs are unordered, so its plan still has one."""
+    from peregrine_spark.patterns.small_graph import PatternGenerator
+    from peregrine_spark.plans.compiler import compile_match
+    from tests.conftest import edges_df
+
+    e = edges_df(spark, [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)])
+
+    def optimized(pattern) -> str:
+        return compile_match(e, pattern).df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "Union" not in optimized(PatternGenerator.clique(4))
+    assert "Union" in optimized(PatternGenerator.star(3))
