@@ -50,14 +50,7 @@ from peregrine_spark.patterns.canonical import (
 from peregrine_spark.patterns.po import automorphism_sets
 from peregrine_spark.patterns.small_graph import SmallGraph
 from peregrine_spark.plans.compiler import compile_match
-from peregrine_spark.session import conf_override, literal_table
-
-_INHERITED_PROPERTIES = (
-    "spark.jobGroup.id",
-    "spark.job.description",
-    "spark.job.interruptOnCancel",
-    "spark.scheduler.pool",
-)
+from peregrine_spark.session import conf_override, literal_table, thread_target
 
 
 def _true_orbits(pattern: SmallGraph) -> list[list[int]]:
@@ -247,16 +240,9 @@ def mni_supports_level(
             .collect()
         )
 
-    # worker threads start with empty Spark local properties: copy the
+    # worker threads start with empty Spark local properties: inherit the
     # caller's, so its job group (and cancellation) covers these jobs too
-    sc = spark.sparkContext
-    props = {k: sc.getLocalProperty(k) for k in _INHERITED_PROPERTIES}
-
-    def run(item) -> list:
-        for k, v in props.items():
-            sc.setLocalProperty(k, v)
-        return eval_shape(*item)
-
+    run = thread_target(spark, lambda item: eval_shape(*item))
     with ThreadPoolExecutor(max_workers=min(8, len(shapes))) as ex:
         for rows in ex.map(run, shapes.values()):
             for r in rows:

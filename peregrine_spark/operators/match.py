@@ -28,7 +28,7 @@ from peregrine_spark.patterns.small_graph import PatternGenerator, SmallGraph
 from peregrine_spark.plans.compiler import MatchPlan, compile_match
 from peregrine_spark.plans.counts import convert_counts
 from peregrine_spark.plans.fast_counts import _shape, clique_rows, fast_count
-from peregrine_spark.session import release_checkpoint
+from peregrine_spark.session import release_checkpoint, thread_target
 
 
 def match(
@@ -100,8 +100,11 @@ def _count_all(
         return [_count_one(edges, p, vertices) for p in patterns]
     from concurrent.futures import ThreadPoolExecutor
 
+    # worker threads start with empty Spark local properties: inherit the
+    # caller's, so its job group (and cancellation) covers these jobs too
+    one = thread_target(edges.sparkSession, lambda p: _count_one(edges, p, vertices))
     with ThreadPoolExecutor(max_workers=concurrency) as ex:
-        return list(ex.map(lambda p: _count_one(edges, p, vertices), patterns))
+        return list(ex.map(one, patterns))
 
 
 def count(

@@ -11,6 +11,7 @@ import logging
 import os
 from contextlib import contextmanager
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
@@ -67,6 +68,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def thread_target(spark: SparkSession, fn):
+    """``fn`` wrapped for a driver worker thread so that its jobs carry the
+    caller's Spark local properties (job group, description, scheduler
+    pool) and session tags, as they are when this is called. Without
+    PySpark's pinned-thread mode (``PYSPARK_PIN_THREAD=false``) Python
+    threads share JVM threads, so no property can be handed to one; ``fn``
+    is then returned as it is."""
+    wrap = inheritable_thread_target(spark)
+    # off pinned-thread mode, inheritable_thread_target returns its argument
+    return fn if wrap is spark else wrap(fn)
 
 
 @contextmanager

@@ -64,6 +64,35 @@ def test_count_uses_fast_paths_consistently(spark):
         assert via_count == via_compiler
 
 
+def test_count_concurrency_keeps_callers_job_group(spark):
+    """count(concurrency>1) submits its per-pattern jobs from driver
+    threads; those jobs stay in the caller's job group (so cancelling or
+    reading the group covers them) and give the serial counts."""
+    e = edges_df(spark, er_graph(20, 0.3, 3))
+    pats = [PatternGenerator.cycle(4), PatternGenerator.chain(4), PatternGenerator.clique(3)]
+    sc = spark.sparkContext
+    sc.setJobGroup("count-threads", "count-threads")
+    try:
+        threaded = count(e, pats, concurrency=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("count-threads")) >= 1
+    assert [c for _, c in threaded] == [c for _, c in count(e, pats, concurrency=1)]
+
+
+def test_count_concurrency_without_pinned_threads(spark, monkeypatch):
+    """Off PySpark's pinned-thread mode (PYSPARK_PIN_THREAD=false)
+    inheritable_thread_target returns its argument, here the session;
+    count(concurrency>1) then runs its workers unwrapped."""
+    import peregrine_spark.session as session
+
+    monkeypatch.setattr(session, "inheritable_thread_target", lambda f: f)
+    e = edges_df(spark, er_graph(20, 0.3, 3))
+    pats = [PatternGenerator.cycle(4), PatternGenerator.chain(4), PatternGenerator.clique(3)]
+    assert count(e, pats, concurrency=3) == count(e, pats, concurrency=1)
+
+
 def test_motif4_counts_match_oracle(spark):
     pairs = er_graph(10, 0.45, 9)
     e = edges_df(spark, pairs)
