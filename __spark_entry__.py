@@ -18,10 +18,10 @@ driver's testdata tables:
 * the training-data-pipeline tier (dedup / similarity / text analysis /
   multimodal plumbing) runs over ``documents`` and ``embeddings``.
 
-Entries without an ``oracle_sql`` (MinHash-LSH, SimHash, LSH-ANN,
-IVF-ANN, LSH cosine pairs) are sketch-based: their *verified* semantics
-are pytest-checked against the exact operators instead
-(tests/test_text_pipeline.py recall/precision checks).
+Every entry has an ``oracle_sql`` (the citeseer ones when the reference
+checkout is present), the sketch-based ones included: their hashes,
+hyperplanes and IVF quantizer are deterministic, so the DuckDB oracle
+replicates each sketch exactly.
 """
 
 from __future__ import annotations

@@ -94,47 +94,6 @@ def mni_support(matches: DataFrame, pattern: SmallGraph) -> int:
     return int(row["s"])
 
 
-def mni_support_by_label(
-    matches: DataFrame,
-    pattern: SmallGraph,
-    wildcard: int,
-    vertices: DataFrame,
-) -> dict[int, int]:
-    """Per-discovered-label MNI supports of a partially-labelled pattern in
-    ONE aggregation pass — the Spark form of the reference's vector
-    aggregator (core/Peregrine.hh:1038-1199): group the orbit-exploded match
-    table by the label the wildcard vertex matched, then min over orbits.
-
-    Valid because instantiating the wildcard with any concrete label outside
-    the pattern's known set leaves the automorphism orbits unchanged (the
-    wildcard is already a distinct colour)."""
-    orbits = _true_orbits(pattern)
-    if not orbits:
-        return {}
-    wl = vertices.select(
-        F.col("v").alias(f"v{wildcard}"), F.col("label").alias("_wl")
-    )
-    m = matches.join(wl, f"v{wildcard}")
-    entries = [
-        F.struct(F.lit(i).alias("o"), F.col(f"v{p}").alias("x"))
-        for i, orbit in enumerate(orbits)
-        for p in orbit
-    ]
-    stacked = m.select(
-        "_wl", F.explode(F.array(*entries)).alias("e")
-    ).select("_wl", F.col("e.o").alias("o"), F.col("e.x").alias("x"))
-    rows = (
-        stacked.groupBy("_wl", "o")
-        .agg(F.count_distinct("x").alias("n"))
-        .groupBy("_wl")
-        .agg(F.min("n").alias("s"), F.count(F.lit(1)).alias("k"))
-        .collect()
-    )
-    return {
-        int(r["_wl"]): int(r["s"]) for r in rows if r["k"] == len(orbits)
-    }
-
-
 def _label_tuple_map(
     shape: SmallGraph,
     members: list[tuple[int, SmallGraph, dict[int, int]]],

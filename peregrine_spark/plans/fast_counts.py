@@ -41,8 +41,8 @@ def oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def _comb(col: Column, k: int) -> Column:
-    """C(col, k) as a column expression (k small, exact integer result).
+def _comb_dec(col: Column, k: int) -> Column:
+    """C(col, k) as an exact decimal(38,0) column (k small).
 
     Iterative exact form: C(n, i) = C(n, i-1) * (n-i+1) / i — every
     intermediate is itself an exact binomial, so the division is exact.
@@ -50,16 +50,9 @@ def _comb(col: Column, k: int) -> Column:
     numerator overflows at hub degrees (~2e6 for k=3) and a double
     division loses precision past 2^53; decimal keeps ~1e38 headroom
     (intermediate c*(n-i+1) <= C(n,i)*n < 2^63 * 2^63 ≈ 8.5e37) while the
-    division result stays exact because it is integral.
-    """
-    return _comb_dec(col, k).cast("long")
-
-
-def _comb_dec(col: Column, k: int) -> Column:
-    """C(col, k) as an exact decimal(38,0) column — callers that SUM the
-    binomials keep the aggregation in decimal too (a long sum can wrap
-    silently; decimal(38,0) has ~1e38 headroom and Spark returns null on
-    overflow instead of wrapping)."""
+    division result stays exact because it is integral. Callers that SUM
+    the binomials keep the aggregation in decimal too (a long sum can wrap
+    silently; Spark returns null on decimal overflow instead of wrapping)."""
     dec = "decimal(38,0)"
     c = F.lit(1).cast(dec)
     for i in range(1, k + 1):

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from peregrine_spark.session import release_checkpoint
+from peregrine_spark.text.dedup import band_pairs
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -43,8 +44,59 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("_norm", _norm(F.col(vec_col)))
+def _side(
+    df: DataFrame, vec_col: str, id_col: str, name: str, p: str, *extra: Column
+) -> DataFrame:
+    """One side of a cosine join: (name, <p>v, <p>n, *extra) — the id, the
+    vector and its norm, computed once per row rather than once per pair
+    (and before ``extra`` explodes a probe side)."""
+    return df.withColumn("_norm", _norm(F.col(vec_col))).select(
+        F.col(id_col).alias(name),
+        F.col(vec_col).alias(f"{p}v"),
+        F.col("_norm").alias(f"{p}n"),
+        *extra,
+    )
+
+
+def _cos(p: str, r: str) -> Column:
+    """Exact cosine between the vectors of the ``p`` and ``r`` sides."""
+    return _dot(F.col(f"{p}v"), F.col(f"{r}v")) / (
+        F.col(f"{p}n") * F.col(f"{r}n")
+    )
+
+
+def _top_k(
+    corpus: DataFrame, probes: DataFrame, k: int, on: str | None, broadcast: bool
+) -> DataFrame:
+    """Exact cosine re-rank of candidate (query, neighbour) pairs: the
+    ``corpus`` side is (neighbor_id, cv, cn[, on]), the ``probes`` side
+    (query_id, qv, qn[, on]); ``on=None`` pairs every query with the whole
+    corpus. A neighbour reached through several probes is scored once.
+    Returns (query_id, rank, neighbor_id, sim): rank 1..k by (sim desc,
+    neighbor_id asc), self excluded, sim rounded to 6dp."""
+    q = F.broadcast(probes) if broadcast else probes
+    pairs = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    scored = pairs.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", _cos("q", "c").alias("sim")
+    )
+    if on is not None:
+        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+    )
+
+
+def _pairs_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, sim) of the (a, av, an, b, bv, bn) pairs whose exact cosine,
+    rounded to 6dp, is >= threshold."""
+    return pairs.select(
+        "a", "b", F.round(_cos("a", "b"), 6).alias("sim")
+    ).where(F.col("sim") >= threshold)
 
 
 def cosine_topk(
@@ -64,30 +116,10 @@ def cosine_topk(
     broadcast of the query side — correct ONLY for small query sets (the
     common case: a probe batch against a large corpus). Pass False for large
     |Q| so Catalyst picks a shuffle join instead of OOMing executors."""
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_norm").alias("_cn"),
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.col("_norm").alias("_qn"),
-    )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    q_side = F.broadcast(q) if broadcast_queries else q
-    scored = (
-        c.crossJoin(q_side)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+    return _top_k(
+        _side(corpus, vec_col, id_col, "neighbor_id", "c"),
+        _side(queries, vec_col, id_col, "query_id", "q"),
+        k, None, broadcast_queries,
     )
 
 
@@ -149,43 +181,16 @@ def cosine_topk_lsh(
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes)
-
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_norm").alias("_cn"),
-        signature(F.col(vec_col), planes).alias("bucket"),
+    q = queries.withColumn("_sig", signature(F.col(vec_col), planes))
+    flips = range(n_planes) if multiprobe else []
+    probes = F.array(
+        F.col("_sig"), *[F.col("_sig").bitwiseXOR(F.lit(1 << p)) for p in flips]
     )
-    q = with_norm(queries, vec_col).withColumn(
-        "_sig", signature(F.col(vec_col), planes)
-    )
-    if multiprobe:
-        probes = F.array(
-            F.col("_sig"),
-            *[F.col("_sig").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
-        )
-    else:
-        probes = F.array(F.col("_sig"))
-    qp = q.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.col("_norm").alias("_qn"),
-        F.explode(probes).alias("bucket"),
-    )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    scored = (
-        c.join(F.broadcast(qp) if broadcast_queries else qp, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+    return _top_k(
+        _side(corpus, vec_col, id_col, "neighbor_id", "c",
+              signature(F.col(vec_col), planes).alias("bucket")),
+        _side(q, vec_col, id_col, "query_id", "q", F.explode(probes).alias("bucket")),
+        k, "bucket", broadcast_queries,
     )
 
 
@@ -201,21 +206,9 @@ def cosine_pairs(
     All-pairs O(n^2) by construction — the oracle baseline for the dedup
     tier (same role ``jaccard_pairs`` plays for text); the scale path is
     :func:`cosine_pairs_lsh`."""
-    n = with_norm(emb, vec_col)
-    a = n.select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("_av"),
-        F.col("_norm").alias("_an"),
-    )
-    b = n.select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("_bv"),
-        F.col("_norm").alias("_bn"),
-    )
-    sim = _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn"))
-    return (
-        a.join(b, F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("sim"))
-        .where(F.col("sim") >= threshold)
-    )
+    a = _side(emb, vec_col, id_col, "a", "a")
+    b = _side(emb, vec_col, id_col, "b", "b")
+    return _pairs_at_least(a.join(b, F.col("a") < F.col("b")), threshold)
 
 
 def cosine_pairs_lsh(
@@ -239,53 +232,28 @@ def cosine_pairs_lsh(
     >= threshold, so precision is exact and only recall is approximate
     (measured in tests).
 
-    ``max_bucket``: bands whose bucket exceeds this are dropped (a
-    degenerate band value — e.g. a zero-vector cluster — would otherwise
-    re-create the quadratic blowup; the cap bounds any bucket's join
-    contribution, the same guard ``minhash_lsh_pairs`` uses)."""
+    ``max_bucket``: the bucket cap of the band join
+    (:func:`~peregrine_spark.text.dedup.band_pairs`): a zero-vector cluster
+    would otherwise re-create the quadratic blowup."""
+    if not 1 <= bands <= n_planes:
+        raise ValueError("bands must be in 1..n_planes: each band needs a bit")
     if dim is None:
         dim = len(emb.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes)
     bits_per = n_planes // bands
-
-    n = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("_v"),
-        F.col("_norm").alias("_n"),
-        signature(F.col(vec_col), planes).alias("_sig"),
-    )
     mask = (1 << bits_per) - 1
-    banded = n.select(
-        "id", "_v", "_n",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.shiftright("_sig", bi * bits_per).bitwiseAND(
-                        F.lit(mask)
-                    ).alias("val"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("id", "_v", "_n", F.col("bk.band").alias("band"), F.col("bk.val").alias("val"))
-    counts = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("_bc"))
-    banded = banded.join(
-        counts.where(F.col("_bc") <= max_bucket).select("band", "val"),
-        ["band", "val"],
+    sig = signature(F.col(vec_col), planes).alias("_sig")
+    cand = band_pairs(
+        _side(emb, vec_col, id_col, "id", "", sig),
+        [
+            F.shiftright("_sig", bi * bits_per).bitwiseAND(F.lit(mask))
+            for bi in range(bands)
+        ],
+        max_bucket,
+        "v",
+        "n",
     )
-    left = banded.select("band", "val", F.col("id").alias("a"),
-                         F.col("_v").alias("_av"), F.col("_n").alias("_an"))
-    right = banded.select("band", "val", F.col("id").alias("b"),
-                          F.col("_v").alias("_bv"), F.col("_n").alias("_bn"))
-    cand = (
-        left.join(right, ["band", "val"])
-        .where(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    sim = _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn"))
-    return cand.select("a", "b", F.round(sim, 6).alias("sim")).where(
-        F.col("sim") >= threshold
-    )
+    return _pairs_at_least(cand, threshold)
 
 
 def ivf_centroids(
@@ -389,30 +357,10 @@ def cosine_topk_ivf(
     ``broadcast_queries``: as in ``cosine_topk_lsh`` — the exploded probe
     side is |Q| × nprobe rows; pass False for large query sets."""
     cents = centroids or ivf_centroids(corpus, n_cells, vec_col, id_col)
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_norm").alias("_cn"),
-        _nearest_cell(F.col(vec_col), cents).alias("cell"),
-    )
-    qp = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.col("_norm").alias("_qn"),
-        F.explode(_cell_ranking(F.col(vec_col), cents, nprobe)).alias("cell"),
-    )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    scored = (
-        c.join(F.broadcast(qp) if broadcast_queries else qp, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
+    return _top_k(
+        _side(corpus, vec_col, id_col, "neighbor_id", "c",
+              _nearest_cell(F.col(vec_col), cents).alias("cell")),
+        _side(queries, vec_col, id_col, "query_id", "q",
+              F.explode(_cell_ranking(F.col(vec_col), cents, nprobe)).alias("cell")),
+        k, "cell", broadcast_queries,
     )

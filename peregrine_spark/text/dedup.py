@@ -22,7 +22,7 @@ Scale notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.text.analysis import tokens
@@ -64,8 +64,64 @@ def shingle_table(
     )
 
 
-def _jaccard_from_counts(inter, na, nb):
-    return inter.cast("double") / (na + nb - inter).cast("double")
+def _jaccard_at_least(
+    sh: DataFrame, threshold: float, cand: DataFrame | None = None
+) -> DataFrame:
+    """(a, b, jaccard) with a < b whose exact Jaccard over the (id, sh)
+    shingle table, rounded to 6dp, is >= threshold: over every pair sharing
+    a shingle (``cand=None``) or over the (a, b) candidate pairs ``cand``.
+    Set sizes, then the intersection count per pair, then the ratio."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    a = sh.select(F.col("id").alias("a"), "sh")
+    b = sh.select(F.col("id").alias("b"), "sh")
+    if cand is None:
+        shared = a.join(b, "sh").where(F.col("a") < F.col("b"))
+    else:
+        shared = cand.join(a, "a").join(b, ["b", "sh"])
+    inter = shared.groupBy("a", "b").agg(F.count(F.lit(1)).alias("i"))
+    jac = F.col("i").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("i")
+    ).cast("double")
+    return (
+        inter.join(sizes.select(F.col("id").alias("a"), F.col("n").alias("na")), "a")
+        .join(sizes.select(F.col("id").alias("b"), F.col("n").alias("nb")), "b")
+        .where(jac >= F.lit(threshold))
+        .select("a", "b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def band_pairs(
+    rows: DataFrame, bands: list[Column], max_bucket: int, *keep: str
+) -> DataFrame:
+    """Banded-LSH candidates: distinct (a, b), a < b, of the ``id``s of
+    ``rows`` that agree on at least one band value. ``bands`` holds one
+    value expression per band over ``rows``. Each column c of ``keep``
+    rides along as a<c> and b<c>, so a verifier needs no join back.
+
+    One (band, val) row per id and band, then a self-join on (band, val):
+    linear in the rows times bucket occupancy, never all-pairs. A bucket of
+    more than ``max_bucket`` rows is dropped (skew guard: a degenerate band
+    value must not produce O(b^2) pairs); its pairs still come out of any
+    other band they collide in."""
+    banded = rows.select(
+        "id", *keep, F.posexplode(F.array(*bands)).alias("band", "val")
+    )
+    sizes = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("_n"))
+    banded = banded.join(
+        sizes.where(F.col("_n") <= max_bucket).select("band", "val"), ["band", "val"]
+    )
+    return (
+        banded.alias("x")
+        .join(banded.alias("y"), ["band", "val"])
+        .where(F.col("x.id") < F.col("y.id"))
+        .select(
+            F.col("x.id").alias("a"),
+            F.col("y.id").alias("b"),
+            *[F.col(f"x.{c}").alias(f"a{c}") for c in keep],
+            *[F.col(f"y.{c}").alias(f"b{c}") for c in keep],
+        )
+        .dropDuplicates(["a", "b"])
+    )
 
 
 def jaccard_pairs(
@@ -89,24 +145,7 @@ def jaccard_pairs(
     if max_df is not None:
         rare = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
         sh = sh.join(rare.where(F.col("_df") <= max_df).select("sh"), "sh")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("id").alias("a"), "sh")
-    b = sh.select(F.col("id").alias("b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    na = sizes.select(F.col("id").alias("a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("id").alias("b"), F.col("n").alias("nb"))
-    jac = _jaccard_from_counts(F.col("i"), F.col("na"), F.col("nb"))
-    return (
-        inter.join(na, "a")
-        .join(nb, "b")
-        .where(jac >= F.lit(threshold))
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(sh, threshold)
 
 
 def minhash_signatures(
@@ -137,59 +176,22 @@ def minhash_lsh_pairs(
     bucket join → exact Jaccard on the candidates → (a, b, jaccard >=
     threshold). With H=64, bands=16 (r=4), a pair at jaccard 0.5 collides
     with prob 1-(1-0.5^4)^16 ≈ 0.64 per the S-curve; at 0.8 ≈ 0.9996.
-    Buckets larger than ``max_bucket`` docs are dropped (skew guard: a
-    degenerate bucket must not produce O(b^2) pairs)."""
+    Buckets larger than ``max_bucket`` docs are dropped (:func:`band_pairs`)."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
     sh = shingle_table(docs, k, text_col, id_col).persist()
     sig = minhash_signatures(sh, num_hashes)
-    band_rows = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * r + j}") for j in range(r)]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-
-    sizes_b = band_rows.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_n"))
-    band_rows = band_rows.join(
-        sizes_b.where(F.col("_n") <= max_bucket).select("band", "bh"), ["band", "bh"]
+    cand = band_pairs(
+        sig,
+        [
+            F.xxhash64(*[F.col(f"mh_{b * r + j}") for j in range(r)])
+            for b in range(bands)
+        ],
+        max_bucket,
     )
-    cand = (
-        band_rows.alias("x")
-        .join(band_rows.alias("y"), ["band", "bh"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-
     # exact-Jaccard verification of candidates only
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.select(F.col("id").alias("a"), "sh")
-    b_sh = sh.select(F.col("id").alias("b"), "sh")
-    inter = (
-        cand.join(a_sh, "a")
-        .join(b_sh, ["b", "sh"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = _jaccard_from_counts(F.col("i"), F.col("na"), F.col("nb"))
-    out = (
-        inter.join(sizes.select(F.col("id").alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("n").alias("nb")), "b")
-        .where(jac >= F.lit(threshold))
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-    )
+    out = _jaccard_at_least(sh, threshold, cand)
     # Materialize the (small) verified-pair result, then release the shingle
     # cache — otherwise repeated calls in a long-lived session leak cached
     # blocks (the shingle table is the big intermediate here).
@@ -270,39 +272,25 @@ def simhash_pairs(
     ``bit_count(a XOR b)``. Exact for max_hamming <= bands - 1.
     ``hash_fn="md5_32"`` selects the ANSI-SQL-reproducible 32-bit simhash
     (see :func:`simhash`) — same pigeonhole exactness, oracle-checkable."""
-    width = SIMHASH_BITS[hash_fn] // bands
+    n_bits = SIMHASH_BITS[hash_fn]
+    if not 1 <= bands <= n_bits:
+        raise ValueError(f"bands must be in 1..{n_bits}: each band needs a bit")
+    width = n_bits // bands
     sig = simhash(docs, text_col, id_col, hash_fn=hash_fn)
-    parts = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("simhash", b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
+    # band b = bits [b·width, (b+1)·width): shifted to the top of the long,
+    # then down — no mask literal, which for a 64-bit band would overflow
+    cand = band_pairs(
+        sig,
+        [
+            F.shiftrightunsigned(
+                F.shiftleft("simhash", 64 - (b + 1) * width), 64 - width
             )
-        ).alias("bb"),
-    ).select("id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    sizes_b = parts.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_n"))
-    parts = parts.join(
-        sizes_b.where(F.col("_n") <= max_bucket).select("band", "bh"), ["band", "bh"]
+            for b in range(bands)
+        ],
+        max_bucket,
+        "simhash",
     )
-    ham = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
-    return (
-        parts.alias("x")
-        .join(parts.alias("y"), ["band", "bh"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("a"),
-            F.col("y.id").alias("b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["a", "b"])
+    ham = F.bit_count(F.col("asimhash").bitwiseXOR(F.col("bsimhash")))
+    return cand.select("a", "b", ham.cast("int").alias("hamming")).where(
+        F.col("hamming") <= max_hamming
     )

@@ -148,27 +148,6 @@ def test_fsm_discover_matches_explicit(spark):
     assert d1 == d2 and len(d1) > 3
 
 
-def test_mni_support_by_label_matches_explicit(spark):
-    """One-pass vector aggregation over the wildcard == per-label explicit
-    matching (the reference's VectorAggregator semantics)."""
-    from peregrine_spark.operators.fsm import mni_support_by_label
-    from tests.oracle import er_graph
-
-    pairs = er_graph(12, 0.4, 7)
-    e = edges_df(spark, pairs)
-    verts = spark.createDataFrame(
-        [(v, v % 3) for v in sorted({x for p in pairs for x in p})],
-        "v long, label long",
-    )
-    wedge_pl = SmallGraph(edges=[(1, 2), (1, 3)]).set_label(1, 0).set_label(2, 1).set_label(3, -1)
-    m = compile_match(e, wedge_pl, vertices=verts).df
-    per = mni_support_by_label(m, wedge_pl, 3, verts)
-    assert set(per) == {2}  # only label 2 is outside the known set {0, 1}
-    explicit = SmallGraph(edges=[(1, 2), (1, 3)]).set_label(1, 0).set_label(2, 1).set_label(3, 2)
-    me = compile_match(e, explicit, vertices=verts).df
-    assert per[2] == mni_support(me, explicit)
-
-
 def test_anti_edge_compiles_to_left_anti_join(spark):
     e = edges_df(spark, [(1, 2), (1, 3), (2, 3), (1, 4)])
     p = SmallGraph(edges=[(1, 2), (1, 3)], anti_edges=[(2, 3)])
@@ -202,8 +181,10 @@ def test_support_at_least_early_terminates(spark):
 
 
 def test_mni_supports_level_matches_single(spark):
-    """The per-shape level evaluator agrees with the per-pattern functions."""
-    from peregrine_spark.operators.fsm import mni_support_by_label, mni_supports_level
+    """The per-shape level evaluator agrees with the per-pattern functions:
+    ``mni_support`` for the labelled wedge, and one explicit plan per
+    wildcard label for the partially-labelled one."""
+    from peregrine_spark.operators.fsm import mni_supports_level
     from tests.oracle import er_graph
 
     pairs = er_graph(30, 0.25, seed=17)
@@ -224,12 +205,11 @@ def test_mni_supports_level_matches_single(spark):
 
     m0 = compile_match(e, lab_wedge, vertices=verts).df
     exp0 = mni_support(m0, lab_wedge)
-    m1 = compile_match(e, wild_wedge, vertices=verts).df
-    exp1 = mni_support_by_label(m1, wild_wedge, 3, verts)
+    exp1 = _explicit_supports(e, verts, [wild_wedge], [0, 1, 2])
     assert got.get((0, None), 0) == exp0
-    for wl, s in exp1.items():
-        assert got[(1, wl)] == s
-    assert {k for k in got if k[0] == 1} == {(1, wl) for wl in exp1}
+    assert {(1, wl): s for (_, wl), s in exp1.items()} == {
+        k: s for k, s in got.items() if k[0] == 1
+    }
 
 
 def _labelled(edges, labels):

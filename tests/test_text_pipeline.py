@@ -27,6 +27,7 @@ from peregrine_spark.text.analysis import (
     token_stats_by,
 )
 from peregrine_spark.text.dedup import (
+    band_pairs,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -163,6 +164,36 @@ def test_simhash_near_dup(docs, spark):
     ham02 = bin((sigs[0] ^ sigs[2]) & (2**64 - 1)).count("1")
     if ham02 <= 10:
         assert pairs[(0, 2)] == ham02
+
+
+def test_simhash_pairs_rejects_zero_width_bands(docs):
+    # no bands, or more bands than hash bits, leaves a band 0 bits wide
+    for bands, hash_fn in ((0, "xxhash64"), (65, "xxhash64"), (33, "md5_32")):
+        with pytest.raises(ValueError):
+            simhash_pairs(docs, 3, bands=bands, hash_fn=hash_fn)
+    # the widest band is the whole 64-bit hash: exact dups still pair up
+    got = {(r["a"], r["b"]): r["hamming"] for r in simhash_pairs(docs, 3, bands=1).collect()}
+    assert got[(0, 1)] == 0
+
+
+def test_band_pairs_bucket_cap_and_dedup(spark):
+    """The LSH band join shared by the MinHash, SimHash and cosine pair
+    operators: an oversized bucket yields no pairs, a pair in it still comes
+    out of another band it collides in, and a pair colliding in several
+    bands comes out once, with a < b."""
+    rows = spark.createDataFrame(
+        [(4, 0, 30, 300), (3, 0, 20, 300), (2, 0, 10, 100), (1, 0, 10, 100)],
+        "id long, b0 long, b1 long, b2 long",
+    )
+    bands = [F.col("b0"), F.col("b1"), F.col("b2")]
+    # band 0 puts all four rows in one bucket, over the cap of 3: (1, 3)
+    # and the other band-0-only pairs vanish; (3, 4) also shares band 2;
+    # (1, 2) collides in bands 1 and 2
+    got = [tuple(r) for r in band_pairs(rows, bands, max_bucket=3).collect()]
+    assert sorted(got) == [(1, 2), (3, 4)]
+    # with the cap lifted, band 0 pairs everything, each pair once
+    got = [tuple(r) for r in band_pairs(rows, bands, max_bucket=4).collect()]
+    assert sorted(got) == [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
 
 
 def test_token_stats(docs):
@@ -326,6 +357,15 @@ def test_cosine_pairs_lsh_recall_and_exact_precision(emb_dups):
         assert pair in exact and abs(sim - exact[pair]) < 1e-9
     # recall: high-sim pairs collide in some band with high probability
     assert len(approx) >= 0.9 * len(exact)
+
+
+def test_cosine_pairs_lsh_rejects_zero_width_bands(emb_dups):
+    from peregrine_spark.similarity.ann import cosine_pairs_lsh
+
+    # more bands than planes leaves each band 0 bits: one bucket per band
+    for bands in (0, 17):
+        with pytest.raises(ValueError):
+            cosine_pairs_lsh(emb_dups, 0.95, n_planes=16, bands=bands)
 
 
 def test_cosine_topk_ivf_recall(emb_dups):

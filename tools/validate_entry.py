@@ -3,6 +3,9 @@ and its oracle_sql() side-by-side at a given SF and compare row count,
 column names, and order-insensitive values.
 
 Usage: python tools/validate_entry.py [sf_dir] [query ...]
+
+A query name that is not an entry is reported and exits 2 before Spark
+starts.
 """
 
 from __future__ import annotations
@@ -36,6 +39,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="validate_entry")
     con = duckdb.connect()
     con.sql("SET threads TO 16")
@@ -44,7 +52,6 @@ def main() -> int:
         if Path(p).exists():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
