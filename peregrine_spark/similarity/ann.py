@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from peregrine_spark.session import release_checkpoint
-from peregrine_spark.text.dedup import band_pairs
+from peregrine_spark.text.dedup import band_bits, band_pairs, long_bit
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -123,6 +123,12 @@ def cosine_topk(
     )
 
 
+def _check_planes(n_planes: int) -> None:
+    """A sign-bit signature is one long: 1..64 planes."""
+    if not 1 <= n_planes <= 64:
+        raise ValueError(f"n_planes must be in 1..64 (one signature long), got {n_planes}")
+
+
 def hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
     """Deterministic pseudo-random unit-free hyperplanes (driver-side, tiny:
     n_planes × dim floats). Hash-derived — no RNG state, reproducible."""
@@ -140,12 +146,13 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
 
 def signature(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit LSH signature of ``vec`` as a long (bit p = dot with plane p
-    > 0). Pure column fold — evaluated in codegen, vectorized."""
+    > 0; at most 64 planes). Pure column fold — evaluated in codegen,
+    vectorized."""
     sig = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
         arr = F.array(*[F.lit(w) for w in plane])
         d = _dot(vec, arr)
-        sig = sig + F.when(d > 0, F.lit(1 << p).cast("long")).otherwise(
+        sig = sig + F.when(d > 0, F.lit(long_bit(p)).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
     return sig
@@ -178,13 +185,14 @@ def cosine_topk_lsh(
     small probe batches; pass False for a large query set so Catalyst picks
     a shuffle join on the bucket key instead of OOMing executors (same
     escape hatch as ``cosine_topk``)."""
+    _check_planes(n_planes)
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes)
     q = queries.withColumn("_sig", signature(F.col(vec_col), planes))
     flips = range(n_planes) if multiprobe else []
     probes = F.array(
-        F.col("_sig"), *[F.col("_sig").bitwiseXOR(F.lit(1 << p)) for p in flips]
+        F.col("_sig"), *[F.col("_sig").bitwiseXOR(F.lit(long_bit(p))) for p in flips]
     )
     return _top_k(
         _side(corpus, vec_col, id_col, "neighbor_id", "c",
@@ -235,20 +243,17 @@ def cosine_pairs_lsh(
     ``max_bucket``: the bucket cap of the band join
     (:func:`~peregrine_spark.text.dedup.band_pairs`): a zero-vector cluster
     would otherwise re-create the quadratic blowup."""
+    _check_planes(n_planes)
     if not 1 <= bands <= n_planes:
         raise ValueError("bands must be in 1..n_planes: each band needs a bit")
     if dim is None:
         dim = len(emb.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes)
     bits_per = n_planes // bands
-    mask = (1 << bits_per) - 1
     sig = signature(F.col(vec_col), planes).alias("_sig")
     cand = band_pairs(
         _side(emb, vec_col, id_col, "id", "", sig),
-        [
-            F.shiftright("_sig", bi * bits_per).bitwiseAND(F.lit(mask))
-            for bi in range(bands)
-        ],
+        [band_bits("_sig", bi, bits_per) for bi in range(bands)],
         max_bucket,
         "v",
         "n",

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.session import literal_table
@@ -62,24 +62,25 @@ def bfs_hops(
         def step(state: DataFrame, i: int) -> DataFrame:
             frontier = state.where(F.col("dist") == i).select("v")
             reached = (
-                sym.join(frontier, sym["src"] == frontier["v"])
+                sym.join(frontier.hint("shuffle_hash"), sym["src"] == F.col("v"))
                 .select(F.col("dst").alias("v"))
                 .distinct()
             )
-            newly = reached.join(
-                state.where(F.col("dist").isNotNull()).select("v"), "v", "left_anti"
+            settled = state.where(F.col("dist").isNotNull()).select("v")
+            newly = reached.join(settled.hint("shuffle_hash"), "v", "left_anti").select(
+                "v", F.lit(i + 1).cast("long").alias("_nd")
             )
-            return state.join(
-                newly.select("v", F.lit(i + 1).cast("long").alias("_nd")), "v", "left"
-            ).select("v", F.coalesce("dist", "_nd").alias("dist"))
+            return state.join(newly.hint("shuffle_hash"), "v", "left").select(
+                "v", F.coalesce("dist", "_nd").alias("dist")
+            )
 
-        def settled(frame: DataFrame, i: int) -> float:
-            return frame.where(F.col("dist") == i + 1).count()
+        def newly_settled(frame: DataFrame, i: int) -> Column:
+            return F.count_if(F.col("dist") == i + 1)
 
         verts = sym.select(F.col("src").alias("v")).distinct()
         state0 = verts.join(src_df.select("v", F.lit(0).alias("_d")), "v", "left").select(
             "v", F.col("_d").cast("long").alias("dist")
         )
         return (engine or SuperstepEngine(edges.sparkSession)).run(
-            state0, step, settled, max_iters=max_iters, tol=0.0, resume=resume
+            state0, step, newly_settled, max_iters=max_iters, tol=0.0, resume=resume
         )

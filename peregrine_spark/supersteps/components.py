@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.supersteps.engine import (
@@ -42,9 +42,11 @@ def connected_components(
 ) -> SuperstepResult:
     """State: (v, comp). Converged when changed-row count hits 0.
 
-    check_every: the changed-row count (a second pass over the state) runs
-    every k-th superstep; min-propagation is idempotent at fixpoint, so the
-    up-to-k-1 extra supersteps are safe — at scale the saved pass dominates.
+    check_every: the changed-row count is measured every k-th superstep;
+    min-propagation is idempotent at fixpoint, so the up-to-k-1 extra
+    supersteps are safe. The count is one aggregate observed on the pass
+    that already runs (the state's materialization), not a second pass:
+    every superstep is one Spark job, checked or not.
 
     strategy: ``minprop`` (O(diameter) rounds) or ``contraction``
     (large-star/small-star, O(log^2 n) rounds — use for high-diameter
@@ -58,18 +60,20 @@ def connected_components(
 
         def step(state: DataFrame, i: int) -> DataFrame:
             nbr_min = (
-                sym.join(state, sym["src"] == state["v"])
+                sym.join(state.hint("shuffle_hash"), sym["src"] == F.col("v"))
                 .groupBy(F.col("dst").alias("v2"))
                 .agg(F.min("comp").alias("nbr_comp"))
             )
-            return state.join(nbr_min, state["v"] == F.col("v2"), "left").select(
+            return state.join(
+                nbr_min.hint("shuffle_hash"), F.col("v") == F.col("v2"), "left"
+            ).select(
                 "v",
                 F.col("comp").alias("old"),
                 F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
             )
 
-        def changed(frame: DataFrame, i: int) -> float:
-            return frame.where(F.col("comp") != F.col("old")).count()
+        def changed(frame: DataFrame, i: int) -> Column:
+            return F.count_if(F.col("comp") != F.col("old"))
 
         state0 = sym.select(F.col("src").alias("v")).distinct().select(
             "v", F.col("v").alias("comp")
@@ -88,7 +92,7 @@ def _large_star(E: DataFrame) -> DataFrame:
     mn = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
     mn = mn.select("src", F.least("_mn", F.col("src")).alias("_m"))
     return (
-        sym.join(mn, "src")
+        sym.join(mn.hint("shuffle_hash"), "src")
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
         .dropDuplicates()
@@ -100,7 +104,7 @@ def _small_star(E: DataFrame) -> DataFrame:
     neighbours; re-point src and every other small neighbour at m."""
     mn = E.groupBy("src").agg(F.min("dst").alias("_m"))
     repointed = (
-        E.join(mn, "src")
+        E.join(mn.hint("shuffle_hash"), "src")
         .where(F.col("dst") != F.col("_m"))
         .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
     )
@@ -117,27 +121,24 @@ def _cc_contraction(
 ) -> SuperstepResult:
     """Alternating large-star/small-star contraction. State per superstep is
     the shrinking edge set; convergence = edge set unchanged across a full
-    (large, small) round, detected by (count, order-insensitive xor-hash).
-    At the fixpoint the edges form stars (v -> component min)."""
-    prev_sig: list = [None]
+    (large, small) round, detected by its (count, order-insensitive
+    xor-hash) signature, which the engine observes on the round's own job
+    and compares with the previous round's. At the fixpoint the edges form
+    stars (v -> component min)."""
 
     def step(state: DataFrame, i: int) -> DataFrame:
         return _small_star(_large_star(state))
 
-    def sig_changed(frame: DataFrame, i: int) -> float:
-        row = frame.agg(
+    def signature(frame: DataFrame, i: int) -> Column:
+        return F.struct(
             F.count(F.lit(1)).alias("c"),
             F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        sig = (row["c"], row["h"])
-        delta = 0.0 if sig == prev_sig[0] else 1.0
-        prev_sig[0] = sig
-        return delta
+        )
 
     with vertex_program(edges, n_partitions) as sym:
         E0 = sym.where(F.col("src") > F.col("dst"))  # the canonical edges, high -> low
         res = (engine or SuperstepEngine(edges.sparkSession)).run(
-            E0, step, sig_changed, max_iters=max_iters, tol=0.0, resume=resume
+            E0, step, signature, max_iters=max_iters, tol=0.0, resume=resume
         )
         verts = sym.select(F.col("src").alias("v")).distinct()
     E = res.state  # star edges (v, root)

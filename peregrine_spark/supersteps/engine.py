@@ -3,10 +3,12 @@
 The reference's analogue is the per-pattern barrier loop
 (core/Peregrine.hh:1320-1424): workers process a round, hit a barrier, the
 driver advances. Our superstep = one Spark job over the vertex-state
-DataFrame, and this module owns the round's whole lifecycle:
-``vertex_program`` sets up and tears down the adjacency a program reads,
-and ``SuperstepEngine.run`` drives the loop, so a vertex program supplies
-only its ``step`` and ``delta`` kernels.
+DataFrame, checked or not: the materialization of the next state, which
+also carries the convergence delta as an observed aggregate. This module
+owns the round's whole lifecycle: ``vertex_program`` sets up and tears
+down the adjacency a program reads, and ``SuperstepEngine.run`` drives the
+loop, so a vertex program supplies only its ``step`` and ``delta``
+kernels.
 
 What the reference does NOT have — and the north rule demands — is fault
 tolerance: every superstep persists
@@ -35,7 +37,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
@@ -80,7 +82,12 @@ def vertex_program(edges: DataFrame, n_partitions: int | None = None):
     of the symmetrized edge count) and persisted, with
     ``spark.sql.shuffle.partitions`` pinned to the same count for the body,
     so the per-superstep joins on the vertex key stay co-partitioned.
-    Unpersists the edges and restores the session conf on exit."""
+    Unpersists the edges and restores the session conf on exit.
+
+    The programs' step joins use this co-partitioning at every size: each
+    carries a plan-local ``shuffle_hash`` hint, so a state small enough to
+    broadcast is still hash-joined in place (no broadcast job, no sort)
+    and a step shuffles once, for its aggregation."""
     spark = edges.sparkSession
     n = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
     sym = symmetrized(edges).repartition(n, "src").persist()
@@ -117,19 +124,41 @@ def _partition_lineage(state: DataFrame, key_cols: list[str]) -> list[dict]:
     ]
 
 
+def _check_resumable(ckpt: DataFrame, state0: DataFrame, path: Path) -> None:
+    """A checkpoint resumes a run only if its column names and types are
+    ``state0``'s; anything else (e.g. one written before a program's state
+    gained a column) would fail later, inside a superstep, as an
+    unresolved column."""
+
+    def schema(df: DataFrame) -> str:
+        return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+
+    if schema(ckpt) != schema(state0):
+        raise ValueError(
+            f"cannot resume from {path}: its schema ({schema(ckpt)}) is not "
+            f"the program's state schema ({schema(state0)}); restart the run "
+            "from scratch"
+        )
+
+
 class SuperstepEngine:
     """Runs ``state_{i+1} = step(state_i, i)`` to convergence.
 
     ``step`` returns the next frame: the state's columns plus any extra
     ones that only ``delta`` reads (e.g. the previous value as ``old``).
-    Every ``check_every``-th superstep, and the last one, is a check step:
-    the engine persists the frame and evaluates ``delta(frame, i)``, a
-    float convergence measure (L1 change, changed-row count, ...); a delta
-    <= tol stops the run. On every step the frame is projected back to the
-    state's columns and materialized — parquet when the engine has a
-    checkpoint directory, ``localCheckpoint`` otherwise — and the check
-    frame and the previous round's checkpoint are released right after.
-    A step that is not checked is one Spark job (the materialization).
+    ``delta(frame, i)`` returns an aggregate Column over that frame: either
+    a number (L1 change, changed-row count, ...) or a struct signature of
+    the frame, whose delta is 0 when it equals the previous check's
+    signature and 1 otherwise. Every ``check_every``-th superstep, and the
+    last one, is a check step; a delta <= tol stops the run.
+
+    Every superstep is one Spark job, checked or not: the frame is projected
+    back to the state's columns and materialized — parquet when the engine
+    has a checkpoint directory, ``localCheckpoint`` otherwise — and on a
+    check step the delta aggregate rides that same job as an observed
+    metric (``DataFrame.observe``), read once the job is done. The previous
+    round's checkpoint is released right after. (The parquet path adds one
+    job per step for the per-partition lineage it records.)
 
     A run with ``tol >= 0`` that uses up ``max_iters`` without converging
     logs a warning; fixed-step runs pass ``tol=-1``.
@@ -173,12 +202,17 @@ class SuperstepEngine:
         self,
         state0: DataFrame,
         step: Callable[[DataFrame, int], DataFrame],
-        delta: Callable[[DataFrame, int], float],
+        delta: Callable[[DataFrame, int], Column],
         max_iters: int = 20,
         tol: float = 0.0,
         resume: bool = False,
         check_every: int = 1,
     ) -> SuperstepResult:
+        """Drive the loop from ``state0`` (or, with ``resume=True``, from
+        the last complete checkpoint, whose column names and types must
+        equal ``state0``'s). Each superstep is one Spark job, check steps
+        included: the delta is observed on the materialization. (With a
+        checkpoint directory the lineage adds a second.)"""
         metrics: list[dict] = []
         start_iter = 0
         state = state0
@@ -186,6 +220,7 @@ class SuperstepEngine:
         if resume and self.dir:
             ckpt = self.last_checkpoint()
             if ckpt:
+                _check_resumable(ckpt[1], state0, self._step_path(ckpt[0]))
                 start_iter = ckpt[0] + 1
                 state = ckpt[1]
                 if self._metrics_path().exists():
@@ -206,6 +241,7 @@ class SuperstepEngine:
         i = start_iter - 1
         cols = state.columns
         own_ckpt = None  # the engine's own live localCheckpoint, if any
+        prev_sig = None  # the last check's signature, for struct deltas
         check_every = max(1, check_every)
         # AQE re-plans every superstep query and interacts badly with
         # localCheckpoint partition materialization (measured 10x superstep
@@ -216,10 +252,9 @@ class SuperstepEngine:
                 t0 = time.monotonic()
                 frame = step(state, i)
                 checked = (i + 1) % check_every == 0 or i == max_iters - 1
-                d = None
                 if checked:
-                    frame.persist()
-                    d = float(delta(frame, i))
+                    obs = Observation()
+                    frame = frame.observe(obs, delta(frame, i).alias("delta"))
                 state = frame.select(*cols)
                 if self.dir is not None:
                     path = self._step_path(i)
@@ -231,16 +266,21 @@ class SuperstepEngine:
                     state = state.localCheckpoint()
                     lineage = None
                 # the new state is materialized (parquet or eager checkpoint):
-                # the check frame and the PREVIOUS round's engine-made
-                # checkpoint are dead weight now; without this every superstep
-                # retains one state table in executor storage for the life of
-                # the session
-                if checked:
-                    frame.unpersist()
+                # the PREVIOUS round's engine-made checkpoint is dead weight
+                # now; without this every superstep retains one state table in
+                # executor storage for the life of the session
                 if own_ckpt is not None:
                     release_checkpoint(own_ckpt)
                 own_ckpt = state if lineage is None else None
 
+                d = None
+                if checked:
+                    value = obs.get["delta"]
+                    if isinstance(value, Row):
+                        d = 0.0 if value == prev_sig else 1.0
+                        prev_sig = value
+                    else:
+                        d = float(value or 0.0)  # a sum over no rows is null
                 converged = bool(checked and d <= tol)
                 m = {
                     "run_id": self.run_id,

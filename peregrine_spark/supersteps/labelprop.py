@@ -5,7 +5,8 @@ most frequent label among N(v), ties broken by SMALLEST label (deterministic
 — required for exact oracle comparison and resume-replay idempotence).
 Runs a fixed number of supersteps or until no label changes.
 
-Physical plan per superstep: edges_sym ⋈ state on src (AQE skew-split) →
+Physical plan per superstep: edges_sym ⋈ state on src (shuffle hash join
+over the co-partitioned inputs) →
 groupBy(dst, label).count (map-side partial) → per-dst argmax via a window
 ordered (count desc, label asc). The window partitions by dst — same key as
 the preceding shuffle, so Catalyst reuses the partitioning (no extra
@@ -14,7 +15,7 @@ shuffle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from peregrine_spark.supersteps.engine import (
@@ -39,7 +40,7 @@ def label_propagation(
 
         def step(state: DataFrame, i: int) -> DataFrame:
             freq = (
-                sym.join(state, sym["src"] == state["v"])
+                sym.join(state.hint("shuffle_hash"), sym["src"] == F.col("v"))
                 .groupBy(F.col("dst").alias("v2"), "label")
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
@@ -51,12 +52,12 @@ def label_propagation(
             )
             return (
                 state.withColumnRenamed("label", "old")
-                .join(best, state["v"] == F.col("v2"), "left")
+                .join(best.hint("shuffle_hash"), F.col("v") == F.col("v2"), "left")
                 .select("v", F.coalesce("new_label", F.col("old")).alias("label"), "old")
             )
 
-        def changed(frame: DataFrame, i: int) -> float:
-            return frame.where(F.col("label") != F.col("old")).count()
+        def changed(frame: DataFrame, i: int) -> Column:
+            return F.count_if(F.col("label") != F.col("old"))
 
         vs = sym.select(F.col("src").alias("v")).distinct()
         if seeds is None:

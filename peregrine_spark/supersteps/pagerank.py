@@ -16,14 +16,15 @@ Both strategies run one shared superstep over the state (v, deg, tp, rank)
 and differ only in the ``inflow`` kernel, Σ_{u∈N(v)} rank(u)/deg(u) per v.
 tp rides in the state, so personalization adds no join per superstep.
 Checkpoints written before the tp column existed hold (v, deg, rank) and
-cannot be resumed — the first superstep fails resolving ``tp``; this
-includes every ``pagerank_csr`` checkpoint written before the strategies
-shared the state. Restart such a run from scratch.
+cannot be resumed: ``resume=True`` raises a ``ValueError`` naming both
+schemas before any superstep runs. This includes every ``pagerank_csr``
+checkpoint written before the strategies shared the state. Restart such a
+run from scratch.
 
 Strategy A — ``pagerank`` (pure Catalyst): contribution = ranks ⋈ edges_sym
-on src (shuffle hash join), groupBy(dst).sum (map-side partial agg absorbs
-hub fan-in). Simple, whole-stage-codegen'd; the only strategy with
-``sources=``.
+on src (shuffle hash join over the co-partitioned inputs), groupBy(dst).sum
+(map-side partial agg absorbs hub fan-in). Simple, whole-stage-codegen'd;
+the only strategy with ``sources=``.
 
 Strategy B — ``pagerank_csr`` (the north-star physical plan): adjacency is
 materialized once as *chunked CSR blocks* — (src, chunk, nbrs array<long>)
@@ -42,7 +43,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.session import literal_table
@@ -97,7 +98,7 @@ def _supersteps(
     def step(state: DataFrame, i: int) -> DataFrame:
         return (
             state.select("v", "deg", "tp", F.col("rank").alias("old"))
-            .join(inflow(state), "v", "left")
+            .join(inflow(state).hint("shuffle_hash"), "v", "left")
             .select(
                 "v",
                 "deg",
@@ -110,8 +111,8 @@ def _supersteps(
             )
         )
 
-    def l1_change(frame: DataFrame, i: int) -> float:
-        return frame.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0] or 0.0
+    def l1_change(frame: DataFrame, i: int) -> Column:
+        return F.sum(F.abs(F.col("rank") - F.col("old")))
 
     res = (engine or SuperstepEngine(sym.sparkSession)).run(
         _init_state_tp(_degrees(sym), sources), step, l1_change,
@@ -140,10 +141,10 @@ def pagerank(
     teleport column rides in the state, so personalization adds zero
     extra joins per superstep.
 
-    check_every: convergence (L1 delta) is measured every k-th superstep;
-    in between, a superstep is exactly ONE Spark job (the truncation pass)
-    — at scale the delta aggregation is a second full pass over the state,
-    so fixed-iteration runs set this high.
+    check_every: convergence (L1 delta) is measured every k-th superstep.
+    The delta is one aggregate observed on the pass that already runs (the
+    state's materialization), not a second pass, so every superstep is one
+    Spark job either way; a larger k only saves that aggregate.
 
     n_partitions: partition count for the adjacency AND every in-loop
     shuffle (defaults to :func:`auto_shuffle_partitions` of the symmetrized
@@ -152,7 +153,7 @@ def pagerank(
 
         def inflow(state: DataFrame) -> DataFrame:
             return (
-                sym.join(state, sym["src"] == state["v"])
+                sym.join(state.hint("shuffle_hash"), sym["src"] == F.col("v"))
                 .select(F.col("dst").alias("v"), (F.col("rank") / F.col("deg")).alias("c"))
                 .groupBy("v")
                 .agg(F.sum("c").alias("inflow"))
@@ -220,8 +221,9 @@ def pagerank_csr(
         blocks = build_adjacency_blocks(sym, chunk_size).repartition("src").persist()
 
         def inflow(state: DataFrame) -> DataFrame:
-            joined = blocks.join(state, blocks["src"] == state["v"]).select(
-                "nbrs", "rank", state["deg"].alias("deg")
+            st = state.hint("shuffle_hash")
+            joined = blocks.join(st, blocks["src"] == st["v"]).select(
+                "nbrs", "rank", st["deg"].alias("deg")
             )
             return (
                 joined.mapInPandas(gather_scatter, schema="v long, inflow double")

@@ -203,6 +203,20 @@ def minhash_lsh_pairs(
 SIMHASH_BITS = {"xxhash64": 64, "md5_32": 32}
 
 
+def long_bit(b: int) -> int:
+    """The LongType literal with only bit ``b`` (0..63) set. Bit 63 of a
+    signed long is the sign bit, so its literal is the negative
+    two's-complement value: ``1 << 63`` is out of long range."""
+    return (1 << b) if b < 63 else -(1 << 63)
+
+
+def band_bits(col: str, b: int, width: int) -> Column:
+    """Band ``b`` of a long signature: its bits [b·width, (b+1)·width) as
+    an unsigned value, shifted to the top of the long and then down. No
+    mask literal, which for a 64-bit band would overflow."""
+    return F.shiftrightunsigned(F.shiftleft(col, 64 - (b + 1) * width), 64 - width)
+
+
 def simhash(
     docs: DataFrame,
     text_col: str = "text",
@@ -232,15 +246,9 @@ def simhash(
     else:
         h = F.xxhash64("t", F.lit(seed))
     tok = tok.withColumn("h", h)
-
-    # bit 63 of a signed long is the sign bit: its mask literal is the
-    # negative two's-complement value (1 << 63 overflows LongType)
-    def mask(b: int) -> int:
-        return (1 << b) if b < 63 else -(1 << 63)
-
     bit_sums = [
         F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(mask(b))) != 0, F.lit(1)).otherwise(
+            F.when(F.col("h").bitwiseAND(F.lit(long_bit(b))) != 0, F.lit(1)).otherwise(
                 F.lit(-1)
             )
         ).alias(f"s_{b}")
@@ -250,7 +258,7 @@ def simhash(
     acc = F.lit(0).cast("long")
     for b in range(n_bits):
         acc = acc + F.when(
-            F.col(f"s_{b}") > 0, F.lit(mask(b)).cast("long")
+            F.col(f"s_{b}") > 0, F.lit(long_bit(b)).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return sums.select("id", acc.alias("simhash"))
 
@@ -277,18 +285,8 @@ def simhash_pairs(
         raise ValueError(f"bands must be in 1..{n_bits}: each band needs a bit")
     width = n_bits // bands
     sig = simhash(docs, text_col, id_col, hash_fn=hash_fn)
-    # band b = bits [b·width, (b+1)·width): shifted to the top of the long,
-    # then down — no mask literal, which for a 64-bit band would overflow
     cand = band_pairs(
-        sig,
-        [
-            F.shiftrightunsigned(
-                F.shiftleft("simhash", 64 - (b + 1) * width), 64 - width
-            )
-            for b in range(bands)
-        ],
-        max_bucket,
-        "simhash",
+        sig, [band_bits("simhash", b, width) for b in range(bands)], max_bucket, "simhash"
     )
     ham = F.bit_count(F.col("asimhash").bitwiseXOR(F.col("bsimhash")))
     return cand.select("a", "b", ham.cast("int").alias("hamming")).where(

@@ -149,3 +149,51 @@ def test_ordered_legs_read_canonical_table(spark):
 
     assert "Union" not in optimized(PatternGenerator.clique(4))
     assert "Union" in optimized(PatternGenerator.star(3))
+
+
+@pytest.mark.parametrize("program", ["pagerank", "cc_minprop", "bfs_hops"])
+def test_superstep_plan_hash_joins_copartitioned_state(spark, program):
+    """A steady-state superstep of PageRank, min-propagation CC and BFS
+    joins the state (already hash-partitioned on the vertex key by the
+    previous step) with the adjacency (repartitioned on ``src`` by
+    vertex_program) in place: no broadcast, however small the state; no
+    sort; and one shuffle, the aggregation's."""
+    from peregrine_spark.supersteps import (
+        SuperstepEngine,
+        bfs_hops,
+        connected_components,
+        pagerank,
+    )
+    from tests.conftest import edges_df
+
+    class StepPlans(SuperstepEngine):
+        """Records the executed plan of every step frame of its run."""
+
+        def run(self, state0, step, delta, **kw):
+            self.plans = []
+
+            def recorded(state, i):
+                frame = step(state, i)
+                self.plans.append(frame._jdf.queryExecution().executedPlan().toString())
+                return frame
+
+            return super().run(state0, recorded, delta, **kw)
+
+    e = edges_df(spark, [(i, i + 1) for i in range(1, 40)])
+    eng = StepPlans(spark)
+    run = {
+        "pagerank": lambda: pagerank(e, max_iters=2, tol=-1.0, engine=eng, n_partitions=4),
+        "cc_minprop": lambda: connected_components(
+            e, max_iters=2, engine=eng, n_partitions=4
+        ),
+        "bfs_hops": lambda: bfs_hops(e, [1], max_iters=2, engine=eng, n_partitions=4),
+    }[program]
+    run()
+    plan = eng.plans[-1]  # step 1 reads the checkpoint of step 0
+    assert "Broadcast" not in plan, plan
+    assert "Sort" not in plan, plan
+    shuffles = [
+        l for l in plan.splitlines() if "Exchange" in l and "ENSURE_REQUIREMENTS" in l
+    ]
+    assert len(shuffles) == 1, plan
+    assert "ShuffledHashJoin" in plan, plan

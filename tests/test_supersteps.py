@@ -423,10 +423,24 @@ def test_resume_from_torn_checkpoint(spark, tmp_path):
     assert [m["iteration"] for m in lines] == [0, 1, 2, 3, 4, 4, 5, 6, 7]
 
 
+def _path_programs(e):
+    """The six vertex programs on ``e`` as functions of the superstep count,
+    each checked every superstep where it takes ``check_every``."""
+    return {
+        "pagerank": lambda n: pagerank(e, max_iters=n, tol=-1.0, check_every=1),
+        "pagerank_csr": lambda n: pagerank_csr(e, max_iters=n, tol=-1.0, check_every=1),
+        "cc_minprop": lambda n: connected_components(e, max_iters=n, check_every=1),
+        "cc_contraction": lambda n: connected_components(
+            e, max_iters=n, strategy="contraction"
+        ),
+        "label_propagation": lambda n: label_propagation(e, max_iters=n, check_every=1),
+        "bfs_hops": lambda n: bfs_hops(e, [1], max_iters=n),
+    }
+
+
 def test_superstep_engine_releases_checkpoints(spark):
-    """Each superstep materializes its state (localCheckpoint) and, with
-    check_every=1, persists a check frame; the engine must release the
-    frame and the superseded round's checkpoint — otherwise a long run
+    """Each superstep materializes its state (localCheckpoint); the engine
+    must release the superseded round's checkpoint — otherwise a long run
     retains one state table PER SUPERSTEP in executor storage.
     DataFrame.unpersist() is a silent no-op on checkpoint blocks (they live
     on the LogicalRDD), hence session.release_checkpoint. A run of 3 and a
@@ -440,17 +454,7 @@ def test_superstep_engine_releases_checkpoints(spark):
 
     # a path: no program below converges before its 8th superstep
     e = edges_df(spark, [(i, i + 1) for i in range(1, 300)])
-    programs = {
-        "pagerank": lambda n: pagerank(e, max_iters=n, tol=-1.0, check_every=1),
-        "pagerank_csr": lambda n: pagerank_csr(e, max_iters=n, tol=-1.0, check_every=1),
-        "cc_minprop": lambda n: connected_components(e, max_iters=n, check_every=1),
-        "cc_contraction": lambda n: connected_components(
-            e, max_iters=n, strategy="contraction"
-        ),
-        "label_propagation": lambda n: label_propagation(e, max_iters=n, check_every=1),
-        "bfs_hops": lambda n: bfs_hops(e, [1], max_iters=n),
-    }
-    for name, run in programs.items():
+    for name, run in _path_programs(e).items():
         grown = []
         for n in (3, 8):
             before = persistent_ids()
@@ -461,3 +465,49 @@ def test_superstep_engine_releases_checkpoints(spark):
         # at most the FINAL state's checkpoint may remain live (the caller
         # owns the result); nothing accumulates per superstep
         assert grown[0] == grown[1] <= 1, (name, grown)
+
+
+def test_one_spark_job_per_superstep(spark):
+    """Every superstep is one Spark job, check steps included: the
+    localCheckpoint that materializes the state carries the observed delta,
+    and the step joins hash-join the co-partitioned state rather than
+    broadcasting it (a broadcast is a job of its own). Set-up jobs are the
+    same for any superstep count, so runs of n and m supersteps differ by
+    exactly n - m jobs."""
+    sc = spark.sparkContext
+
+    def jobs(run, n, group):
+        sc.setJobGroup(group, group)
+        try:
+            res = run(n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert res.iterations == n, group
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a path: no program below converges before its 6th superstep
+    e = edges_df(spark, [(i, i + 1) for i in range(1, 300)])
+    for name, run in _path_programs(e).items():
+        few, many = (jobs(run, n, f"one-job-per-step-{name}-{n}") for n in (2, 6))
+        assert many - few == 6 - 2, (name, few, many)
+
+
+def test_resume_refuses_incompatible_checkpoint(spark, tmp_path):
+    """A checkpoint whose columns are not the program's state (here a
+    hand-written (v, deg, rank) PageRank state from before the teleport
+    column) is refused up front, naming both schemas, rather than failing
+    inside the first superstep on an unresolved column."""
+    pairs = er_graph(20, 0.2, seed=71)
+    e = edges_df(spark, pairs)
+    eng = SuperstepEngine(spark, str(tmp_path), run_id="pr")
+    verts = sorted({v for p in pairs for v in p})
+    old = spark.createDataFrame(
+        [(v, 1, 1.0 / len(verts)) for v in verts], "v long, deg long, rank double"
+    )
+    old.write.parquet(str(eng._step_path(0)))
+    with pytest.raises(ValueError) as err:
+        pagerank(e, max_iters=3, tol=0.0, engine=eng, resume=True)
+    msg = str(err.value)
+    assert "v bigint, deg bigint, rank double" in msg
+    assert "v bigint, deg bigint, tp double, rank double" in msg

@@ -418,3 +418,35 @@ def test_lsh_ivf_broadcast_escape_hatch(emb_dups, spark):
             )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_lsh_operators_take_64_planes(emb_dups):
+    """64 planes fill the signature long: plane 63 is its sign bit, whose
+    literal (and multiprobe flip) must be the negative long, and a single
+    band of 64 bits needs no mask literal. Planes outside 1..64 are
+    refused before any job runs."""
+    from peregrine_spark.similarity.ann import cosine_pairs, cosine_pairs_lsh
+
+    queries = emb_dups.where(F.col("vec_id") < 4)
+    exact = {
+        (r["query_id"], r["neighbor_id"]): r["sim"]
+        for r in cosine_topk(emb_dups, queries, k=2).collect()
+    }
+    approx = cosine_topk_lsh(emb_dups, queries, k=2, n_planes=64, dim=16).collect()
+    assert approx
+    for r in approx:  # exact re-rank: every returned sim is the true cosine
+        if (r["query_id"], r["neighbor_id"]) in exact:
+            assert r["sim"] == exact[(r["query_id"], r["neighbor_id"])]
+    tau = 0.95
+    truth = {(r["a"], r["b"]): r["sim"] for r in cosine_pairs(emb_dups, tau).collect()}
+    for bands in (1, 4):
+        got = {
+            (r["a"], r["b"]): r["sim"]
+            for r in cosine_pairs_lsh(emb_dups, tau, n_planes=64, bands=bands).collect()
+        }
+        assert got.items() <= truth.items(), bands
+    for n_planes in (0, 65):
+        with pytest.raises(ValueError):
+            cosine_topk_lsh(emb_dups, queries, k=2, n_planes=n_planes)
+        with pytest.raises(ValueError):
+            cosine_pairs_lsh(emb_dups, tau, n_planes=n_planes, bands=1)

@@ -2,6 +2,12 @@
 and its oracle_sql() side-by-side at a given SF and compare row count,
 column names, and order-insensitive values.
 
+Each entry runs under its own Spark job group, and its line reports the
+number of Spark jobs it ran beside its seconds. The seconds come from one
+run in a shared session and move by up to 2x between runs; the job count
+is exact, so it is the figure to compare between two versions of an
+entry.
+
 Usage: python tools/validate_entry.py [sf_dir] [query ...]
 
 A query name that is not an entry is reported and exits 2 before Spark
@@ -53,10 +59,13 @@ def main() -> int:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     oracles = entrymod.oracle_sql()
+    sc = spark.sparkContext
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        group = f"validate_entry:{name}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -64,9 +73,14 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {ex}")
             failures.append(name)
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         t_spark = time.time() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark_cost = f"{t_spark:.1f}s spark, {jobs} jobs"
         if name not in oracles:
-            print(f"OK?  {name}: rows-only ({len(sdf)} rows, {t_spark:.1f}s spark)")
+            print(f"OK?  {name}: rows-only ({len(sdf)} rows, {spark_cost})")
             continue
         t0 = time.time()
         try:
@@ -92,7 +106,7 @@ def main() -> int:
             print(pd.concat([s[bad].head(3), d[bad].head(3)], keys=["spark", "duck"]))
             failures.append(name)
             continue
-        print(f"PASS {name}: {len(s)} rows ({t_spark:.1f}s spark, {t_duck:.1f}s duckdb)")
+        print(f"PASS {name}: {len(s)} rows ({spark_cost}, {t_duck:.1f}s duckdb)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
