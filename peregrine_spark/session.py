@@ -9,12 +9,23 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
+
+# Whole-stage codegen classes the JVM keeps. The cache has 4 LRU segments,
+# so eviction starts near a quarter of this; one perfbench `queries` pass
+# compiles about 180 distinct classes.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# release_checkpoint calls that failed in this process (logged and counted,
+# not raised); read it as ``session.release_failures``
+release_failures = 0
+_release_failures_lock = threading.Lock()
 
 
 def get_spark(
@@ -28,7 +39,23 @@ def get_spark(
     Defaults: ``local[$SPARK_GRAFT_CPUS or *]``, AQE enabled (runtime
     coalescing + skew-join splitting — the Spark-native replacement for the
     reference's MPI work stealing), Arrow enabled for all pandas-UDF kernels,
-    UTC timezone (DuckDB-oracle comparability).
+    UTC timezone (DuckDB-oracle comparability), and whole-stage codegen set
+    up to compile each generated class once per JVM:
+
+    * a 1000-entry codegen cache (``spark.sql.codegen.cache.maxEntries``):
+      Spark's default of 100 is smaller than one pass of the engine's query
+      plans, so a repeated query compiled its classes again;
+    * no stage id in generated class names
+      (``spark.sql.codegen.useIdInClassName=false``): the cache is keyed on
+      the code, and AQE numbers a plan's codegen stages in the order its
+      concurrent query stages finish, so with the id in the name the same
+      pipeline compiled again under each stage number it was given.
+
+    The codegen cache is a JVM-wide static whose size is fixed at the
+    JVM's first compile: a session built after that, with this value or an
+    ``extra_conf`` one, does not resize it. Under ``spark-submit`` the
+    driver JVM is already running when this is called, so the value has to
+    come from ``--conf spark.sql.codegen.cache.maxEntries=1000``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     # under spark-submit the Python driver attaches to an existing JVM
@@ -62,12 +89,21 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the session's JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compilation counter: one per codegen cache miss)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def thread_target(spark: SparkSession, fn):
@@ -116,7 +152,8 @@ def release_checkpoint(df) -> None:
 
     Does nothing if the plan shape is not a direct checkpoint (nothing to
     release). A failing plan lookup or release (e.g. the py4j internals
-    move) does not raise, but is logged as a warning naming the exception.
+    move) does not raise, but is logged as a warning naming the exception
+    and counted in ``release_failures``.
     """
     df.unpersist()
     try:
@@ -124,6 +161,9 @@ def release_checkpoint(df) -> None:
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
     except Exception as exc:
+        global release_failures
+        with _release_failures_lock:
+            release_failures += 1
         log.warning("release_checkpoint: could not release checkpoint blocks: %r", exc)
 
 

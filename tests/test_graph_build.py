@@ -305,8 +305,9 @@ def test_peel_releases_each_round(spark):
 
 
 def test_release_checkpoint_logs_failures(caplog):
-    """A failed release does not raise, but is logged naming the exception."""
-    from peregrine_spark.session import release_checkpoint
+    """A failed release does not raise, but is logged naming the exception
+    and counted."""
+    from peregrine_spark import session
 
     class PlanLookupFails:
         def unpersist(self):
@@ -316,8 +317,10 @@ def test_release_checkpoint_logs_failures(caplog):
         def _jdf(self):
             raise RuntimeError("plan lookup failed")
 
+    before = session.release_failures
     with caplog.at_level("WARNING", logger="peregrine_spark.session"):
-        release_checkpoint(PlanLookupFails())
+        session.release_checkpoint(PlanLookupFails())
+    assert session.release_failures == before + 1
     assert any(
         "RuntimeError" in r.getMessage() and "plan lookup failed" in r.getMessage()
         for r in caplog.records

@@ -133,6 +133,7 @@ def test_bfs_hops_matches_oracle(spark):
     for sources in ([1], [1, 40], [40, 1, 40, 1, 1]):
         res = bfs_hops(e, sources, max_iters=50)
         assert res.converged
+        assert res.state.columns == ["v", "dist"]
         rows = res.state.collect()
         got = {r["v"]: r["dist"] for r in rows}
         truth = brute_bfs(pairs, sources)
@@ -494,10 +495,11 @@ def test_one_spark_job_per_superstep(spark):
 
 
 def test_resume_refuses_incompatible_checkpoint(spark, tmp_path):
-    """A checkpoint whose columns are not the program's state (here a
-    hand-written (v, deg, rank) PageRank state from before the teleport
-    column) is refused up front, naming both schemas, rather than failing
-    inside the first superstep on an unresolved column."""
+    """A checkpoint whose columns are not the program's state (here
+    hand-written PageRank and BFS states from before the teleport column
+    and the frontier flag) is refused up front, naming both schemas,
+    rather than failing inside the first superstep on an unresolved
+    column."""
     pairs = er_graph(20, 0.2, seed=71)
     e = edges_df(spark, pairs)
     eng = SuperstepEngine(spark, str(tmp_path), run_id="pr")
@@ -511,3 +513,10 @@ def test_resume_refuses_incompatible_checkpoint(spark, tmp_path):
     msg = str(err.value)
     assert "v bigint, deg bigint, rank double" in msg
     assert "v bigint, deg bigint, tp double, rank double" in msg
+    # a (v, dist) BFS state from before the step carried its ``new`` flag
+    eng = SuperstepEngine(spark, str(tmp_path), run_id="bfs")
+    spark.createDataFrame([(v, None) for v in verts], "v long, dist long").write.parquet(
+        str(eng._step_path(0))
+    )
+    with pytest.raises(ValueError, match="v bigint, dist bigint, new boolean"):
+        bfs_hops(e, [verts[0]], engine=eng, resume=True)

@@ -69,6 +69,9 @@ def main() -> None:
         run_job()
         return
 
+    sys.path.insert(0, str(ROOT))
+    from peregrine_spark.session import CODEGEN_CACHE_ENTRIES
+
     zip_path = ROOT / "dist" / "peregrine_spark.zip"
     subprocess.run(
         [sys.executable, str(ROOT / "tools" / "make_pyfiles.py"), str(zip_path)],
@@ -85,6 +88,7 @@ def main() -> None:
                 spark_submit,
                 "--master", "local-cluster[2,2,2048]",
                 "--conf", "spark.sql.shuffle.partitions=8",
+                "--conf", f"spark.sql.codegen.cache.maxEntries={CODEGEN_CACHE_ENTRIES}",
                 "--py-files", str(zip_path),
                 str(script), "--run",
             ],

@@ -3,10 +3,12 @@ and its oracle_sql() side-by-side at a given SF and compare row count,
 column names, and order-insensitive values.
 
 Each entry runs under its own Spark job group, and its line reports the
-number of Spark jobs it ran beside its seconds. The seconds come from one
-run in a shared session and move by up to 2x between runs; the job count
-is exact, so it is the figure to compare between two versions of an
-entry.
+number of Spark jobs it ran and the number of classes whole-stage codegen
+compiled for it beside its seconds. The seconds come from one run in a
+shared session and move by up to 2x between runs; the job and compile
+counts are exact for a given entry order (an entry reuses the classes
+that earlier entries compiled), so they are the figures to compare
+between two versions of an entry.
 
 Usage: python tools/validate_entry.py [sf_dir] [query ...]
 
@@ -26,7 +28,7 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from peregrine_spark.session import get_spark  # noqa: E402
+from peregrine_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -67,6 +69,7 @@ def main() -> int:
         group = f"validate_entry:{name}"
         sc.setJobGroup(group, name)
         t0 = time.time()
+        compiled = codegen_compiles(spark)
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
@@ -78,7 +81,8 @@ def main() -> int:
             sc.setLocalProperty("spark.job.description", None)
         t_spark = time.time() - t0
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        spark_cost = f"{t_spark:.1f}s spark, {jobs} jobs"
+        compiled = codegen_compiles(spark) - compiled
+        spark_cost = f"{t_spark:.1f}s spark, {jobs} jobs, {compiled} compiles"
         if name not in oracles:
             print(f"OK?  {name}: rows-only ({len(sdf)} rows, {spark_cost})")
             continue
