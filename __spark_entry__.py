@@ -54,7 +54,7 @@ from peregrine_spark.similarity.ann import (
 )
 from peregrine_spark.supersteps.components import connected_components
 from peregrine_spark.supersteps.labelprop import label_propagation
-from peregrine_spark.supersteps.pagerank import pagerank, pagerank_csr
+from peregrine_spark.supersteps.pagerank import pagerank
 from peregrine_spark.text.analysis import (
     STOPWORDS,
     LANG_MARKERS,
@@ -122,6 +122,15 @@ def _one_row(spark: SparkSession, value, name: str, typ: str) -> DataFrame:
     return spark.createDataFrame([(value,)], f"{name} {typ}")
 
 
+def _tagged(**paths: DataFrame) -> DataFrame:
+    """One entry for two physical paths of one query: each path's rows
+    behind a leading ``path`` column holding its name (a column a path
+    lacks is null). The oracle is the same tagged union
+    (:func:`_tagged_sql`), so each path stays value-checked on its own."""
+    a, b = (df.select(F.lit(name).alias("path"), "*") for name, df in paths.items())
+    return a.unionByName(b, allowMissingColumns=True)
+
+
 _RELABEL_CACHE: dict[str, tuple[DataFrame, DataFrame]] = {}
 
 
@@ -175,6 +184,14 @@ TOKS_SQL = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
 
 def _sql_list(words: list[str]) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
+
+
+def _tagged_sql(**paths: str) -> str:
+    """The oracle of a :func:`_tagged` entry: each path's query behind its
+    name, unioned by column name."""
+    return "\nUNION ALL BY NAME\n".join(
+        f"SELECT '{name}' AS path, * FROM (\n{sql})" for name, sql in paths.items()
+    )
 
 
 def _pagerank_sql(iters: int, damping: float = 0.85) -> str:
@@ -631,8 +648,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # -- pattern matching tier ---------------------------------------------
     def q_triangle(spark, sf_dir):
+        # two paths: the direct count, and on-the-fly aggregation (C10,
+        # core/Peregrine.hh:453-463), where the match space is chunked on
+        # the first matching-order vertex's id range, one Spark job per
+        # chunk, the driver merging the running count between jobs (each
+        # merge = the reference's 300 ms aggregator tick; a callback can
+        # stop() on the running value). Run to completion the partial sums
+        # are exact, so the chunk partitioning itself is value-checked.
         rel = _relabelled(spark, sf_dir)
-        return triangle_count(rel).select(F.col("triangles").cast("long").alias("triangles"))
+        res = count_incremental(rel, PatternGenerator.clique(3), chunks=4)
+        assert res.completed and res.chunks_run == 4
+        return _tagged(
+            direct=triangle_count(rel).select(
+                F.col("triangles").cast("long").alias("triangles")
+            ),
+            incremental=_one_row(spark, int(res.value), "triangles", "long"),
+        )
 
     q["triangle_count"] = q_triangle
 
@@ -651,35 +682,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["four_clique_count"] = q_4clique
 
     def q_4cycle(spark, sf_dir):
+        # two paths: the generic compiler, and the closed-form wedge-pair
+        # count (sum C(common-neighbours, 2) / 2)
         rel = _relabelled(spark, sf_dir)
         m = match(rel, PatternGenerator.cycle(4))
-        return m.agg(F.count(F.lit(1)).cast("long").alias("four_cycles"))
+        return _tagged(
+            compiler=m.agg(F.count(F.lit(1)).cast("long").alias("four_cycles")),
+            closed_form=cycle4_count(rel).select(F.col("cnt").alias("four_cycles")),
+        )
 
     q["four_cycle_count"] = q_4cycle
-
-    def q_4cycle_fast(spark, sf_dir):
-        # closed-form wedge-pair path (sum C(common-neighbours, 2) / 2) —
-        # same oracle as the generic-compiler entry above, so BOTH physical
-        # strategies are value-checked independently
-        rel = _relabelled(spark, sf_dir)
-        return cycle4_count(rel).select(F.col("cnt").alias("four_cycles"))
-
-    q["four_cycle_fast"] = q_4cycle_fast
-
-    def q_triangle_incremental(spark, sf_dir):
-        # on-the-fly aggregation (C10, core/Peregrine.hh:453-463): the
-        # match space is chunked on the first matching-order vertex's id
-        # range, one Spark job per chunk, the driver merging the running
-        # count between jobs (each merge = the reference's 300 ms
-        # aggregator tick; a callback can stop() on the running value).
-        # Run to completion the partial sums are exact — same oracle as
-        # triangle_count, so the chunk partitioning itself is value-checked.
-        rel = _relabelled(spark, sf_dir)
-        res = count_incremental(rel, PatternGenerator.clique(3), chunks=4)
-        assert res.completed and res.chunks_run == 4
-        return _one_row(spark, int(res.value), "triangles", "long")
-
-    q["triangle_count_incremental"] = q_triangle_incremental
 
     def q_motif3(spark, sf_dir):
         rel = _relabelled(spark, sf_dir)
@@ -784,49 +796,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["seven_cycle_count"] = q_seven_cycle
 
     def q_output_triangles(spark, sf_dir):
-        # the S6/S7 match SINK end-to-end: triangle matches written to a
-        # dir-per-pattern parquet sink REMAPPED to original vertex ids
-        # (the reference's ids.bin remap, core/OutputManager.hh:130-143),
+        # the S6/S7 match SINK end-to-end, one path per format: triangle
+        # matches written REMAPPED to original vertex ids (the reference's
+        # ids.bin remap, core/OutputManager.hh:130-143) to a dir-per-pattern
+        # parquet sink, and to the PACKED-BINARY sink (the reference's
+        # output<BIN>, core/OutputManager.hh:80-91: fixed 3x4-byte
+        # little-endian u32 records, one file per partition, re-read
+        # distributed via binaryFile + an Arrow unpack kernel). Each is
         # re-read from disk and normalized to sorted (a, b, c) — triangles
         # are id-invariant, so the oracle enumerates them on the ORIGINAL
-        # ids directly, value-checking the whole write/remap/read loop
-        import shutil
-        import tempfile
-        from pathlib import Path
-
-        from peregrine_spark.operators.match import output
-
-        rel, mapping = _relabelled_with_map(spark, sf_dir)
-        id_dict = mapping.select("v", F.col("old").alias("key"))
-        dest = tempfile.mkdtemp(prefix="peregrine_output_triangles_")
-        try:
-            output(rel, PatternGenerator.clique(3), dest, id_dict=id_dict)
-            [pat_dir] = [p for p in Path(dest).iterdir() if p.is_dir()]
-            back = spark.read.parquet(str(pat_dir))
-            v1, v2, v3 = (F.col(c) for c in back.columns)
-            lo = F.least(v1, v2, v3)
-            hi = F.greatest(v1, v2, v3)
-            mid = (v1 + v2 + v3) - lo - hi
-            # eagerly materialize the (small) normalized result so the sink
-            # directory can be removed NOW — returning a lazy parquet read
-            # would leak a temp dir per CI/oracle run
-            return back.select(
-                lo.cast("long").alias("a"),
-                mid.cast("long").alias("b"),
-                hi.cast("long").alias("c"),
-            ).localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(dest, ignore_errors=True)
-
-    q["output_triangles"] = q_output_triangles
-
-    def q_output_triangles_bin(spark, sf_dir):
-        # the same sink loop through the PACKED-BINARY format — the
-        # reference's output<BIN> (core/OutputManager.hh:80-91): fixed
-        # 3x4-byte little-endian u32 records, one file per partition,
-        # original-id remapped on write, re-read distributed via
-        # binaryFile + an Arrow unpack kernel; same oracle as the parquet
-        # sink, so a byte-layout bug value-mismatches
+        # ids directly, value-checking each format's whole write/remap/read
+        # loop; a byte-layout bug value-mismatches
         import shutil
         import tempfile
         from pathlib import Path
@@ -836,26 +816,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         rel, mapping = _relabelled_with_map(spark, sf_dir)
         id_dict = mapping.select("v", F.col("old").alias("key"))
-        dest = tempfile.mkdtemp(prefix="peregrine_output_triangles_bin_")
-        try:
-            output(
-                rel, PatternGenerator.clique(3), dest, id_dict=id_dict, fmt="bin"
-            )
-            [pat_dir] = [p for p in Path(dest).iterdir() if p.is_dir()]
-            back = read_matches_bin(spark, pat_dir, 3)
-            v1, v2, v3 = (F.col(c) for c in back.columns)
-            lo = F.least(v1, v2, v3)
-            hi = F.greatest(v1, v2, v3)
-            mid = (v1 + v2 + v3) - lo - hi
-            return back.select(
-                lo.cast("long").alias("a"),
-                mid.cast("long").alias("b"),
-                hi.cast("long").alias("c"),
-            ).localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(dest, ignore_errors=True)
 
-    q["output_triangles_bin"] = q_output_triangles_bin
+        def round_trip(fmt, read):
+            dest = tempfile.mkdtemp(prefix=f"peregrine_output_triangles_{fmt}_")
+            try:
+                output(rel, PatternGenerator.clique(3), dest, id_dict=id_dict, fmt=fmt)
+                [pat_dir] = [p for p in Path(dest).iterdir() if p.is_dir()]
+                back = read(pat_dir)
+                v1, v2, v3 = (F.col(c) for c in back.columns)
+                lo = F.least(v1, v2, v3)
+                hi = F.greatest(v1, v2, v3)
+                mid = (v1 + v2 + v3) - lo - hi
+                # eagerly materialize the (small) normalized result so the
+                # sink directory can be removed NOW — returning a lazy read
+                # would leak a temp dir per CI/oracle run
+                return back.select(
+                    lo.cast("long").alias("a"),
+                    mid.cast("long").alias("b"),
+                    hi.cast("long").alias("c"),
+                ).localCheckpoint(eager=True)
+            finally:
+                shutil.rmtree(dest, ignore_errors=True)
+
+        return _tagged(
+            parquet=round_trip("parquet", lambda d: spark.read.parquet(str(d))),
+            bin=round_trip("bin", lambda d: read_matches_bin(spark, d, 3)),
+        )
+
+    q["output_triangles"] = q_output_triangles
 
     def q_p1_diamond(spark, sf_dir):
         # the reference's query/p1.graph (4-vertex diamond, K4 minus an
@@ -1008,12 +996,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return res.state.select("v", F.round("rank", 6).alias("rank"))
 
     q["pagerank3"] = q_pagerank
-
-    def q_pagerank_csr(spark, sf_dir):
-        res = pagerank_csr(_edges(spark, sf_dir), max_iters=3, tol=-1.0)
-        return res.state.select("v", F.round("rank", 6).alias("rank"))
-
-    q["pagerank3_csr"] = q_pagerank_csr
 
     def q_ppr(spark, sf_dir):
         # personalized from the highest-degree vertex — relabelled id 1's
@@ -1197,12 +1179,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return spark.read.parquet(f"{sf_dir}/events.parquet")
 
     def q_tumbling(spark, sf_dir):
-        out = tumbling_agg(_events(spark, sf_dir), "1 hour")
-        return out.select(
-            F.unix_micros(F.col("window_start").cast("timestamp")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "total_value",
+        # two window shapes over one event stream: hourly tumbling windows
+        # per event type, and 1-hour windows sliding by 30 minutes over all
+        # types (no event_type or total_value: null on those rows)
+        def start_us(out):
+            return F.unix_micros(out["window_start"].cast("timestamp")).alias("window_start_us")
+
+        tumbling = tumbling_agg(_events(spark, sf_dir), "1 hour")
+        sliding = sliding_agg(_events(spark, sf_dir), "1 hour", "30 minutes")
+        return _tagged(
+            tumbling=tumbling.select(
+                start_us(tumbling), "event_type", "n_events", "total_value"
+            ),
+            sliding=sliding.select(start_us(sliding), "n_events"),
         )
 
     q["events_tumbling_hourly"] = q_tumbling
@@ -1217,14 +1206,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return first_seen_events(_events(spark, sf_dir))
 
     q["events_first_seen"] = q_first_seen
-
-    def q_sliding(spark, sf_dir):
-        out = sliding_agg(_events(spark, sf_dir), "1 hour", "30 minutes")
-        return out.select(
-            F.unix_micros(F.col("window_start").cast("timestamp")).alias("window_start_us"), "n_events"
-        )
-
-    q["events_sliding_counts"] = q_sliding
 
     def q_sessions(spark, sf_dir):
         out = session_agg_batch(_events(spark, sf_dir), "30 minutes")
@@ -1292,14 +1273,13 @@ def oracle_sql() -> dict[str, str]:
 
     o: dict[str, str] = {}
 
-    o["triangle_count"] = f"""WITH e AS ({e})
+    triangles = f"""WITH e AS ({e})
 SELECT CAST(count(*) AS BIGINT) AS triangles
 FROM e e1 JOIN e e2 ON e2.src = e1.src AND e2.dst > e1.dst
 JOIN e e3 ON e3.src = e1.dst AND e3.dst = e2.dst"""
-
     # chunked counting partitions the match space exactly, so the
-    # completed incremental count answers to the same oracle
-    o["triangle_count_incremental"] = o["triangle_count"]
+    # completed incremental count answers to the same query
+    o["triangle_count"] = _tagged_sql(direct=triangles, incremental=triangles)
 
     o["wedge_count"] = f"""WITH e AS ({e}), sym AS ({SYM_SQL})
 SELECT CAST(count(*) AS BIGINT) AS wedges
@@ -1315,14 +1295,13 @@ JOIN o ad ON ad.src = tri.a AND ad.dst < tri.c
 JOIN o bd ON bd.src = tri.b AND bd.dst = ad.dst
 JOIN o cd ON cd.src = tri.c AND cd.dst = ad.dst"""
 
-    o["four_cycle_count"] = f"""WITH e AS MATERIALIZED ({e}), sym AS ({SYM_SQL})
+    four_cycles = f"""WITH e AS MATERIALIZED ({e}), sym AS ({SYM_SQL})
 SELECT CAST(count(*) AS BIGINT) AS four_cycles
 FROM sym ab JOIN sym bc ON bc.src = ab.dst
 JOIN sym cd ON cd.src = bc.dst
 JOIN sym da ON da.src = cd.dst AND da.dst = ab.src
 WHERE ab.src < ab.dst AND ab.src < bc.dst AND ab.src < cd.dst AND ab.dst < cd.dst"""
-
-    o["four_cycle_fast"] = o["four_cycle_count"]
+    o["four_cycle_count"] = _tagged_sql(compiler=four_cycles, closed_form=four_cycles)
 
     o["motif3_vertex_induced"] = f"""WITH e AS MATERIALIZED ({e}), sym AS ({SYM_SQL}),
 t AS (SELECT count(*) AS c FROM e e1
@@ -1403,16 +1382,13 @@ FROM deg"""
     )
 
     # triangles listed on ORIGINAL vertex ids, sorted within the row —
-    # exactly what the engine's sink emits after the ids-dictionary remap
-    o["output_triangles"] = f"""WITH e AS MATERIALIZED ({e})
+    # exactly what either sink format emits after the ids-dictionary remap
+    listed = f"""WITH e AS MATERIALIZED ({e})
 SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
 FROM e e1
 JOIN e e2 ON e2.src = e1.src AND e2.dst > e1.dst
 JOIN e e3 ON e3.src = e1.dst AND e3.dst = e2.dst"""
-
-    # the BIN sink round-trips the SAME matches through the packed-u32
-    # format, so the oracle is identical
-    o["output_triangles_bin"] = o["output_triangles"]
+    o["output_triangles"] = _tagged_sql(parquet=listed, bin=listed)
 
     o["fsm_labelled_edges"] = f"""WITH e AS MATERIALIZED ({e}),
 el AS (SELECT src, dst, src % 5 AS ls, dst % 5 AS ld FROM e),
@@ -1472,7 +1448,6 @@ SELECT CAST(v AS BIGINT) AS part, CAST(min(dist) AS BIGINT) AS dist
 FROM walk GROUP BY v"""
 
     o["pagerank3"] = _pagerank_sql(3)
-    o["pagerank3_csr"] = _pagerank_sql(3)
     o["personalized_pagerank3"] = _ppr_sql(3)
 
     o["connected_components"] = f"""WITH RECURSIVE e AS ({ef}), sym AS ({SYM_SQL}),
@@ -1753,12 +1728,20 @@ FROM documents"""
   FROM documents)
 SELECT asset_id, unnest(generate_series(0, total - 1, 2)[1:8]) AS frame_index FROM a"""
 
-    o["events_tumbling_hourly"] = """SELECT
+    o["events_tumbling_hourly"] = _tagged_sql(
+        tumbling="""SELECT
   epoch_us(date_trunc('hour', ts)) AS window_start_us,
   event_type,
   CAST(count(*) AS BIGINT) AS n_events,
   round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2"""
+FROM events GROUP BY 1, 2""",
+        sliding="""WITH b AS (
+  SELECT time_bucket(INTERVAL '30 minutes', ts) AS b30 FROM events),
+w AS (
+  SELECT unnest([epoch_us(b30), epoch_us(b30 - INTERVAL '30 minutes')]) AS window_start_us
+  FROM b)
+SELECT window_start_us, CAST(count(*) AS BIGINT) AS n_events FROM w GROUP BY 1""",
+    )
 
     o["events_first_seen"] = """SELECT user_id, event_type,
        event_id AS first_event_id, epoch_us(ts) AS first_ts_us
@@ -1766,13 +1749,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
                                    ORDER BY ts, event_id) AS rn
       FROM events)
 WHERE rn = 1"""
-
-    o["events_sliding_counts"] = """WITH b AS (
-  SELECT time_bucket(INTERVAL '30 minutes', ts) AS b30 FROM events),
-w AS (
-  SELECT unnest([epoch_us(b30), epoch_us(b30 - INTERVAL '30 minutes')]) AS window_start_us
-  FROM b)
-SELECT window_start_us, CAST(count(*) AS BIGINT) AS n_events FROM w GROUP BY 1"""
 
     o["events_sessions"] = """WITH flagged AS (
   SELECT user_id, ts, event_id,

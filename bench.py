@@ -10,8 +10,8 @@ Default run (what the driver invokes):
       -> one JSON line {"metric", "value" (total sec), "unit": "sec",
          "queries": {name: sec}, "sf", plus edges/sec detail fields}.
          Superstep throughput is steady-state: the first superstep (which
-         materializes the cached symmetrized/CSR edge structures) is
-         excluded, mirroring how a long-running production job amortizes it.
+         materializes the cached symmetrized edge table) is excluded,
+         mirroring how a long-running production job amortizes it.
          Every measured query runs ``--reps`` times (default 3), then keeps
          appending reps while the running min still improves >= 5% on the
          last rep (cap 10) and reports the per-query MIN; per-rep arrays
@@ -66,7 +66,7 @@ from peregrine_spark.patterns.small_graph import PatternGenerator  # noqa: E402
 from peregrine_spark.plans.fast_counts import clique_rows, oriented  # noqa: E402
 from peregrine_spark.session import get_spark  # noqa: E402
 from peregrine_spark.supersteps.components import connected_components  # noqa: E402
-from peregrine_spark.supersteps.pagerank import pagerank, pagerank_csr  # noqa: E402
+from peregrine_spark.supersteps.pagerank import pagerank  # noqa: E402
 from peregrine_spark.tables import powerlaw_edges, source_repo_table, with_sha256  # noqa: E402
 
 SKEWED = "skewed (power-law hub) "
@@ -182,8 +182,8 @@ class Bench:
 
 
 def run_suite(b: Bench) -> dict:
-    """PageRank, CSR PageRank, triangle count and connected components;
-    the input's datagen and ingest seconds count towards ``value``. An
+    """PageRank, triangle count and connected components; the input's
+    datagen and ingest seconds count towards ``value``. An
     explicit ``--shuffle`` also pins the superstep operators' internal
     partition counts (identical data layout at N and 4N cores; only
     parallelism differs); without it they auto-size to the data
@@ -193,16 +193,15 @@ def run_suite(b: Bench) -> dict:
     detail: dict[str, float] = {}
 
     pr_iters = 5
-    for name, program in (("pagerank", pagerank), ("pagerank_csr", pagerank_csr)):
-        _, runs = timings.measure(
-            name,
-            lambda: program(edges, max_iters=pr_iters, tol=-1.0,
-                            check_every=pr_iters, n_partitions=pin),
-            reps,
-        )
-        steady = min(_steady(r.metrics) for r in runs)
-        detail[f"{name}_sec_per_superstep"] = steady
-        detail[f"{name}_edges_per_sec_per_superstep"] = 2 * b.n_edges / steady
+    _, runs = timings.measure(
+        "pagerank",
+        lambda: pagerank(edges, max_iters=pr_iters, tol=-1.0,
+                         check_every=pr_iters, n_partitions=pin),
+        reps,
+    )
+    steady = min(_steady(r.metrics) for r in runs)
+    detail["pagerank_sec_per_superstep"] = steady
+    detail["pagerank_edges_per_sec_per_superstep"] = 2 * b.n_edges / steady
 
     triangle_count(edges).collect()  # warm (materializes AQE stats path)
     best_tri, _ = timings.measure(
@@ -344,7 +343,6 @@ def scaling(args) -> dict:
     else:
         metric = "scaling efficiency N->4N cores (per-superstep, steady state)"
         keys = {"pagerank": "pagerank_sec_per_superstep",
-                "pagerank_csr": "pagerank_csr_sec_per_superstep",
                 "cc": "cc_sec_per_superstep",
                 "triangle": "triangle_count"}
     # per-superstep seconds are top-level fields, query seconds in "queries"

@@ -5,8 +5,8 @@ system (AlexLazcano/peregrine, a fork of pdclab/Peregrine, EuroSys'20) in
 idiomatic Spark: the data graph is an edge-table DataFrame, pattern matching
 compiles to Catalyst join plans with symmetry-breaking predicates, and the
 link-graph tier (PageRank / connected components / label propagation /
-triangle counting) runs as superstep DataFrame joins with vectorized
-pandas/Arrow gather-scatter kernels.
+triangle counting) runs as superstep DataFrame joins and map-side-combined
+aggregations.
 
 Nothing here is a port: the reference's DFS backtracking matcher, thread
 barriers and MPI work stealing are replaced by Catalyst joins, Spark stages

@@ -246,7 +246,8 @@ class SuperstepEngine:
         # AQE re-plans every superstep query and interacts badly with
         # localCheckpoint partition materialization (measured 10x superstep
         # slowdown); iterative supersteps use static partitioning — skew is
-        # handled structurally (chunked CSR blocks, degree orientation).
+        # handled structurally (map-side partial aggregation, degree
+        # orientation).
         with conf_override(self.spark, {"spark.sql.adaptive.enabled": "false"}):
             for i in range(start_iter, max_iters):
                 t0 = time.monotonic()

@@ -149,8 +149,8 @@ def powerlaw_edges(
     relabel: bool = True,
 ) -> DataFrame:
     """Deterministic skewed edge table with a guaranteed mega-hub — the
-    adversarial input for the skew machinery (chunked CSR blocks, degree
-    orientation, map-side partial aggregation).
+    adversarial input for the skew machinery (degree orientation, map-side
+    partial aggregation).
 
     Each endpoint is ``floor(n_vertices ** u)`` with u hash-uniform in
     [0, 1): P(vertex = v) ∝ 1/v (log-uniform), so vertex 1 collects

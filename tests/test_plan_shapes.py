@@ -61,7 +61,7 @@ def test_text_and_graph_hot_paths_stay_jvm_side(spark):
     Arrow-batched ArrowEvalPython/MapInPandas) in the text ops or the
     triangle plan — everything is built-in column expressions that stay
     inside the JVM and whole-stage codegen. (Arrow kernels are allowed
-    only where declared: the CSR gather-scatter, the multimodal decode.)"""
+    only where declared: the multimodal decode.)"""
     from peregrine_spark.operators.triangles import local_clustering, triangle_count
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -157,7 +157,7 @@ def test_superstep_plan_hash_joins_copartitioned_state(spark, program):
     joins the state (already hash-partitioned on the vertex key by the
     previous step) with the adjacency (repartitioned on ``src`` by
     vertex_program) in place: no broadcast, however small the state; no
-    sort; and one shuffle, the aggregation's."""
+    sort; one shuffle, the aggregation's; and no Python evaluator."""
     from peregrine_spark.supersteps import (
         SuperstepEngine,
         bfs_hops,
@@ -197,3 +197,5 @@ def test_superstep_plan_hash_joins_copartitioned_state(spark, program):
     ]
     assert len(shuffles) == 1, plan
     assert "ShuffledHashJoin" in plan, plan
+    for evaluator in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert evaluator not in plan, plan

@@ -11,7 +11,6 @@ from peregrine_spark.supersteps import (
     connected_components,
     label_propagation,
     pagerank,
-    pagerank_csr,
 )
 
 from tests.conftest import edges_df
@@ -34,18 +33,6 @@ def test_pagerank_matches_oracle(spark):
     for v in truth:
         assert abs(got[v] - truth[v]) < 1e-6, v
     assert abs(sum(got.values()) - 1.0) < 1e-6
-
-
-def test_pagerank_csr_equals_dataframe_strategy(spark):
-    pairs = er_graph(35, 0.2, seed=37)
-    e = edges_df(spark, pairs)
-    a = pagerank(e, max_iters=8, tol=0.0)
-    b = pagerank_csr(e, max_iters=8, tol=0.0, chunk_size=4)  # force multi-chunk
-    ga = {r["v"]: r["rank"] for r in a.state.collect()}
-    gb = {r["v"]: r["rank"] for r in b.state.collect()}
-    assert set(ga) == set(gb)
-    for v in ga:
-        assert abs(ga[v] - gb[v]) < 1e-9, v
 
 
 def test_pagerank_uniform_on_regular_graphs(spark):
@@ -339,7 +326,6 @@ def test_operators_leave_session_conf_unchanged(spark):
     )
     runs = {
         "pagerank": lambda: pagerank(e, max_iters=2, tol=-1.0),
-        "pagerank_csr": lambda: pagerank_csr(e, max_iters=2, tol=-1.0),
         "cc_minprop": lambda: connected_components(e),
         "cc_contraction": lambda: connected_components(e, strategy="contraction"),
         "label_propagation": lambda: label_propagation(e, max_iters=2),
@@ -425,11 +411,10 @@ def test_resume_from_torn_checkpoint(spark, tmp_path):
 
 
 def _path_programs(e):
-    """The six vertex programs on ``e`` as functions of the superstep count,
+    """The five vertex programs on ``e`` as functions of the superstep count,
     each checked every superstep where it takes ``check_every``."""
     return {
         "pagerank": lambda n: pagerank(e, max_iters=n, tol=-1.0, check_every=1),
-        "pagerank_csr": lambda n: pagerank_csr(e, max_iters=n, tol=-1.0, check_every=1),
         "cc_minprop": lambda n: connected_components(e, max_iters=n, check_every=1),
         "cc_contraction": lambda n: connected_components(
             e, max_iters=n, strategy="contraction"

@@ -4,8 +4,9 @@ Builds the --py-files zip, then spark-submits this file to a
 ``local-cluster[2,2,2048]`` master: two REAL executor JVMs (separate
 processes, separate heaps — unlike local[N]'s threads), the package
 shipped only via --py-files (cwd is moved so the repo checkout is NOT on
-any path). Runs ingest → PageRank (both strategies) → triangle count →
-connected components and cross-checks the strategies against each other.
+any path). Runs ingest → PageRank → triangle count → connected components,
+and checks PageRank against a driver-side NumPy iteration of the same
+formula.
 
 Orchestrate:  python tools/cluster_smoke.py
 Worker mode:  (spark-submit invokes this same file with --run)
@@ -26,12 +27,14 @@ ROOT = Path(__file__).resolve().parent.parent
 def run_job() -> None:
     """Executed inside spark-submit; peregrine_spark importable ONLY from
     the --py-files zip."""
+    import numpy as np
+
     import peregrine_spark as ps
     from peregrine_spark.graph.build import build_graph
     from peregrine_spark.operators.triangles import triangle_count
     from peregrine_spark.patterns.small_graph import PatternGenerator
     from peregrine_spark.supersteps.components import connected_components
-    from peregrine_spark.supersteps.pagerank import pagerank, pagerank_csr
+    from peregrine_spark.supersteps.pagerank import pagerank
     from peregrine_spark.tables import source_repo_table, with_sha256
 
     spark = ps.get_spark(app_name="cluster_smoke", shuffle_partitions=8)
@@ -43,11 +46,23 @@ def run_job() -> None:
     n_edges = edges.count()
     assert n_edges > 1000, n_edges
 
-    pr_a = pagerank(edges, max_iters=5, tol=-1.0, check_every=5)
-    pr_b = pagerank_csr(edges, max_iters=5, tol=-1.0, check_every=5)
-    a = {r["v"]: r["rank"] for r in pr_a.state.collect()}
-    b = {r["v"]: r["rank"] for r in pr_b.state.collect()}
-    assert set(a) == set(b) and all(abs(a[v] - b[v]) < 1e-9 for v in a)
+    pr = pagerank(edges, max_iters=5, tol=-1.0, check_every=5)
+    got = {r["v"]: r["rank"] for r in pr.state.collect()}
+    # the pagerank module docstring's iteration over the collected edges:
+    # rank_0 = 1/n, rank_{i+1}(v) = (1-d)/n + d * sum_{u in N(v)} rank_i(u)/deg(u)
+    ends = np.array(edges.select("src", "dst").collect(), dtype=np.int64)
+    ids, idx = np.unique(ends, return_inverse=True)
+    idx = idx.reshape(ends.shape)
+    tails = np.concatenate([idx[:, 0], idx[:, 1]])
+    heads = np.concatenate([idx[:, 1], idx[:, 0]])
+    n = len(ids)
+    deg = np.bincount(tails, minlength=n)
+    rank = np.full(n, 1.0 / n)
+    for _ in range(5):
+        inflow = np.bincount(heads, weights=rank[tails] / deg[tails], minlength=n)
+        rank = (1 - 0.85) / n + 0.85 * inflow
+    assert set(got) == set(ids.tolist()), (len(got), n)
+    assert all(abs(got[v] - r) < 1e-9 for v, r in zip(ids.tolist(), rank))
 
     tri = triangle_count(edges).collect()[0]["triangles"]
     cc = connected_components(edges, max_iters=64, check_every=2)
