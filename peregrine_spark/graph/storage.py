@@ -1,24 +1,22 @@
-"""Bucketed persistent storage for the canonical edge table.
+"""Bucketed persistent storage: how a prepared canonical edge table is stored.
 
 The reference converts a graph once to its binary CSR layout (ids.bin +
 adjacency, core/DataConverter.cc) and every query thereafter reads that
 layout directly. The Spark-native equivalent of "the adjacency is already
-laid out for matching" is a BUCKETED table: writing the canonical edge
-table bucketed (and sorted) by ``src`` means every subsequent self-join on
-``src`` — the first leg of every pattern join chain, the superstep
-adjacency join — reads co-located buckets and skips the shuffle entirely
-(Catalyst sees the scan's HashPartitioning(src, n) and drops the
-Exchange). At 10^12-file scale this is the difference between re-shuffling
-the edge table once per query and never shuffling it at all; on a
-lakehouse this role is played by the table format's bucket/cluster spec
-(e.g. an Iceberg ``bucket(src, N)`` partition transform) — Spark's
-``bucketBy`` is the sandbox stand-in with identical join semantics.
+laid out for matching" is a BUCKETED table: the canonical ``(src < dst)``
+edge table, written bucketed and sorted by ``dst``, then ``src``. Every
+operator reads this one table; there is no second, pre-oriented layout.
 
-The triangle path stores the ORIENTED table (``fast_counts.oriented``:
-the greatest/least swap is opaque to Catalyst, so only a stored oriented
-layout keeps the bucketing) and lists triangles with
-``fast_counts.clique_rows(edges, 3, pre_oriented=True)``: the wedge
-self-join then reads co-located buckets (``bench.py --bucketed``).
+``dst`` is the bucket key because it is the wedge join key:
+``fast_counts.oriented`` is a plain column rename (``dst AS src``), which
+Catalyst sees through, so the scan's HashPartitioning(dst, n) satisfies the
+oriented wedge self-join of ``clique_rows`` and the public
+``triangle_count`` / ``clique_count`` drop that join's shuffle (3
+Exchanges instead of 6 for plain parquet, with AQE and auto-broadcast off;
+``bench.py --bucketed``). On a lakehouse this role is played by the table
+format's bucket/cluster spec (e.g. an Iceberg ``bucket(dst, N)`` partition
+transform); Spark's ``bucketBy`` is the sandbox stand-in with identical
+join semantics. Read the table back with ``spark.table(name)``.
 
 Bucket-count choice mirrors :func:`auto_shuffle_partitions`: one bucket
 per ~2M edges, floor 8 — big enough that a bucket fits in executor
@@ -33,12 +31,10 @@ from peregrine_spark.supersteps.engine import auto_shuffle_partitions
 
 
 def save_edges_bucketed(
-    edges: DataFrame,
-    table: str,
-    n_buckets: int | None = None,
-    mode: str = "overwrite",
+    edges: DataFrame, table: str, n_buckets: int | None = None
 ) -> int:
-    """Persist a canonical (src, dst) edge table bucketed + sorted by src.
+    """Persist a canonical (src<dst) edge table bucketed by ``dst`` and
+    sorted by (dst, src), replacing any table of that name.
 
     Returns the bucket count used. The table lands in the session
     warehouse (``spark.sql.warehouse.dir``) under ``table``.
@@ -46,12 +42,11 @@ def save_edges_bucketed(
     spark = edges.sparkSession
     if n_buckets is None:
         n_buckets = max(8, auto_shuffle_partitions(spark, edges.count()))
-    if mode == "overwrite":
-        _drop_table_and_location(spark, table)
+    _drop_table_and_location(spark, table)
     (
-        edges.write.mode(mode)
-        .bucketBy(n_buckets, "src")
-        .sortBy("src", "dst")
+        edges.write.mode("overwrite")
+        .bucketBy(n_buckets, "dst")
+        .sortBy("dst", "src")
         .saveAsTable(table)
     )
     return n_buckets
@@ -101,9 +96,3 @@ def _drop_table_and_location(spark: SparkSession, table: str) -> None:
     fs = path.getFileSystem(conf)
     if fs.exists(path):
         fs.delete(path, True)
-
-def load_edges_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed edge table. Joins/aggregations keyed on ``src``
-    consume the bucket layout without a shuffle (requires the default
-    ``spark.sql.sources.bucketing.enabled=true``)."""
-    return spark.table(table)

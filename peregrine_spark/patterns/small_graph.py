@@ -310,11 +310,11 @@ class PatternGenerator:
         class (parity with core/PatternGenerator.cc:477-548, which reads
         nauty g6 files graph{3..9}c.g6).
 
-        Sizes <= 6 enumerate edge subsets directly; sizes 7-9 first look for
-        a bundled self-generated g6 file (patterns/data/graph{n}c.g6), then
-        fall back to orderly levelwise generation (``_connected`` — exact,
-        but minutes at size 8 and hours at size 9; drop a nauty
-        graph9c.g6 into patterns/data/ to make size 9 instant).
+        A bundled self-generated g6 file (patterns/data/graph{n}c.g6, sizes
+        7-9) is read when present; otherwise orderly levelwise generation
+        (``_connected`` — milliseconds up to size 6, but minutes at size 8
+        and hours at size 9; drop a nauty graph9c.g6 into patterns/data/ to
+        make size 9 instant).
 
         vertex_based + anti_edges: add anti-edges between all non-adjacent
         pairs (vertex-induced semantics). Otherwise edge-induced patterns.
@@ -323,27 +323,8 @@ class PatternGenerator:
 
         if size > 9:
             raise ValueError("patterns supported up to size 9 (reference parity)")
-        key = size
-        if key in PatternGenerator._all_cache:
-            out = PatternGenerator._all_cache[key]
-        elif size <= 6:
-            pairs = list(itertools.combinations(range(1, size + 1), 2))
-            seen: dict = {}
-            for mask in range(1 << len(pairs)):
-                edges = [pairs[i] for i in range(len(pairs)) if mask >> i & 1]
-                if len(edges) < size - 1:
-                    continue
-                g = SmallGraph(edges=edges)
-                if g.num_vertices != size or not g.is_connected():
-                    continue
-                cf = canonical_form(g)
-                if cf not in seen:
-                    seen[cf] = g
-            out = sorted(
-                seen.values(), key=lambda g: (g.num_true_edges, canonical_form(g))
-            )
-            PatternGenerator._all_cache[key] = out
-        else:
+        out = PatternGenerator._all_cache.get(size)
+        if out is None:
             text = _bundled_g6_text(size)
             if text is not None:
                 # bundled files are pre-sorted by (num_true_edges,
@@ -360,7 +341,7 @@ class PatternGenerator:
                     PatternGenerator._connected(size),
                     key=lambda g: (g.num_true_edges, canonical_form(g)),
                 )
-            PatternGenerator._all_cache[key] = out
+            PatternGenerator._all_cache[size] = out
         if vertex_based and anti_edges:
             out2 = []
             for g in out:

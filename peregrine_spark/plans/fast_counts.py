@@ -35,10 +35,10 @@ from peregrine_spark.patterns.small_graph import SmallGraph
 def oriented(edges: DataFrame) -> DataFrame:
     """Orient canonical (src<dst) edges from the lower-degree endpoint to the
     higher-degree endpoint. Ids ascend as degree descends, so the higher id
-    is the lower-degree endpoint: orient from greatest(id) to least(id)."""
-    return edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    )
+    (``dst``) is the lower-degree endpoint: orienting is a column rename,
+    which Catalyst sees through, so a stored table bucketed by ``dst``
+    (graph/storage.py) keeps its layout under the oriented wedge join."""
+    return edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
 def _comb_dec(col: Column, k: int) -> Column:
@@ -78,7 +78,7 @@ def _shape(p: SmallGraph) -> str | None:
     return None
 
 
-def clique_rows(edges: DataFrame, k: int, pre_oriented: bool = False) -> DataFrame:
+def clique_rows(edges: DataFrame, k: int) -> DataFrame:
     """Unique k-clique rows (v1 > v2 > ... > vk, id order == ascending
     degree order) via the degree-oriented join chain — the engine's one
     clique listing (triangles, per-vertex triangles and the k-truss support
@@ -92,14 +92,8 @@ def clique_rows(edges: DataFrame, k: int, pre_oriented: bool = False) -> DataFra
     Orienting every edge toward its higher-degree endpoint bounds the
     oriented out-degree by O(sqrt(|E|)), so the wedge join never explodes
     on hubs (the skew the reference handles with MPI work stealing,
-    RangeQueue.hh). Every predicate is an equi-join key or a range filter.
-
-    ``pre_oriented=True`` asserts ``edges`` is ALREADY :func:`oriented`
-    (src > dst) and skips the swap. This matters for bucketed storage: the
-    swap is opaque to Catalyst, so a table bucketed by ``src`` only feeds
-    the wedge self-join shuffle-free when the stored layout is the oriented
-    one (see graph/storage.py and ``bench.py --bucketed``)."""
-    o = edges if pre_oriented else oriented(edges)
+    RangeQueue.hh). Every predicate is an equi-join key or a range filter."""
+    o = oriented(edges)
     # m holds v1 > v2 > ... > v_i (id order == ascending degree order)
     m = o.select(F.col("src").alias("v1"), F.col("dst").alias("v2"))
     for i in range(3, k + 1):

@@ -22,10 +22,18 @@ log = logging.getLogger(__name__)
 # compiles about 180 distinct classes.
 CODEGEN_CACHE_ENTRIES = 1000
 
-# release_checkpoint calls that failed in this process (logged and counted,
-# not raised); read it as ``session.release_failures``
+# Logged and counted in this process, not raised: release_checkpoint calls
+# that failed (``session.release_failures``) and superstep runs that used up
+# ``max_iters`` short of their tolerance (``session.nonconverged_runs``)
 release_failures = 0
-_release_failures_lock = threading.Lock()
+nonconverged_runs = 0
+_counters_lock = threading.Lock()
+
+
+def count_event(counter: str) -> None:
+    """Add 1 to the module counter named ``counter`` (thread-safe)."""
+    with _counters_lock:
+        globals()[counter] += 1
 
 
 def get_spark(
@@ -161,9 +169,7 @@ def release_checkpoint(df) -> None:
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
     except Exception as exc:
-        global release_failures
-        with _release_failures_lock:
-            release_failures += 1
+        count_event("release_failures")
         log.warning("release_checkpoint: could not release checkpoint blocks: %r", exc)
 
 

@@ -24,6 +24,7 @@ from dataclasses import replace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
@@ -88,7 +89,7 @@ def _large_star(E: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbour to the minimum of the
     neighbourhood (incl. self): for each u, m = min(N(u) ∪ {u}); emit
     (v, m) for v ∈ N(u), v > u. Output edges all point high→low."""
-    sym = E.union(E.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    sym = symmetrized(E)
     mn = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
     mn = mn.select("src", F.least("_mn", F.col("src")).alias("_m"))
     return (

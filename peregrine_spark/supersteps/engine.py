@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
-from peregrine_spark.session import conf_override, release_checkpoint
+from peregrine_spark.session import conf_override, count_event, release_checkpoint
 
 log = logging.getLogger(__name__)
 
@@ -161,7 +161,8 @@ class SuperstepEngine:
     job per step for the per-partition lineage it records.)
 
     A run with ``tol >= 0`` that uses up ``max_iters`` without converging
-    logs a warning; fixed-step runs pass ``tol=-1``.
+    logs a warning and is counted in ``session.nonconverged_runs``;
+    fixed-step runs pass ``tol=-1``.
     """
 
     def __init__(
@@ -300,6 +301,7 @@ class SuperstepEngine:
                 if converged:
                     break
         if not converged and tol >= 0:
+            count_event("nonconverged_runs")
             log.warning(
                 "superstep run %r did not converge in %d supersteps "
                 "(last delta %s, tol %s)",

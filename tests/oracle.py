@@ -93,6 +93,26 @@ def brute_count(
     return n_hom // n_aut
 
 
+def brute_connected_patterns(size: int) -> list[SmallGraph]:
+    """Every connected graph on ``size`` vertices, one per isomorphism
+    class, by enumerating all edge subsets of K_size — independent of the
+    levelwise generator behind ``PatternGenerator.all``, and exponential in
+    C(size, 2), so for sizes <= 6. Sorted the way ``all`` sorts:
+    (edge count, canonical form)."""
+    from peregrine_spark.patterns.canonical import canonical_form
+
+    pairs = list(itertools.combinations(range(1, size + 1), 2))
+    seen: dict = {}
+    for mask in range(1 << len(pairs)):
+        edges = [pairs[i] for i in range(len(pairs)) if mask >> i & 1]
+        if len(edges) < size - 1:
+            continue
+        g = SmallGraph(edges=edges)
+        if g.num_vertices == size and g.is_connected():
+            seen.setdefault(canonical_form(g), g)
+    return sorted(seen.values(), key=lambda g: (g.num_true_edges, canonical_form(g)))
+
+
 def brute_induced_counts(pairs, size: int):
     """Vertex-induced motif counts: for every size-k connected induced
     subgraph class, its count. Returns dict canonical_form -> count."""

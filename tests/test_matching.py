@@ -14,7 +14,6 @@ from peregrine_spark.operators.match import count, count_motifs, existence, matc
 from peregrine_spark.operators.triangles import triangle_count, triangle_count_per_vertex
 from peregrine_spark.patterns import PatternGenerator, SmallGraph
 from peregrine_spark.patterns.canonical import canonical_form
-from peregrine_spark.plans.fast_counts import clique_rows, oriented
 
 from tests.conftest import P1_DIAMOND, edges_df
 from tests.oracle import brute_count, brute_induced_counts, er_graph
@@ -37,9 +36,6 @@ def test_triangle_count_er_oracle(spark):
     expected = brute_count(pairs, PatternGenerator.clique(3))
     got = triangle_count(edges_df(spark, pairs)).collect()[0][0]
     assert got == expected
-    # the bucketed-storage input: an already oriented table, no swap
-    o = oriented(edges_df(spark, pairs))
-    assert clique_rows(o, 3, pre_oriented=True).count() == expected
     per_v = dict(triangle_count_per_vertex(edges_df(spark, pairs)).collect())
     assert sum(per_v.values()) == 3 * expected
 

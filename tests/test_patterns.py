@@ -19,6 +19,7 @@ from peregrine_spark.plans.compiler import matching_order
 from peregrine_spark.plans.counts import convert_counts, num_mappings
 
 from tests.conftest import NO_REFERENCE, P1_DIAMOND, REFERENCE
+from tests.oracle import brute_connected_patterns
 
 
 def test_generators():
@@ -140,13 +141,14 @@ def test_anti_vertex_classification():
 
 
 def test_connected_enumeration_matches_direct():
-    """Incremental (trees + edge levels) agrees with direct edge-subset
-    enumeration where both work (A001349: 21 at size 5, 112 at size 6)."""
-    for size, expect in [(5, 21), (6, 112)]:
-        inc = PatternGenerator._connected(size)
-        assert len(inc) == expect
-        direct = PatternGenerator.all(size, vertex_based=False)
-        assert {canonical_form(g) for g in inc} == {canonical_form(g) for g in direct}
+    """The levelwise generator behind ``all`` returns, in order, the classes
+    of the direct edge-subset enumeration (A001349: 2, 6, 21, 112 at sizes
+    3..6)."""
+    for size, expect in [(3, 2), (4, 6), (5, 21), (6, 112)]:
+        got = PatternGenerator.all(size, vertex_based=False)
+        direct = brute_connected_patterns(size)
+        assert len(got) == expect
+        assert [canonical_form(g) for g in got] == [canonical_form(g) for g in direct]
 
 
 def test_all_size7():

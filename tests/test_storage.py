@@ -1,38 +1,42 @@
-"""Bucketed edge-table storage: round-trip + shuffle-free self-joins."""
+"""Bucketed edge-table storage: round-trip + a shuffle-free wedge join."""
 
-from pyspark.sql import functions as F
-
-from peregrine_spark.graph.storage import load_edges_bucketed, save_edges_bucketed
+from peregrine_spark.graph.storage import save_edges_bucketed
 from peregrine_spark.operators.triangles import triangle_count
 
 from tests.conftest import edges_df
 from tests.oracle import er_graph
 
 
-def test_bucketed_roundtrip_and_colocated_join(spark):
+def test_bucketed_roundtrip_and_colocated_join(spark, tmp_path):
     e = edges_df(spark, er_graph(150, 0.06, seed=13))
     save_edges_bucketed(e, "t_edges_bucketed", n_buckets=8)
-    b = load_edges_bucketed(spark, "t_edges_bucketed")
+    b = spark.table("t_edges_bucketed")
     assert {tuple(r) for r in b.collect()} == {tuple(r) for r in e.collect()}
+    plain_dir = str(tmp_path / "plain_edges")
+    e.write.parquet(plain_dir)
+    plain = spark.read.parquet(plain_dir)
 
-    # the first leg of every pattern join chain is a self-join on src; over
-    # the bucketed table it must consume the bucket layout with no shuffle
+    # triangle_count's oriented wedge self-join is keyed on the canonical
+    # table's dst: over the bucketed table it consumes the bucket layout
+    # and skips that join's shuffle
     before_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        j = b.alias("a").join(b.alias("b"), F.col("a.src") == F.col("b.src"))
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
+        def exchanges(edges):
+            plan = triangle_count(edges)._jdf.queryExecution().executedPlan()
+            return plan.toString().count("Exchange")
+
+        assert exchanges(b) == 3
+        assert exchanges(plain) == 6
+        t_bucketed = triangle_count(b).collect()[0]["triangles"]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before_bc)
         spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
 
     # results over the bucketed table match the in-memory table
-    t1 = triangle_count(e).collect()[0]["triangles"]
-    t2 = triangle_count(b).collect()[0]["triangles"]
-    assert t1 == t2
+    assert t_bucketed == triangle_count(e).collect()[0]["triangles"]
 
 
 def test_bucketed_overwrite_survives_orphan_location(spark):
@@ -49,7 +53,7 @@ def test_bucketed_overwrite_survives_orphan_location(spark):
     assert not Path(f"{wh}/t_edges_orphan").exists()
     Path(f"{wh}/t_edges_orphan").mkdir(parents=True)
     save_edges_bucketed(e, "t_edges_orphan", n_buckets=8)
-    b = load_edges_bucketed(spark, "t_edges_orphan")
+    b = spark.table("t_edges_orphan")
     assert b.count() == e.count()
 
 
@@ -71,6 +75,6 @@ def test_overwrite_preserves_external_table_data(spark, tmp_path):
         files = list(Path(ext_dir).glob("*.parquet"))
         assert files, "external table data was deleted"
         assert spark.read.parquet(ext_dir).count() == e.count()
-        assert load_edges_bucketed(spark, "t_edges_ext").count() == e.count()
+        assert spark.table("t_edges_ext").count() == e.count()
     finally:
         spark.sql("DROP TABLE IF EXISTS t_edges_ext")

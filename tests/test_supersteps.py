@@ -353,6 +353,19 @@ def test_non_convergence_is_logged(spark, caplog):
     assert not caplog.records
 
 
+def test_non_convergence_is_counted(spark):
+    """A run that uses up max_iters short of tol adds 1 to
+    ``session.nonconverged_runs``; a fixed-step run (tol < 0) adds none."""
+    from peregrine_spark import session
+
+    path = edges_df(spark, [(i, i + 1) for i in range(1, 10)])
+    before = session.nonconverged_runs
+    assert not connected_components(path, max_iters=1).converged
+    assert session.nonconverged_runs == before + 1
+    pagerank(path, max_iters=1, tol=-1.0)
+    assert session.nonconverged_runs == before + 1
+
+
 def test_operators_accept_pinned_partitions(spark):
     # the scaling-evidence path pins the layout on both sides
     pairs = er_graph(30, 0.2, seed=91)
