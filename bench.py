@@ -50,6 +50,7 @@ import argparse
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
 import time
@@ -260,6 +261,8 @@ def run_bucketed(b: Bench) -> dict:
     plain_ex, tri1 = measure("triangle_plain", lambda: spark.read.parquet(tmp))
     buck_ex, tri2 = measure("triangle_bucketed", lambda: spark.table("bench_edges_bucketed"))
     assert tri0 == tri1 == tri2, (tri0, tri1, tri2)
+    spark.sql("DROP TABLE bench_edges_bucketed")
+    shutil.rmtree(tmp)
     q = b.timings.queries
     return b.report(
         "in-session vs bucketed triangle count (canonical edge table)",

@@ -13,9 +13,7 @@ Loader for the reference engine's on-disk graph directories
   (core/DataGraph.cc:128-143) — only needed to remap match output.
 
 The parse is driver-side numpy: the format is a single sequential binary
-file (inherently one-reader), so the scale path for big graphs is a
-one-time convert to parquet via :func:`to_parquet` and everything
-downstream reads the distributed table.  For parity validation against the
+file (inherently one-reader). For parity validation against the
 reference's committed datasets (citeseer: 3,264 vertices / 4,536 edges)
 driver-side is exactly right.
 
@@ -203,16 +201,6 @@ def read_matches_bin(
                 )
 
     return src.mapInPandas(unpack, schema)
-
-
-def to_parquet(spark: SparkSession, bin_dir: str | Path, out_dir: str | Path) -> None:
-    """One-time convert of a reference binary graph to parquet tables —
-    the scale path: everything downstream reads the distributed table."""
-    edges, vertices = load_bin_graph(spark, bin_dir)
-    out = str(out_dir)
-    edges.write.mode("overwrite").parquet(f"{out}/edges.parquet")
-    if vertices is not None:
-        vertices.write.mode("overwrite").parquet(f"{out}/vertices.parquet")
 
 
 _EDGE_RE = re.compile(r"([\[\(])\s*([0-9]+)(?:,(-?[0-9]+))?[-~]([0-9]+)(?:,(-?[0-9]+))?[\]\)]")

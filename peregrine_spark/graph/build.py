@@ -150,41 +150,10 @@ def symmetrized(edges: DataFrame) -> DataFrame:
     return edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-def peel(edges: DataFrame, survivors, max_iters: int) -> tuple[DataFrame, bool]:
-    """Iterate ``survivors`` (a function from the current edge table to the
-    rows that survive one round) to its fixpoint; returns (edges,
-    converged). The one peel loop behind :func:`kcore` and
-    :func:`peregrine_spark.operators.triangles.ktruss`.
-
-    Peels only shrink the edge set, so fixpoint is detected by count
-    equality. Every round eagerly ``localCheckpoint``s the survivors: the
-    logical plan must be TRUNCATED, not just cached (a persist keeps the
-    lineage growing and Catalyst re-analysis goes superlinear after tens of
-    rounds). Only the latest checkpoint stays alive: each round releases
-    the previous one (``release_checkpoint``, not ``unpersist``: checkpoint
-    blocks live on the LogicalRDD, which ``DataFrame.unpersist`` misses).
-    ``converged`` is False when ``max_iters`` rounds end short of the
-    fixpoint with edges left."""
-    cur = edges.localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_iters):
-        if n == 0:
-            break
-        nxt = survivors(cur).localCheckpoint(eager=True)
-        m = nxt.count()
-        release_checkpoint(cur)
-        cur = nxt
-        if m == n:
-            return cur, True
-        n = m
-    return cur, n == 0
-
-
 def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     """Edges of the k-core (maximal subgraph with min degree >= k) of a
-    canonical (src<dst) edge table — iterative :func:`peel`: drop vertices
-    with degree < k, keep edges with both endpoints surviving, repeat to
-    fixpoint.
+    canonical (src<dst) edge table: drop vertices with degree < k, keep
+    edges with both endpoints surviving, repeat to fixpoint.
 
     The Spark-first analogue of the reference DFS matcher's degree pruning
     (it never explores a vertex whose degree can't host the pattern): a
@@ -193,21 +162,30 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     ``kcore(edges, kq - 1)`` is an EXACT reducer for kq-clique
     existence/counting — every kq-clique lives in the (kq-1)-core.
 
-    When ``max_iters`` rounds end short of the fixpoint, the result is the
+    The rounds run on :class:`~peregrine_spark.supersteps.engine.SuperstepEngine`,
+    one Spark job each (the session's AQE, if on, submits that job's
+    shuffle and broadcast stages as jobs of their own), to the first round
+    whose edge set equals the previous one's
+    (:func:`~peregrine_spark.supersteps.engine.edge_set_signature`); the
+    first round has no previous one, so an input that is already its
+    k-core takes two rounds. When ``max_iters`` rounds end short of the fixpoint, the result is the
     partial peel: a superset of the k-core, still containing every
-    subgraph of minimum degree >= k. This is deliberate: ``existence()``
-    runs it with ``max_iters=8`` as a reducer, where a superset is exact."""
+    subgraph of minimum degree >= k. The engine logs and counts that run
+    (``session.nonconverged_runs``); ``existence()`` runs it with
+    ``max_iters=8`` as a reducer, where a superset is exact, so a partial
+    peel there is reported, not silent."""
     from peregrine_spark.graph.from_tables import degrees
+    from peregrine_spark.supersteps.engine import SuperstepEngine, edge_set_signature
 
-    def survivors(cur: DataFrame) -> DataFrame:
+    def survivors(cur: DataFrame, i: int) -> DataFrame:
         keep = degrees(cur).where(F.col("degree") >= k)
-        return (
-            cur.join(keep.select(F.col("v").alias("src")), "src", "left_semi")
-            .join(keep.select(F.col("v").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
+        return cur.join(keep.select(F.col("v").alias("src")), "src", "left_semi").join(
+            keep.select(F.col("v").alias("dst")), "dst", "left_semi"
         )
 
-    return peel(edges, survivors, max_iters)[0]
+    return SuperstepEngine(edges.sparkSession).run(
+        edges, survivors, edge_set_signature, max_iters=max_iters
+    ).state
 
 
 def contiguous_rank(

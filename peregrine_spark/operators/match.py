@@ -253,9 +253,10 @@ def existence(
     if vertices is None and k >= 3 and _shape(pattern) == "clique":
         # a PARTIAL peel is still an exact reducer (every round only
         # removes vertices that cannot be in a k-clique), so cap the
-        # rounds. Skip the peel entirely for k == 3: the 2-core rarely
-        # prunes (most graphs ARE nearly their 2-core) and each peel
-        # round costs a checkpointed shuffle.
+        # rounds; a capped peel short of the fixpoint is logged and
+        # counted by the engine, not silent. Skip the peel entirely for
+        # k == 3: the 2-core rarely prunes (most graphs ARE nearly their
+        # 2-core) and each peel round costs a checkpointed shuffle.
         core = kcore(edges, k - 1, max_iters=8) if k > 3 else edges
         try:
             if core is not edges and not core.limit(1).take(1):

@@ -19,9 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import peel
 from peregrine_spark.graph.from_tables import degrees
 from peregrine_spark.plans.fast_counts import clique_rows
+from peregrine_spark.supersteps.engine import SuperstepEngine, edge_set_signature
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -47,19 +47,22 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     closes at least k−2 triangles — of a canonical (src<dst) edge table.
 
     The triangle analogue of :func:`peregrine_spark.graph.build.kcore`'s
-    degree peel, run by the same :func:`~peregrine_spark.graph.build.peel`
-    loop: per round, list triangles, stack each triangle's three canonical
-    edges, count support per edge with one partial-agg groupBy, and
-    left_semi the surviving edges. Edges in no triangle have support 0 and
-    drop in round one. Standard use: community cores and as an exact
-    reducer for clique queries (every k-clique lives in the k-truss).
-    Raises ``RuntimeError`` when ``max_iters`` peel rounds end short of the
-    fixpoint.
+    degree peel, run like it on
+    :class:`~peregrine_spark.supersteps.engine.SuperstepEngine`, one Spark
+    job per round: per round, list triangles, stack each triangle's three
+    canonical edges, count support per edge with one partial-agg groupBy,
+    and left_semi the surviving edges. Edges in no triangle have support 0
+    and drop in round one. The fixpoint is the first round whose edge set
+    equals the previous one's. Standard use: community cores and as an
+    exact reducer for clique queries (every k-clique lives in the k-truss).
+    When ``max_iters`` rounds end short of the fixpoint the engine logs and
+    counts the run (``session.nonconverged_runs``) and this raises
+    ``RuntimeError``.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
 
-    def survivors(cur: DataFrame) -> DataFrame:
+    def survivors(cur: DataFrame, i: int) -> DataFrame:
         support = (
             clique_rows(cur, 3)
             .selectExpr("stack(3, v2, v1, v3, v1, v3, v2) as (src, dst)")
@@ -69,12 +72,14 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
         )
         return cur.join(support.select("src", "dst"), ["src", "dst"], "left_semi")
 
-    out, converged = peel(edges, survivors, max_iters)
-    if not converged:
+    res = SuperstepEngine(edges.sparkSession).run(
+        edges, survivors, edge_set_signature, max_iters=max_iters
+    )
+    if not res.converged:
         raise RuntimeError(
             f"ktruss(k={k}) reached no fixpoint in {max_iters} peel rounds"
         )
-    return out
+    return res.state
 
 
 def local_clustering(

@@ -128,9 +128,6 @@ class SmallGraph:
             if not self.adj.get(v) and self.anti_adj.get(v)
         ]
 
-    def label_of(self, v: int) -> int | None:
-        return self.labels.get(v)
-
     def labelling(self) -> Labelling:
         if not self.labels:
             return Labelling.UNLABELLED
@@ -283,7 +280,7 @@ class PatternGenerator:
         removing a cycle edge), seeded from the trees. The reference instead
         ships nauty-generated g6 files (core/PatternGenerator.cc:477-548,
         core/graphs/graph{3..9}c.g6); ours are self-generated — see
-        ``all_from_g6_file`` for loading nauty data directly."""
+        ``from_g6`` for reading nauty data directly."""
         from peregrine_spark.patterns.canonical import canonical_form
 
         current = {canonical_form(t): t for t in PatternGenerator._trees(size)}
@@ -408,13 +405,3 @@ class PatternGenerator:
                 val = (val << 1) | b
             out.append(chr(val + 63))
         return "".join(out)
-
-    @staticmethod
-    def all_from_g6_file(path: str | Path) -> list[SmallGraph]:
-        """Load patterns from a nauty graph6 file (one graph per line) —
-        the reference's pattern source (core/showg.cc:706-738)."""
-        return [
-            PatternGenerator.from_g6(line)
-            for line in Path(path).read_text().splitlines()
-            if line.strip()
-        ]

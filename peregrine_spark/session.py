@@ -153,10 +153,13 @@ def release_checkpoint(df) -> None:
     ``LogicalRDD`` leaf, which the cache manager never sees — measured on
     Spark 4.1: after ``df.localCheckpoint(eager=True).unpersist()`` the RDD
     still sits in ``sc.getPersistentRDDs`` until the session dies. Every
-    iterative operator here (kcore peel, superstep engine, contiguous_rank)
-    checkpoints per round, so a silent no-op release accumulates one
-    state-table of blocks PER ROUND for the life of the session — at 100 TB
-    that is the difference between bounded and unbounded executor storage.
+    iterative operator here runs on the superstep engine (the vertex
+    programs, contraction CC and the kcore and ktruss peels), which
+    checkpoints per round and releases the previous round here; a silent
+    no-op release would accumulate one state-table of blocks PER ROUND for
+    the life of the session — at 100 TB that is the difference between
+    bounded and unbounded executor storage. ``contiguous_rank`` and the
+    ingest release their checkpoints here too.
 
     Does nothing if the plan shape is not a direct checkpoint (nothing to
     release). A failing plan lookup or release (e.g. the py4j internals

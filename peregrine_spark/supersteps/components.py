@@ -28,6 +28,7 @@ from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
+    edge_set_signature,
     vertex_program,
 )
 
@@ -122,24 +123,18 @@ def _cc_contraction(
 ) -> SuperstepResult:
     """Alternating large-star/small-star contraction. State per superstep is
     the shrinking edge set; convergence = edge set unchanged across a full
-    (large, small) round, detected by its (count, order-insensitive
-    xor-hash) signature, which the engine observes on the round's own job
-    and compares with the previous round's. At the fixpoint the edges form
+    (large, small) round, detected by :func:`edge_set_signature`, which
+    the engine observes on the round's own job and compares with the
+    previous round's. At the fixpoint the edges form
     stars (v -> component min)."""
 
     def step(state: DataFrame, i: int) -> DataFrame:
         return _small_star(_large_star(state))
 
-    def signature(frame: DataFrame, i: int) -> Column:
-        return F.struct(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        )
-
     with vertex_program(edges, n_partitions) as sym:
         E0 = sym.where(F.col("src") > F.col("dst"))  # the canonical edges, high -> low
         res = (engine or SuperstepEngine(edges.sparkSession)).run(
-            E0, step, signature, max_iters=max_iters, tol=0.0, resume=resume
+            E0, step, edge_set_signature, max_iters=max_iters, tol=0.0, resume=resume
         )
         verts = sym.select(F.col("src").alias("v")).distinct()
     E = res.state  # star edges (v, root)

@@ -6,9 +6,12 @@ driver advances. Our superstep = one Spark job over the vertex-state
 DataFrame, checked or not: the materialization of the next state, which
 also carries the convergence delta as an observed aggregate. This module
 owns the round's whole lifecycle: ``vertex_program`` sets up and tears
-down the adjacency a program reads, and ``SuperstepEngine.run`` drives the
-loop, so a vertex program supplies only its ``step`` and ``delta``
-kernels.
+down the adjacency a program reads and pins its conf, and
+``SuperstepEngine.run`` drives the loop (setting no session conf), so a
+vertex program supplies only its ``step`` and ``delta`` kernels. It is the
+package's only iteration loop: contraction CC and the ``kcore`` and
+``ktruss`` peels run on it with :func:`edge_set_signature` as their delta,
+one job per round, non-convergence logged and counted.
 
 What the reference does NOT have — and the north rule demands — is fault
 tolerance: every superstep persists
@@ -79,23 +82,40 @@ def vertex_program(edges: DataFrame, n_partitions: int | None = None):
     """Set-up and tear-down of a vertex program over the canonical
     (src<dst) edge table: yields the symmetrized edges, repartitioned on
     ``src`` into ``n_partitions`` (default :func:`auto_shuffle_partitions`
-    of the symmetrized edge count) and persisted, with
-    ``spark.sql.shuffle.partitions`` pinned to the same count for the body,
-    so the per-superstep joins on the vertex key stay co-partitioned.
-    Unpersists the edges and restores the session conf on exit.
+    of the symmetrized edge count) and persisted. For the body,
+    ``spark.sql.shuffle.partitions`` is pinned to the same count, so the
+    per-superstep joins on the vertex key stay co-partitioned, and AQE is
+    off. Unpersists the edges and restores the session conf on exit.
 
     The programs' step joins use this co-partitioning at every size: each
     carries a plan-local ``shuffle_hash`` hint, so a state small enough to
     broadcast is still hash-joined in place (no broadcast job, no sort)
-    and a step shuffles once, for its aggregation."""
+    and a step shuffles once, for its aggregation.
+
+    AQE would re-plan every superstep and submit each of its shuffle
+    stages as a job (the ``pagerank3`` entry: 19 jobs instead of 13);
+    skew is handled structurally instead (map-side partial aggregation,
+    degree orientation). The peels run outside this block, on the
+    session's AQE."""
     spark = edges.sparkSession
     n = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
     sym = symmetrized(edges).repartition(n, "src").persist()
+    pinned = {"spark.sql.shuffle.partitions": n, "spark.sql.adaptive.enabled": "false"}
     try:
-        with conf_override(spark, {"spark.sql.shuffle.partitions": n}):
+        with conf_override(spark, pinned):
             yield sym
     finally:
         sym.unpersist()
+
+
+def edge_set_signature(frame: DataFrame, i: int) -> Column:
+    """Struct delta of an edge-set fixpoint: (row count, bit_xor of
+    xxhash64(src, dst)), order-insensitive; the run converges on the first
+    round whose edge set equals the previous round's."""
+    return F.struct(
+        F.count(F.lit(1)).alias("c"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+    )
 
 
 @dataclass
@@ -244,62 +264,56 @@ class SuperstepEngine:
         own_ckpt = None  # the engine's own live localCheckpoint, if any
         prev_sig = None  # the last check's signature, for struct deltas
         check_every = max(1, check_every)
-        # AQE re-plans every superstep query and interacts badly with
-        # localCheckpoint partition materialization (measured 10x superstep
-        # slowdown); iterative supersteps use static partitioning — skew is
-        # handled structurally (map-side partial aggregation, degree
-        # orientation).
-        with conf_override(self.spark, {"spark.sql.adaptive.enabled": "false"}):
-            for i in range(start_iter, max_iters):
-                t0 = time.monotonic()
-                frame = step(state, i)
-                checked = (i + 1) % check_every == 0 or i == max_iters - 1
-                if checked:
-                    obs = Observation()
-                    frame = frame.observe(obs, delta(frame, i).alias("delta"))
-                state = frame.select(*cols)
-                if self.dir is not None:
-                    path = self._step_path(i)
-                    state.write.mode("overwrite").parquet(str(path))
-                    state = self.spark.read.parquet(str(path))
-                    lineage = _partition_lineage(state, cols)
-                else:
-                    # plan-truncation without durability
-                    state = state.localCheckpoint()
-                    lineage = None
-                # the new state is materialized (parquet or eager checkpoint):
-                # the PREVIOUS round's engine-made checkpoint is dead weight
-                # now; without this every superstep retains one state table in
-                # executor storage for the life of the session
-                if own_ckpt is not None:
-                    release_checkpoint(own_ckpt)
-                own_ckpt = state if lineage is None else None
+        for i in range(start_iter, max_iters):
+            t0 = time.monotonic()
+            frame = step(state, i)
+            checked = (i + 1) % check_every == 0 or i == max_iters - 1
+            if checked:
+                obs = Observation()
+                frame = frame.observe(obs, delta(frame, i).alias("delta"))
+            state = frame.select(*cols)
+            if self.dir is not None:
+                path = self._step_path(i)
+                state.write.mode("overwrite").parquet(str(path))
+                state = self.spark.read.parquet(str(path))
+                lineage = _partition_lineage(state, cols)
+            else:
+                # plan-truncation without durability
+                state = state.localCheckpoint()
+                lineage = None
+            # the new state is materialized (parquet or eager checkpoint):
+            # the PREVIOUS round's engine-made checkpoint is dead weight
+            # now; without this every superstep retains one state table in
+            # executor storage for the life of the session
+            if own_ckpt is not None:
+                release_checkpoint(own_ckpt)
+            own_ckpt = state if lineage is None else None
 
-                d = None
-                if checked:
-                    value = obs.get["delta"]
-                    if isinstance(value, Row):
-                        d = 0.0 if value == prev_sig else 1.0
-                        prev_sig = value
-                    else:
-                        d = float(value or 0.0)  # a sum over no rows is null
-                converged = bool(checked and d <= tol)
-                m = {
-                    "run_id": self.run_id,
-                    "iteration": i,
-                    "delta": d,
-                    "seconds": time.monotonic() - t0,
-                    "rows": sum(p["rows"] for p in lineage) if lineage else None,
-                    "partitions": lineage,
-                    "converged": converged,
-                }
-                metrics.append(m)
-                if self.dir:
-                    self._metrics_path().parent.mkdir(parents=True, exist_ok=True)
-                    with open(self._metrics_path(), "a") as f:
-                        f.write(json.dumps(m) + "\n")
-                if converged:
-                    break
+            d = None
+            if checked:
+                value = obs.get["delta"]
+                if isinstance(value, Row):
+                    d = 0.0 if value == prev_sig else 1.0
+                    prev_sig = value
+                else:
+                    d = float(value or 0.0)  # a sum over no rows is null
+            converged = bool(checked and d <= tol)
+            m = {
+                "run_id": self.run_id,
+                "iteration": i,
+                "delta": d,
+                "seconds": time.monotonic() - t0,
+                "rows": sum(p["rows"] for p in lineage) if lineage else None,
+                "partitions": lineage,
+                "converged": converged,
+            }
+            metrics.append(m)
+            if self.dir:
+                self._metrics_path().parent.mkdir(parents=True, exist_ok=True)
+                with open(self._metrics_path(), "a") as f:
+                    f.write(json.dumps(m) + "\n")
+            if converged:
+                break
         if not converged and tol >= 0:
             count_event("nonconverged_runs")
             log.warning(

@@ -21,8 +21,16 @@ P1_DIAMOND = SmallGraph(edges=[(1, 2), (1, 3), (1, 4), (2, 3), (3, 4)])
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark(app_name="peregrine_tests", master="local[4]", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # tables a test saves (graph/storage.py) go to a temporary warehouse,
+    # not to spark-warehouse/ under the working directory
+    warehouse = tmp_path_factory.mktemp("warehouse")
+    s = get_spark(
+        app_name="peregrine_tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
+    )
     yield s
     s.stop()
 

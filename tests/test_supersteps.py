@@ -5,6 +5,8 @@ import json
 
 import pytest
 
+from peregrine_spark.graph.build import kcore
+from peregrine_spark.operators.triangles import ktruss
 from peregrine_spark.supersteps import (
     SuperstepEngine,
     bfs_hops,
@@ -12,6 +14,7 @@ from peregrine_spark.supersteps import (
     label_propagation,
     pagerank,
 )
+from peregrine_spark.supersteps.engine import SuperstepResult
 
 from tests.conftest import edges_df
 from tests.oracle import brute_components, brute_pagerank, er_graph
@@ -302,7 +305,9 @@ def test_auto_shuffle_partitions_regimes(spark):
 def test_operators_leave_session_conf_unchanged(spark):
     """Every vertex program and fsm pins session conf keys (AQE off,
     shuffle partitions, the FSM broadcast cap) only while it runs: after it
-    returns, or raises inside its set-up, the session conf is as before."""
+    returns, or raises inside its set-up, the session conf is as before.
+    The kcore and ktruss peels run on the engine's loop outside any
+    vertex program and pin nothing."""
     from peregrine_spark.operators.fsm import fsm
     from peregrine_spark.session import conf_override
 
@@ -331,6 +336,8 @@ def test_operators_leave_session_conf_unchanged(spark):
         "label_propagation": lambda: label_propagation(e, max_iters=2),
         "bfs_hops": lambda: bfs_hops(e, [1]),
         "fsm": lambda: fsm(e, labels, support=2, max_vertices=3),
+        "kcore": lambda: kcore(e, 3),
+        "ktruss": lambda: ktruss(e, 3),
     }
     for name, run in runs.items():
         run()
@@ -355,7 +362,8 @@ def test_non_convergence_is_logged(spark, caplog):
 
 def test_non_convergence_is_counted(spark):
     """A run that uses up max_iters short of tol adds 1 to
-    ``session.nonconverged_runs``; a fixed-step run (tol < 0) adds none."""
+    ``session.nonconverged_runs``, a kcore peel capped short of its
+    fixpoint included; a fixed-step run (tol < 0) adds none."""
     from peregrine_spark import session
 
     path = edges_df(spark, [(i, i + 1) for i in range(1, 10)])
@@ -364,6 +372,9 @@ def test_non_convergence_is_counted(spark):
     assert session.nonconverged_runs == before + 1
     pagerank(path, max_iters=1, tol=-1.0)
     assert session.nonconverged_runs == before + 1
+    # a 10-vertex path loses its two end edges per 2-core round
+    kcore(path, 2, max_iters=2)
+    assert session.nonconverged_runs == before + 2
 
 
 def test_operators_accept_pinned_partitions(spark):
@@ -470,9 +481,12 @@ def test_one_spark_job_per_superstep(spark):
     """Every superstep is one Spark job, check steps included: the
     localCheckpoint that materializes the state carries the observed delta,
     and the step joins hash-join the co-partitioned state rather than
-    broadcasting it (a broadcast is a job of its own). Set-up jobs are the
-    same for any superstep count, so runs of n and m supersteps differ by
-    exactly n - m jobs."""
+    broadcasting it (a broadcast is a job of its own). The kcore peel runs
+    on the same loop, one job per round: no eager checkpoint and no count
+    beside it. Set-up jobs are the same for any superstep count, so runs of
+    n and m supersteps differ by exactly n - m jobs."""
+    from peregrine_spark.session import conf_override
+
     sc = spark.sparkContext
 
     def jobs(run, n, group):
@@ -482,12 +496,23 @@ def test_one_spark_job_per_superstep(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        assert res.iterations == n, group
+        if isinstance(res, SuperstepResult):  # kcore returns only its edges
+            assert res.iterations == n, group
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # a path: no program below converges before its 6th superstep
+    # a path: no program below converges before its 6th superstep (the
+    # 2-core peel drops the two end edges per round)
     e = edges_df(spark, [(i, i + 1) for i in range(1, 300)])
-    for name, run in _path_programs(e).items():
+
+    def kcore_rounds(n):
+        # the peel keeps the session's AQE, which submits each query stage
+        # of a round's one job as a job of its own; with AQE off the stages
+        # run inside that job, so the count is the loop's
+        with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
+            return kcore(e, 2, max_iters=n)
+
+    programs = {**_path_programs(e), "kcore": kcore_rounds}
+    for name, run in programs.items():
         few, many = (jobs(run, n, f"one-job-per-step-{name}-{n}") for n in (2, 6))
         assert many - few == 6 - 2, (name, few, many)
 
