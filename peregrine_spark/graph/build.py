@@ -274,14 +274,14 @@ def join_ids(edges: DataFrame, ids: DataFrame) -> DataFrame:
 
 
 def convert_edge_list(
-    spark, path: str, comment: str = "#", strict: bool = True
+    spark, path: str, strict: bool = True
 ) -> tuple[DataFrame, DataFrame]:
     """One-call parity with the reference converter's TEXT input
     (``convert_data`` on a plain edge list, core/DataConverter.cc:205-464):
-    whitespace-separated ``u v`` integer lines → self-loops and duplicate
-    edges dropped, vertices renumbered 1-based contiguous by DESCENDING
-    degree (degree-0 vertices vanish — they have no edge rows), id
-    dictionary kept.
+    whitespace-separated ``u v`` integer lines (``#`` lines are comments)
+    → self-loops and duplicate edges dropped, vertices renumbered 1-based
+    contiguous by DESCENDING degree (degree-0 vertices vanish — they have
+    no edge rows), id dictionary kept.
 
     Returns (edges, mapping): canonical (src<dst) relabelled edges and the
     (v, old, degree) dictionary — ``mapping.select("v", col("old")
@@ -293,9 +293,7 @@ def convert_edge_list(
     lines = spark.read.text(path).select(F.trim(F.col("value")).alias("value"))
     # trim BEFORE the comment check so indented comment lines are comments,
     # not accidental parse failures; blank lines are never edges
-    lines = lines.where(F.col("value") != "")
-    if comment:
-        lines = lines.where(~F.col("value").startswith(comment))
+    lines = lines.where((F.col("value") != "") & ~F.col("value").startswith("#"))
     parts = F.split(F.col("value"), r"\s+")
     # try_cast: non-integer tokens become NULL (counted below) instead of
     # an opaque ANSI-mode CAST_INVALID_INPUT executor crash

@@ -2,12 +2,12 @@
 
 Images/audio/video are carried as ``binary`` columns with a typed metadata
 struct; decode / feature-extraction runs as Arrow-batched ``mapInPandas``
-kernels (never per-row Python). The decode step itself is STUBBED in this
-sandbox (no image/audio libraries in the container): ``register_decoder``
-installs a real decoder when available; the default deterministic fake
-derives pseudo-features from the payload bytes so the full Spark pipeline
-— schema, partitioning, Arrow batch shape, UDF signature — is real and
-testable end-to-end.
+kernels (never per-row Python). No image/audio library is a dependency:
+``register_decoder`` installs a real decoder on the driver, and
+``extract_features`` ships it to the Python workers with its kernel.
+Without one, a deterministic fake derives pseudo-features from the
+payload bytes, so the full Spark pipeline — schema, partitioning, Arrow
+batch shape, UDF signature — is real and testable end-to-end.
 
 Asset schema:  (asset_id: long, kind: string, payload: binary,
                 meta: struct<source: string, declared_bytes: long>)
@@ -45,19 +45,10 @@ _DECODER: Callable[[bytes, str], tuple[int, int, np.ndarray]] | None = None
 
 
 def register_decoder(fn: Callable[[bytes, str], tuple[int, int, np.ndarray]]) -> None:
-    """Install a real decoder (e.g. PIL/torchvision based) for production."""
+    """Install a real decoder (e.g. PIL/torchvision based) for production:
+    every later :func:`extract_features` call decodes with it."""
     global _DECODER
     _DECODER = fn
-
-
-def decode_real(payload: bytes, kind: str) -> tuple[int, int, np.ndarray]:
-    """Real decode entry point — not available in this container."""
-    if _DECODER is None:
-        raise NotImplementedError(
-            "no media decoder installed in this environment; "
-            "register one with register_decoder()"
-        )
-    return _DECODER(payload, kind)
 
 
 def _fake_decode_batch(payloads: pd.Series) -> tuple[np.ndarray, np.ndarray, list]:
@@ -77,31 +68,29 @@ def _fake_decode_batch(payloads: pd.Series) -> tuple[np.ndarray, np.ndarray, lis
     return widths, heights, feats
 
 
-def attach_payload(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    kind: str = "image",
-) -> DataFrame:
-    """Wrap a text table as an asset table (payload = utf-8 bytes). In
-    production the payload column comes straight from the lakehouse; this
-    adapter exists so the binary pipeline is exercised by real data in the
-    sandbox."""
+def attach_payload(docs: DataFrame) -> DataFrame:
+    """Wrap a documents table ``(doc_id, text)`` as an asset table of
+    ``image`` kind (payload = utf-8 bytes of the text). In production the
+    payload column comes straight from the lakehouse; this adapter exists
+    so the binary pipeline is exercised by real data."""
     return docs.select(
-        F.col(id_col).alias("asset_id"),
-        F.lit(kind).alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id").alias("asset_id"),
+        F.lit("image").alias("kind"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             F.lit("synthetic").alias("source"),
-            F.octet_length(F.encode(F.col(text_col), "utf-8"))
+            F.octet_length(F.encode(F.col("text"), "utf-8"))
             .cast("long")
             .alias("declared_bytes"),
         ).alias("meta"),
     )
 
 
-def extract_features(assets: DataFrame, use_real_decoder: bool = False) -> DataFrame:
-    """Feature extraction over the binary payload column.
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Feature extraction over the binary payload column: with the decoder
+    :func:`register_decoder` installed, read here on the driver and carried
+    into the kernel's closure (a worker process never saw the
+    registration), else the deterministic fake.
 
     ``n_bytes`` and ``sha256`` are JVM column expressions
     (``F.octet_length`` / ``F.sha2`` — codegen'd, never Python); the Arrow
@@ -117,14 +106,15 @@ def extract_features(assets: DataFrame, use_real_decoder: bool = False) -> DataF
         F.lower(F.sha2(F.col("payload"), 256)).alias("sha256"),
         "payload",
     )
+    decoder = _DECODER
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             payloads = pdf["payload"]
-            if use_real_decoder:
-                decoded = [decode_real(b, k) for b, k in zip(payloads, pdf["kind"])]
+            if decoder is not None:
+                decoded = [decoder(b, k) for b, k in zip(payloads, pdf["kind"])]
                 widths = np.array([d[0] for d in decoded], dtype=np.int32)
                 heights = np.array([d[1] for d in decoded], dtype=np.int32)
                 feats = [d[2].astype(np.float32) for d in decoded]
@@ -145,21 +135,16 @@ def extract_features(assets: DataFrame, use_real_decoder: bool = False) -> DataF
     return prepped.mapInPandas(kernel, FEATURE_SCHEMA)
 
 
-def frame_sample_plan(
-    assets: DataFrame,
-    frame_bytes: int = 64,
-    every_n: int = 2,
-    max_frames: int = 8,
-) -> DataFrame:
+def frame_sample_plan(assets: DataFrame) -> DataFrame:
     """Video frame-sampling *plan*: (asset_id, frame_index) rows produced
     JVM-side from declared metadata — the decode of each sampled frame is
-    the stubbed kernel above. One frame per ``frame_bytes`` of payload,
-    sampled every ``every_n`` frames, capped at ``max_frames`` rows per
-    asset (the cap keeps a mega-video from exploding a task's fan-out)."""
-    total = (F.col("meta.declared_bytes") / F.lit(frame_bytes)).cast("long") + 1
+    the kernel above. One frame per 64 bytes of payload, sampled every 2nd
+    frame, capped at 8 rows per asset (the cap keeps a mega-video from
+    exploding a task's fan-out)."""
+    total = (F.col("meta.declared_bytes") / F.lit(64)).cast("long") + 1
     idx = F.slice(
-        F.sequence(F.lit(0).cast("long"), total - 1, F.lit(every_n).cast("long")),
+        F.sequence(F.lit(0).cast("long"), total - 1, F.lit(2).cast("long")),
         1,
-        max_frames,
+        8,
     )
     return assets.select("asset_id", F.explode(idx).alias("frame_index"))

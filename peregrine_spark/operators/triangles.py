@@ -82,16 +82,14 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     return res.state
 
 
-def local_clustering(
-    edges: DataFrame, id_map: DataFrame | None = None, decimals: int = 6
-) -> DataFrame:
+def local_clustering(edges: DataFrame, id_map: DataFrame | None = None) -> DataFrame:
     """Per-vertex local clustering coefficient over the canonical (src<dst)
     edge table: (v, triangles, degree, clustering) with
 
         clustering(v) = 2 * T(v) / (deg(v) * (deg(v) - 1))   for deg >= 2
                       = 0.0                                   otherwise
 
-    rounded to ``decimals``. The reference computes per-vertex pattern
+    rounded to 6 decimals. The reference computes per-vertex pattern
     participation through its vertex-keyed MapAggregator
     (core/aggregators/Aggregator.hh:40-131); here that is literally a
     groupBy over the degree-oriented triangle listing — two partial-agg
@@ -122,6 +120,6 @@ def local_clustering(
                 F.col("degree") >= 2,
                 2.0 * F.col("triangles") / (F.col("degree") * (F.col("degree") - 1.0)),
             ).otherwise(0.0),
-            decimals,
+            6,
         ).alias("clustering"),
     )

@@ -138,7 +138,7 @@ class SmallGraph:
             return Labelling.LABELLED  # unlabelled vertices = label wildcard? keep strict
         return Labelling.LABELLED
 
-    def is_connected(self, include_anti: bool = False) -> bool:
+    def is_connected(self) -> bool:
         vs = self.vertices
         if not vs:
             return True
@@ -146,10 +146,7 @@ class SmallGraph:
         stack = [vs[0]]
         while stack:
             u = stack.pop()
-            nbrs = set(self.adj.get(u, ()))
-            if include_anti:
-                nbrs |= self.anti_adj.get(u, set())
-            for w in nbrs:
+            for w in self.adj.get(u, ()):
                 if w not in seen:
                     seen.add(w)
                     stack.append(w)

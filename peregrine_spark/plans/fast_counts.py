@@ -17,6 +17,9 @@ Shapes handled (unlabelled, no anti-edges):
   edge; the subtraction removes the closed walks). Reference C6 spirit:
   inclusion-exclusion over set sizes instead of enumeration.
 
+Each sum is coalesced to 0: a SUM over no rows (an empty edge table, or
+no wedge pair on a star forest) is null, and a count of nothing is 0.
+
 ``fast_count`` returns None when no fast path applies — callers fall back
 to the generic pattern->join compiler. Correctness is cross-checked against
 the compiler on random graphs (tests/test_fast_counts.py).
@@ -52,7 +55,7 @@ def _comb_dec(col: Column, k: int) -> Column:
     (intermediate c*(n-i+1) <= C(n,i)*n < 2^63 * 2^63 ≈ 8.5e37) while the
     division result stays exact because it is integral. Callers that SUM
     the binomials keep the aggregation in decimal too (a long sum can wrap
-    silently; Spark returns null on decimal overflow instead of wrapping)."""
+    silently; a decimal overflow raises under ANSI mode, Spark's default)."""
     dec = "decimal(38,0)"
     c = F.lit(1).cast(dec)
     for i in range(1, k + 1):
@@ -120,7 +123,9 @@ def star_count(edges: DataFrame, k: int) -> DataFrame:
     no join at all. The whole aggregation runs in decimal(38,0) (exact; a
     long sum could wrap silently on a hub-heavy graph). Returns 1 row (cnt)."""
     return degrees(edges).agg(
-        F.sum(_comb_dec(F.col("degree"), k - 1)).cast("long").alias("cnt")
+        F.coalesce(F.sum(_comb_dec(F.col("degree"), k - 1)), F.lit(0))
+        .cast("long")
+        .alias("cnt")
     )
 
 
@@ -134,7 +139,10 @@ def path4_count(edges: DataFrame) -> DataFrame:
         edges.join(du, "src")
         .join(dv, "dst")
         .agg(
-            F.sum((F.col("du") - 1).cast("long") * (F.col("dv") - 1).cast("long"))
+            F.coalesce(
+                F.sum((F.col("du") - 1).cast("long") * (F.col("dv") - 1).cast("long")),
+                F.lit(0),
+            )
             .cast("long")
             .alias("w")
         )
@@ -177,7 +185,9 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         .groupBy("a", "c")
         .agg(F.count(F.lit(1)).alias("p2"))
     )
-    return pairs.agg(F.sum(_comb_dec(F.col("p2"), 2)).cast("long").alias("cnt"))
+    return pairs.agg(
+        F.coalesce(F.sum(_comb_dec(F.col("p2"), 2)), F.lit(0)).cast("long").alias("cnt")
+    )
 
 
 def fast_count(edges: DataFrame, pattern: SmallGraph) -> DataFrame | None:

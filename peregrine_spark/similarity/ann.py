@@ -44,15 +44,14 @@ def _norm(a: Column) -> Column:
     )
 
 
-def _side(
-    df: DataFrame, vec_col: str, id_col: str, name: str, p: str, *extra: Column
-) -> DataFrame:
-    """One side of a cosine join: (name, <p>v, <p>n, *extra) — the id, the
-    vector and its norm, computed once per row rather than once per pair
-    (and before ``extra`` explodes a probe side)."""
-    return df.withColumn("_norm", _norm(F.col(vec_col))).select(
-        F.col(id_col).alias(name),
-        F.col(vec_col).alias(f"{p}v"),
+def _side(df: DataFrame, name: str, p: str, *extra: Column) -> DataFrame:
+    """One side of a cosine join: (name, <p>v, <p>n, *extra) — the
+    ``vec_id``, the ``embedding`` and its norm, computed once per row
+    rather than once per pair (and before ``extra`` explodes a probe
+    side)."""
+    return df.withColumn("_norm", _norm(F.col("embedding"))).select(
+        F.col("vec_id").alias(name),
+        F.col("embedding").alias(f"{p}v"),
         F.col("_norm").alias(f"{p}n"),
         *extra,
     )
@@ -103,8 +102,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbours per query: (query_id, rank, neighbor_id,
@@ -117,8 +114,8 @@ def cosine_topk(
     common case: a probe batch against a large corpus). Pass False for large
     |Q| so Catalyst picks a shuffle join instead of OOMing executors."""
     return _top_k(
-        _side(corpus, vec_col, id_col, "neighbor_id", "c"),
-        _side(queries, vec_col, id_col, "query_id", "q"),
+        _side(corpus, "neighbor_id", "c"),
+        _side(queries, "query_id", "q"),
         k, None, broadcast_queries,
     )
 
@@ -129,13 +126,14 @@ def _check_planes(n_planes: int) -> None:
         raise ValueError(f"n_planes must be in 1..64 (one signature long), got {n_planes}")
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random unit-free hyperplanes (driver-side, tiny:
-    n_planes × dim floats). Hash-derived — no RNG state, reproducible."""
+    n_planes × dim floats). Hash-derived (seed 13) — no RNG state,
+    reproducible."""
 
     def h(i: int, j: int) -> float:
         # splitmix64-style integer scramble → uniform in [-1, 1)
-        x = (i * 0x9E3779B97F4A7C15 + j * 0xBF58476D1CE4E5B9 + seed) & (2**64 - 1)
+        x = (i * 0x9E3779B97F4A7C15 + j * 0xBF58476D1CE4E5B9 + 13) & (2**64 - 1)
         x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & (2**64 - 1)
         x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & (2**64 - 1)
         x ^= x >> 31
@@ -163,16 +161,13 @@ def cosine_topk_lsh(
     queries: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    multiprobe: bool = True,
     dim: int | None = None,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: LSH bucket join + exact cosine re-rank.
 
     Corpus rows land in their signature bucket; each query probes its own
-    bucket plus (multiprobe) every 1-bit-flip neighbour bucket — 1+n_planes
+    bucket plus every 1-bit-flip neighbour bucket (multi-probe) — 1+n_planes
     probes, which repairs most boundary misses of sign LSH. Output schema
     matches ``cosine_topk`` (rank may differ where recall < 1).
 
@@ -187,35 +182,30 @@ def cosine_topk_lsh(
     escape hatch as ``cosine_topk``)."""
     _check_planes(n_planes)
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     planes = hyperplanes(dim, n_planes)
-    q = queries.withColumn("_sig", signature(F.col(vec_col), planes))
-    flips = range(n_planes) if multiprobe else []
+    q = queries.withColumn("_sig", signature(F.col("embedding"), planes))
     probes = F.array(
-        F.col("_sig"), *[F.col("_sig").bitwiseXOR(F.lit(long_bit(p))) for p in flips]
+        F.col("_sig"),
+        *[F.col("_sig").bitwiseXOR(F.lit(long_bit(p))) for p in range(n_planes)],
     )
     return _top_k(
-        _side(corpus, vec_col, id_col, "neighbor_id", "c",
-              signature(F.col(vec_col), planes).alias("bucket")),
-        _side(q, vec_col, id_col, "query_id", "q", F.explode(probes).alias("bucket")),
+        _side(corpus, "neighbor_id", "c",
+              signature(F.col("embedding"), planes).alias("bucket")),
+        _side(q, "query_id", "q", F.explode(probes).alias("bucket")),
         k, "bucket", broadcast_queries,
     )
 
 
-def cosine_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact: (a, b, sim) for every
     id pair a < b with cosine >= threshold, sim rounded to 6dp.
 
     All-pairs O(n^2) by construction — the oracle baseline for the dedup
     tier (same role ``jaccard_pairs`` plays for text); the scale path is
     :func:`cosine_pairs_lsh`."""
-    a = _side(emb, vec_col, id_col, "a", "a")
-    b = _side(emb, vec_col, id_col, "b", "b")
+    a = _side(emb, "a", "a")
+    b = _side(emb, "b", "b")
     return _pairs_at_least(a.join(b, F.col("a") < F.col("b")), threshold)
 
 
@@ -224,8 +214,6 @@ def cosine_pairs_lsh(
     threshold: float = 0.95,
     n_planes: int = 16,
     bands: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int | None = None,
     max_bucket: int = 10_000,
 ) -> DataFrame:
@@ -247,12 +235,12 @@ def cosine_pairs_lsh(
     if not 1 <= bands <= n_planes:
         raise ValueError("bands must be in 1..n_planes: each band needs a bit")
     if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
+        dim = len(emb.select("embedding").first()[0])
     planes = hyperplanes(dim, n_planes)
     bits_per = n_planes // bands
-    sig = signature(F.col(vec_col), planes).alias("_sig")
+    sig = signature(F.col("embedding"), planes).alias("_sig")
     cand = band_pairs(
-        _side(emb, vec_col, id_col, "id", "", sig),
+        _side(emb, "id", "", sig),
         [band_bits("_sig", bi, bits_per) for bi in range(bands)],
         max_bucket,
         "v",
@@ -261,17 +249,11 @@ def cosine_pairs_lsh(
     return _pairs_at_least(cand, threshold)
 
 
-def ivf_centroids(
-    emb: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    lloyd_iters: int = 1,
-) -> list[list[float]]:
+def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: seed centroids are an evenly-
-    strided id sample (reproducible, no RNG), optionally refined by a few
-    Lloyd iterations computed as Spark aggregations (assignment via the
-    JVM-side argmin below; means via groupBy(cell).avg over the unrolled
+    strided id sample (reproducible, no RNG), refined by one Lloyd
+    iteration computed as Spark aggregations (assignment via the JVM-side
+    argmin below; means via groupBy(cell).avg over the unrolled
     components). Returns a driver-side list (tiny: n_cells × dim).
 
     The stride rank comes from ``contiguous_rank`` (range repartition +
@@ -285,31 +267,29 @@ def ivf_centroids(
     # rank ids ONLY (the checkpointed ranking must not carry the vectors —
     # O(corpus·dim) executor storage); join the vectors back for just the
     # n_cells selected seed rows, then release the ranking blocks
-    ranked = contiguous_rank(emb.select(id_col), [F.col(id_col).asc()], "_rk")
+    ranked = contiguous_rank(emb.select("vec_id"), [F.col("vec_id").asc()], "_rk")
     seeds = (
         ranked.where(
             ((F.col("_rk") - 1) % stride == 0) & (F.col("_rk") <= stride * n_cells)
         )
-        .join(emb.select(id_col, vec_col), id_col)
-        .select("_rk", vec_col)
+        .join(emb.select("vec_id", "embedding"), "vec_id")
+        .select("_rk", "embedding")
         .collect()
     )
     release_checkpoint(ranked)
     seeds.sort(key=lambda r: r["_rk"])  # collect order is partition order
     cents = [list(map(float, r[1])) for r in seeds]
-    for _ in range(lloyd_iters):
-        assigned = emb.select(
-            _nearest_cell(F.col(vec_col), cents).alias("cell"),
-            F.col(vec_col).alias("_v"),
-        )
-        dim = len(cents[0])
-        means = assigned.groupBy("cell").agg(
-            *[F.avg(F.col("_v")[i]).alias(f"c{i}") for i in range(dim)],
-            F.count(F.lit(1)).alias("_n"),
-        ).collect()
-        by_cell = {r["cell"]: [r[f"c{i}"] for i in range(dim)] for r in means}
-        cents = [by_cell.get(i, c) for i, c in enumerate(cents)]
-    return cents
+    assigned = emb.select(
+        _nearest_cell(F.col("embedding"), cents).alias("cell"),
+        F.col("embedding").alias("_v"),
+    )
+    dim = len(cents[0])
+    means = assigned.groupBy("cell").agg(
+        *[F.avg(F.col("_v")[i]).alias(f"c{i}") for i in range(dim)],
+        F.count(F.lit(1)).alias("_n"),
+    ).collect()
+    by_cell = {r["cell"]: [r[f"c{i}"] for i in range(dim)] for r in means}
+    return [by_cell.get(i, c) for i, c in enumerate(cents)]
 
 
 def _nearest_cell(vec: Column, cents: list[list[float]]) -> Column:
@@ -342,8 +322,6 @@ def cosine_topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     centroids: list[list[float]] | None = None,
     broadcast_queries: bool = True,
 ) -> DataFrame:
@@ -361,11 +339,11 @@ def cosine_topk_ivf(
 
     ``broadcast_queries``: as in ``cosine_topk_lsh`` — the exploded probe
     side is |Q| × nprobe rows; pass False for large query sets."""
-    cents = centroids or ivf_centroids(corpus, n_cells, vec_col, id_col)
+    cents = centroids or ivf_centroids(corpus, n_cells)
     return _top_k(
-        _side(corpus, vec_col, id_col, "neighbor_id", "c",
-              _nearest_cell(F.col(vec_col), cents).alias("cell")),
-        _side(queries, vec_col, id_col, "query_id", "q",
-              F.explode(_cell_ranking(F.col(vec_col), cents, nprobe)).alias("cell")),
+        _side(corpus, "neighbor_id", "c",
+              _nearest_cell(F.col("embedding"), cents).alias("cell")),
+        _side(queries, "query_id", "q",
+              F.explode(_cell_ranking(F.col("embedding"), cents, nprobe)).alias("cell")),
         k, "cell", broadcast_queries,
     )

@@ -51,24 +51,21 @@ def _dedup_fn(
         yield pd.DataFrame({"key": [key[0]], "keep_id": [best]})
 
 
-def streaming_exact_dedup(
-    docs: DataFrame,
-    key_col: str = "content_hash",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """First-seen exact dedup over a streaming document feed.
 
     ``docs`` is a streaming DataFrame; returns a streaming (key, keep_id)
-    frame in append mode — one row per distinct ``key_col`` value across
-    the whole stream, carrying the smallest ``id_col`` of its first batch.
+    frame in append mode — one row per distinct ``content_hash`` value
+    across the whole stream, carrying the smallest ``doc_id`` of its first
+    batch.
     Batch-parity: running the same input through ``exact_dedup`` (batch)
     yields the same key set (keep_id may differ only when a key recurs in
     a LATER batch with a smaller id — first-seen semantics are the
     streaming contract).
     """
     keyed = docs.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(id_col).cast("long").alias("id"),
+        F.col("content_hash").cast("string").alias("key"),
+        F.col("doc_id").cast("long").alias("id"),
     )
     return keyed.groupBy("key").applyInPandasWithState(
         _dedup_fn,

@@ -116,23 +116,22 @@ def stream_from_parquet(
     spark: SparkSession,
     path: str,
     watermark: str = "1 day",
-    schema: T.StructType = EVENTS_SCHEMA,
 ) -> DataFrame:
-    """readStream over a parquet directory with explicit schema + watermark
-    (late rows beyond the watermark are dropped from stateful aggs)."""
+    """readStream over a parquet directory of events with the explicit
+    ``EVENTS_SCHEMA`` + watermark (late rows beyond the watermark are
+    dropped from stateful aggs)."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .parquet(path)
         .withWatermark("ts", watermark)
     )
 
 
-def run_stream_to_memory(
-    streaming_df: DataFrame, query_name: str, timeout_s: int = 120
-):
+def run_stream_to_memory(streaming_df: DataFrame, query_name: str):
     """Drive a streaming aggregation to completion with availableNow (all
-    currently-visible input, then stop) into an in-memory sink; returns the
-    finished query. Deterministic harness for tests/backfills."""
+    currently-visible input, then stop) into an in-memory sink, waiting up
+    to 120 s; returns the finished query. Deterministic harness for
+    tests/backfills."""
     q = (
         streaming_df.writeStream.format("memory")
         .queryName(query_name)
@@ -140,5 +139,5 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(120)
     return q

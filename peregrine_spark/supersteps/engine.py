@@ -49,23 +49,22 @@ from peregrine_spark.session import conf_override, count_event, release_checkpoi
 log = logging.getLogger(__name__)
 
 
-def auto_shuffle_partitions(
-    spark: SparkSession,
-    n_rows: int,
-    rows_per_core: int = 100_000,
-    rows_target: int = 2_000_000,
-) -> int:
+ROWS_PER_CORE = 100_000
+ROWS_TARGET = 2_000_000
+
+
+def auto_shuffle_partitions(spark: SparkSession, n_rows: int) -> int:
     """Size the shuffle for an iterative job to its data, not the session
     default.
 
     Two regimes joined smoothly:
-      * small inputs — at most one partition per ``rows_per_core`` rows (a
+      * small inputs — at most one partition per ``ROWS_PER_CORE`` rows (a
         64-task shuffle over 1e5 rows pays 64 scheduling floors to move
         kilobytes; measured 2-4x superstep slowdown at SF=0.1), capped at
         the core count;
-      * large inputs — one partition per ``rows_target`` rows (~tens of MB),
+      * large inputs — one partition per ``ROWS_TARGET`` rows (~tens of MB),
         which exceeds the core count as soon as n_rows > cores *
-        rows_target and keeps every shuffle block spill-safe at 100 TB.
+        ROWS_TARGET and keeps every shuffle block spill-safe at 100 TB.
 
     The returned count is used consistently for the state repartition AND
     ``spark.sql.shuffle.partitions`` inside the superstep loop, so the
@@ -73,8 +72,8 @@ def auto_shuffle_partitions(
     session-level setting is.
     """
     cores = spark.sparkContext.defaultParallelism
-    by_cores = min(cores, max(1, n_rows // rows_per_core))
-    return int(max(by_cores, n_rows // rows_target, 1))
+    by_cores = min(cores, max(1, n_rows // ROWS_PER_CORE))
+    return int(max(by_cores, n_rows // ROWS_TARGET, 1))
 
 
 @contextmanager

@@ -50,8 +50,8 @@ def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
     the graph (personalized PageRank / random walk with restart).
     rank_0 = tp in both cases."""
     if sources is None:
-        n = deg.count()
-        tp = F.lit(1.0 / n)
+        # no vertex: an empty state, which converges on its first superstep
+        tp = F.lit(1.0 / max(deg.count(), 1))
         return deg.select("v", "deg", tp.alias("tp"), tp.alias("rank"))
     src_df = literal_table(deg.sparkSession, ["v"], [(s,) for s in sorted(set(sources))])
     marked = deg.join(

@@ -30,6 +30,7 @@ SEED = 42
 
 # Tunables: sized so that SF=0.001 → ~1k files, matching FIXTURES.md scale knobs.
 FILES_PER_SF = 1_000_000  # n_files = SF * FILES_PER_SF
+IMPORTS_PER_FILE = 3
 LANGS = ["py", "cpp", "js", "go", "rs", "java"]
 
 
@@ -75,22 +76,20 @@ def _key_expr(fid, n_repos: int, n_dirs: int):
 def source_repo_table(
     spark: SparkSession,
     n_files: int = 1_000,
-    imports_per_file: int = 3,
-    commit_pool: int | None = None,
     sf: float | None = None,
 ) -> DataFrame:
     """Generate the deterministic source-repo table.
 
     One output row per (file, commit) — a path appears under 1..3 commits
-    (FIXTURES.md §1). ``content`` is identical across a file's commits (the
+    drawn from a pool of ``n_files // 4`` (at least 4), and imports
+    ``IMPORTS_PER_FILE`` files (FIXTURES.md §1). ``content`` is identical across a file's commits (the
     import graph is a property of the file, not the commit) apart from a
     commit-stamp line, and carries enough pseudo-source body for the
     sha256-per-row invariant to be meaningful.
     """
     if sf is not None:
         n_files = n_files_for_sf(sf)
-    if commit_pool is None:
-        commit_pool = max(4, n_files // 4)
+    commit_pool = max(4, n_files // 4)
     n_repos = max(2, n_files // 64)
     n_dirs = max(2, n_files // 32)
 
@@ -102,7 +101,7 @@ def source_repo_table(
     # and duplicates are permitted here; graph ingest drops them (mirrors the
     # reference dropping self-loops/dup edges, core/DataConverter.cc:112-119).
     import_lines = []
-    for j in range(imports_per_file):
+    for j in range(IMPORTS_PER_FILE):
         tid = _pm(fid, f"imp{j}", n_files)
         t_repo, t_path, _ = _key_expr(tid, n_repos, n_dirs)
         import_lines.append(F.concat(F.lit("import "), t_repo, F.lit(":"), t_path, F.lit("\n")))
@@ -145,8 +144,6 @@ def powerlaw_edges(
     spark: SparkSession,
     n_samples: int,
     n_vertices: int,
-    seed: int = SEED,
-    relabel: bool = True,
 ) -> DataFrame:
     """Deterministic skewed edge table with a guaranteed mega-hub — the
     adversarial input for the skew machinery (degree orientation, map-side
@@ -157,7 +154,8 @@ def powerlaw_edges(
     ≈ n_samples / ln(n_vertices) of all endpoints — at the BENCH settings
     (2M samples, 1e5 vertices) a hub of ~1e5 distinct neighbours, i.e. it
     is adjacent to essentially the whole graph. Pure column expressions
-    (no RNG state), canonicalized (loops/dups dropped) and relabelled by
+    (no RNG state; hashed under ``SEED`` as read at call time),
+    canonicalized (loops/dups dropped) and relabelled by
     descending degree — the ingest invariant the oriented triangle plan
     relies on."""
     from peregrine_spark.graph.build import edges_from_pairs
@@ -167,11 +165,9 @@ def powerlaw_edges(
     den = float(1 << 53)
 
     def u(salt: str):
-        return (F.abs(F.xxhash64("id", F.lit(salt), F.lit(seed))) % F.lit(1 << 53)) / F.lit(den)
+        return (F.abs(_h("id", salt)) % F.lit(1 << 53)) / F.lit(den)
 
     src = F.floor(F.pow(F.lit(float(n_vertices)), u("pl_a"))).cast("long")
     dst = F.floor(F.pow(F.lit(float(n_vertices)), u("pl_b"))).cast("long")
-    e = edges_from_pairs(rows.select(src.alias("a"), dst.alias("b")))
-    if relabel:
-        e, _ = relabel_by_degree(e)
-    return e
+    pairs = rows.select(src.alias("a"), dst.alias("b"))
+    return relabel_by_degree(edges_from_pairs(pairs))[0]

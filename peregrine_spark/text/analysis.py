@@ -47,15 +47,15 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-document token statistics: (doc_id, n_tokens, n_distinct_tokens,
     n_chars_text, avg_token_len)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
-        F.length(F.col(text_col)).cast("long").alias("n_chars_text"),
+        F.length(F.col("text")).cast("long").alias("n_chars_text"),
         F.round(
             F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
             / F.greatest(F.size(toks), F.lit(1)),
@@ -64,12 +64,10 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_stats_by(
-    docs: DataFrame, group_col: str, text_col: str = "text"
-) -> DataFrame:
+def token_stats_by(docs: DataFrame, group_col: str) -> DataFrame:
     """Corpus token accounting per group (e.g. per lang): map-side partial
     aggregation absorbs the per-doc fan-in before the tiny group shuffle."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return (
         docs.select(F.col(group_col), F.size(toks).cast("long").alias("n"))
         .groupBy(group_col)
@@ -85,19 +83,19 @@ def _count_matches(text: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long")
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, stopword_ratio, distinct_ratio, alpha_ratio,
     quality) — quality in [0,1], all ratios rounded to 4dp.
 
     quality = 0.25*len_score + 0.25*stopword + 0.25*distinct + 0.25*alpha
     where len_score saturates at 64 tokens. Deterministic closed form.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tok = F.size(toks).cast("long")
     n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("long")
     n_distinct = F.size(F.array_distinct(toks)).cast("long")
-    n_alpha = _count_matches(F.col(text_col), "[a-zA-Z]")
-    n_chars = F.greatest(F.length(F.col(text_col)), F.lit(1)).cast("long")
+    n_alpha = _count_matches(F.col("text"), "[a-zA-Z]")
+    n_chars = F.greatest(F.length(F.col("text")), F.lit(1)).cast("long")
     denom = F.greatest(n_tok, F.lit(1)).cast("double")
 
     len_score = F.least(n_tok.cast("double") / F.lit(64.0), F.lit(1.0))
@@ -116,10 +114,10 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, score) — argmax marker-token overlap, ties broken
     by language code ascending (deterministic)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     denom = F.greatest(F.size(toks), F.lit(1)).cast("double")
     scores = F.array(
         *[
@@ -159,8 +157,8 @@ def normalized(text: Column) -> Column:
     return F.trim(t)
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """(doc_id, fp) — md5 of the normalized text. Robust to case /
     punctuation / whitespace edits; join on fp for normalization-level
     exact dedup."""
-    return docs.select("doc_id", F.md5(normalized(F.col(text_col))).alias("fp"))
+    return docs.select("doc_id", F.md5(normalized(F.col("text"))).alias("fp"))

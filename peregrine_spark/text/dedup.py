@@ -28,29 +28,25 @@ from pyspark.sql import functions as F
 from peregrine_spark.text.analysis import tokens
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash: one row per distinct text —
     (keep_id = min id, n_copies). Hash-groupBy: the map-side partial agg
     means each executor ships one row per distinct text, not per doc."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
+        docs.select("doc_id", F.md5("text").alias("_h"))
         .groupBy("_h")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .select("keep_id", "n_copies")
     )
 
 
-def shingle_table(
-    docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def shingle_table(docs: DataFrame, k: int = 3) -> DataFrame:
     """(id, sh) — distinct k-token shingles per document, via posexplode of
     the token array (pure column expressions)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     # guard: F.sequence(1, stop) DESCENDS when stop < 1 — short docs must
     # yield an empty shingle list, not a bogus [1, 0] index sequence
@@ -59,7 +55,7 @@ def shingle_table(
         lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
     )).otherwise(F.array().cast("array<string>"))
     return (
-        docs.select(F.col(id_col).alias("id"), F.explode(sh).alias("sh"))
+        docs.select(F.col("doc_id").alias("id"), F.explode(sh).alias("sh"))
         .dropDuplicates(["id", "sh"])
     )
 
@@ -128,8 +124,6 @@ def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
     """Exhaustive n-gram Jaccard near-dup pairs: (a, b, jaccard) with
@@ -141,20 +135,19 @@ def jaccard_pairs(
     occurring in more than max_df docs before the join (recall then exact
     only for pairs sharing at least one rare shingle — the standard
     frequent-shingle guard at scale)."""
-    sh = shingle_table(docs, k, text_col, id_col)
+    sh = shingle_table(docs, k)
     if max_df is not None:
         rare = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
         sh = sh.join(rare.where(F.col("_df") <= max_df).select("sh"), "sh")
     return _jaccard_at_least(sh, threshold)
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 64, seed: int = 7
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 64) -> DataFrame:
     """(id, mh_0..mh_{H-1}) — MinHash signature per doc: one groupBy with H
-    ``min(xxhash64(sh, i))`` aggregates (single pass, map-side combined)."""
+    ``min(xxhash64(sh, 7, i))`` aggregates (single pass, map-side
+    combined)."""
     aggs = [
-        F.min(F.xxhash64("sh", F.lit(seed), F.lit(i))).alias(f"mh_{i}")
+        F.min(F.xxhash64("sh", F.lit(7), F.lit(i))).alias(f"mh_{i}")
         for i in range(num_hashes)
     ]
     return sh.groupBy("id").agg(*aggs)
@@ -166,8 +159,6 @@ def minhash_lsh_pairs(
     k: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, exact-Jaccard verified.
@@ -180,7 +171,7 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sh = shingle_table(docs, k, text_col, id_col).persist()
+    sh = shingle_table(docs, k).persist()
     sig = minhash_signatures(sh, num_hashes)
     cand = band_pairs(
         sig,
@@ -217,34 +208,28 @@ def band_bits(col: str, b: int, width: int) -> Column:
     return F.shiftrightunsigned(F.shiftleft(col, 64 - (b + 1) * width), 64 - width)
 
 
-def simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 11,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
+def simhash(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """(id, simhash) — SimHash of the token multiset: per bit, the signed
     sum of token-hash bits; bit set iff the sum is positive. One explode +
     one groupBy with one conditional-sum aggregate per bit.
 
     ``hash_fn``:
-    * ``"xxhash64"`` (default) — 64-bit JVM hash, whole-stage codegen; the
-      scale path.
+    * ``"xxhash64"`` (default) — 64-bit JVM hash (seed 11), whole-stage
+      codegen; the scale path.
     * ``"md5_32"`` — 32-bit hash from the first 8 hex chars of md5(token).
       Both md5 and hex→int are expressible in ANSI SQL, so this variant is
       bit-for-bit reproducible in DuckDB — it backs the value-oracled entry
-      query (``seed`` is ignored; md5 is unseeded in both engines).
+      query (md5 is unseeded in both engines).
     """
     n_bits = SIMHASH_BITS[hash_fn]
     tok = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.col(text_col))).alias("t"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens(F.col("text"))).alias("t"),
     )
     if hash_fn == "md5_32":
         h = F.conv(F.substring(F.md5("t"), 1, 8), 16, 10).cast("long")
     else:
-        h = F.xxhash64("t", F.lit(seed))
+        h = F.xxhash64("t", F.lit(11))
     tok = tok.withColumn("h", h)
     bit_sums = [
         F.sum(
@@ -266,8 +251,6 @@ def simhash(
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bands: int = 4,
     max_bucket: int = 10_000,
     hash_fn: str = "xxhash64",
@@ -284,7 +267,7 @@ def simhash_pairs(
     if not 1 <= bands <= n_bits:
         raise ValueError(f"bands must be in 1..{n_bits}: each band needs a bit")
     width = n_bits // bands
-    sig = simhash(docs, text_col, id_col, hash_fn=hash_fn)
+    sig = simhash(docs, hash_fn)
     cand = band_pairs(
         sig, [band_bits("simhash", b, width) for b in range(bands)], max_bucket, "simhash"
     )

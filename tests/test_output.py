@@ -29,15 +29,21 @@ def test_output_with_id_remap(spark, tmp_path):
     id_dict = spark.createDataFrame(
         [(1, "a:x"), (2, "b:y"), (3, "c:z")], "v long, key string"
     )
-    out = output(
-        e,
-        PatternGenerator.clique(3),
-        str(tmp_path / "remap"),
-        id_dict=id_dict,
-        fmt="parquet",
-    )
-    rows = {tuple(r) for r in out.collect()}
-    assert rows == {("a:x", "b:y", "c:z")}
+    # a broadcast dictionary (the default) or shuffle joins: the same rows
+    for broadcast_dict in (True, False):
+        dest = tmp_path / f"remap_{broadcast_dict}"
+        out = output(
+            e,
+            PatternGenerator.clique(3),
+            str(dest),
+            id_dict=id_dict,
+            fmt="parquet",
+            broadcast_dict=broadcast_dict,
+        )
+        rows = {tuple(r) for r in out.collect()}
+        assert rows == {("a:x", "b:y", "c:z")}
+        [written] = list(dest.iterdir())
+        assert {tuple(r) for r in spark.read.parquet(str(written)).collect()} == rows
 
 
 # --- packed-binary sink (the reference's output<BIN>, OutputManager.hh:80-91)

@@ -29,13 +29,14 @@ def two_cliques_bridge():
 def test_pagerank_matches_oracle(spark):
     pairs = er_graph(40, 0.15, seed=31)
     e = edges_df(spark, pairs)
-    res = pagerank(e, max_iters=15, tol=0.0)
-    got = {r["v"]: r["rank"] for r in res.state.collect()}
-    truth = brute_pagerank(pairs, iters=15)
-    assert set(got) == set(truth)
-    for v in truth:
-        assert abs(got[v] - truth[v]) < 1e-6, v
-    assert abs(sum(got.values()) - 1.0) < 1e-6
+    for damping in (0.85, 0.5):
+        res = pagerank(e, damping=damping, max_iters=15, tol=0.0)
+        got = {r["v"]: r["rank"] for r in res.state.collect()}
+        truth = brute_pagerank(pairs, damping=damping, iters=15)
+        assert set(got) == set(truth)
+        for v in truth:
+            assert abs(got[v] - truth[v]) < 1e-6, (damping, v)
+        assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
 def test_pagerank_uniform_on_regular_graphs(spark):
@@ -93,6 +94,20 @@ def test_label_propagation_matches_oracle(spark):
     got = dict((r["v"], r["label"]) for r in res.state.collect())
     truth = brute_lp(pairs, res.iterations)
     assert got == truth
+
+
+def test_label_propagation_from_seeds(spark):
+    """K4 on 1..4 plus a pendant 5 on 4, with 1, 2 and 3 seeded label 9
+    (4 and 5 start at their own ids). Worked by hand: step 1 gives 4 the
+    label 9 (9, 9, 9 against 5) and 5 the label 4; step 2 gives 5 the
+    label 9; step 3 changes nothing."""
+    pairs = list(itertools.combinations(range(1, 5), 2)) + [(4, 5)]
+    seeds = spark.createDataFrame([(1, 9), (2, 9), (3, 9)], "v long, label long")
+    res = label_propagation(edges_df(spark, pairs), seeds=seeds, max_iters=10)
+    assert res.converged and res.iterations == 3
+    assert {r["v"]: r["label"] for r in res.state.collect()} == dict.fromkeys(
+        range(1, 6), 9
+    )
 
 
 def test_personalized_pagerank_matches_oracle(spark):
@@ -543,3 +558,58 @@ def test_resume_refuses_incompatible_checkpoint(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="v bigint, dist bigint, new boolean"):
         bfs_hops(e, [verts[0]], engine=eng, resume=True)
+
+
+@pytest.mark.parametrize("pairs", [[], [(1, 2), (1, 3), (1, 4)]], ids=["empty", "star3"])
+def test_graph_operators_on_degenerate_inputs(spark, pairs):
+    """An empty edge table and a 3-leaf star: each count equals the oracle
+    (0 where nothing matches), each vertex program returns the oracle's
+    state (empty on the empty table). A fast-path sum over no rows (an
+    empty table, or no wedge pair on a star) must read 0, not null, and
+    PageRank must not divide by a vertex count of 0."""
+    from peregrine_spark.operators.match import (
+        count,
+        count_incremental,
+        count_motifs,
+        existence,
+    )
+    from peregrine_spark.operators.triangles import local_clustering, triangle_count
+    from peregrine_spark.patterns.small_graph import PatternGenerator as PG
+
+    from tests.conftest import P1_DIAMOND
+    from tests.oracle import brute_bfs, brute_count, brute_ktruss
+
+    e = edges_df(spark, pairs)
+    shapes = [PG.clique(3), PG.clique(4), PG.star(3), PG.chain(4), PG.cycle(4), P1_DIAMOND]
+    assert [c for _, c in count(e, shapes)] == [brute_count(pairs, p) for p in shapes]
+    for k in (3, 4):
+        for p, c in count_motifs(e, k):
+            assert c == brute_count(pairs, p), (k, p.to_string())
+    assert triangle_count(e).collect()[0]["triangles"] == 0
+    verts = sorted({v for pair in pairs for v in pair})
+    deg = {v: sum(v in pair for pair in pairs) for v in verts}
+    assert sorted(map(tuple, local_clustering(e).collect())) == [
+        (v, 0, deg[v], 0.0) for v in verts
+    ]
+    assert kcore(e, 2).collect() == []
+    assert set(map(tuple, ktruss(e, 3).collect())) == brute_ktruss(pairs, 3)
+    for p in (PG.clique(3), PG.star(3)):
+        assert existence(e, p) == (brute_count(pairs, p) > 0)
+        assert count_incremental(e, p).value == brute_count(pairs, p)
+
+    res = pagerank(e, max_iters=15, tol=0.0)
+    got = {r["v"]: r["rank"] for r in res.state.collect()}
+    truth = brute_pagerank(pairs, iters=15)
+    assert set(got) == set(truth)
+    assert all(abs(got[v] - truth[v]) < 1e-6 for v in truth)
+    if not pairs:
+        assert res.converged
+    for strategy in ("minprop", "contraction"):
+        cc = connected_components(e, strategy=strategy)
+        assert dict(map(tuple, cc.state.collect())) == brute_components(pairs), strategy
+    hops = bfs_hops(e, [1]).state.collect()
+    assert {r["v"]: r["dist"] for r in hops} == {
+        v: brute_bfs(pairs, [1]).get(v) for v in verts
+    }
+    lp = label_propagation(e, max_iters=4)
+    assert dict(map(tuple, lp.state.collect())) == brute_lp(pairs, lp.iterations)

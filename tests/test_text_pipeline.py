@@ -292,11 +292,24 @@ def test_binary_feature_plumbing(docs):
         assert by_id[i]["width"] >= 16 and by_id[i]["height"] >= 16
 
 
-def test_real_decoder_is_stubbed(docs):
-    from peregrine_spark.multimodal.assets import decode_real
+def test_registered_decoder_reaches_workers(docs, monkeypatch):
+    """A decoder registered on the driver decodes in the Python workers,
+    which never ran the registration: width, height and feature are its
+    output, not the fake's."""
+    from peregrine_spark.multimodal import assets
 
-    with pytest.raises(NotImplementedError):
-        decode_real(b"bytes", "image")
+    monkeypatch.setattr(assets, "_DECODER", None)  # restored after the test
+
+    def decode(payload: bytes, kind: str):
+        return len(payload), 7, np.array([float(len(payload)), 0.5])
+
+    assets.register_decoder(decode)
+    by_id = {r["asset_id"]: r for r in extract_features(attach_payload(docs)).collect()}
+    assert set(by_id) == {i for i, _, _ in DOCS}
+    for i, text, _ in DOCS:
+        n = len(text.encode())
+        assert (by_id[i]["width"], by_id[i]["height"]) == (n, 7)
+        assert by_id[i]["feature"] == [float(n), 0.5]
 
 
 def test_frame_sample_plan(docs):
